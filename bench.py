@@ -685,87 +685,6 @@ def bench_scale_skew(spark, registry, uniform_dir, docs, ev, emb, reps) -> dict:
         q = registry[name]
         uniform[name] = min_of_runs(lambda: q.spark(spark, uniform_dir).count())
         skewed[name] = min_of_runs(lambda: q.spark(spark, out).count())
-    # round 12: time the chunked hot-key ESCAPE on the same planted-hot-
-    # user fixture next to the slot's one-pass default, so the escape
-    # carries a per-round number. At THIS fixture's hot-user size (~75k
-    # rows) the one-pass window is still cheap and the escape's extra
-    # session-row exchange costs more (measured 1.50 vs 1.04 s) — the
-    # crossover is in the millions (3M hot events: 1.6 vs 5.7 s, see
-    # tests/test_skew_escapes.py provenance in COVERAGE) — so this
-    # number documents the default's headroom, not a regression.
-    from document_clustering_with_hadoop_mapreduce_spark.operators.events import (
-        sessionize_chunked,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.sources.tables import (
-        load_table,
-    )
-
-    # through load_table like the slot path: the fixture's ts column is
-    # TIMESTAMP_NTZ on disk and the loader owns the session-tz cast
-    # (a raw parquet read fails unix_micros with a type mismatch)
-    ev_hot = load_table(spark, out, "events")
-    escape_hot = min_of_runs(lambda: sessionize_chunked(ev_hot).count())
-    # round 13 (VERDICT r12 #2): the auto redirect's DECISION on record —
-    # the probe must NOT fire at fixture scale, and must fire on a key
-    # decisively past the threshold. MEASUREMENT-BUG NOTE (optimization
-    # round 1): the original block probed only the skew fixture's hot
-    # user, assuming ~750k rows (150k base events x 10 reps / 2); the
-    # regenerated round-13 data has 100k base events, putting that key at
-    # exactly 500k = HOT_KEY_ROWS_THRESHOLD, so fires_hot flipped on
-    # sampling noise (recorded est 498,130). The fixture keys below keep
-    # their original meanings; the added auto_* keys probe a DERIVED
-    # frame with 3/4 of events on one user (~750k rows at this SF — the
-    # size the original comment intended) so the firing decision is on
-    # record away from the threshold boundary. The sessionize(mode=
-    # 'auto') timings are probe-WARM (the explicit probes populate the
-    # plan-hash cache for the same frames), i.e. they measure the chosen
-    # plan, not the probe; the probe's own cost is ~a 10% sampled scan
-    # by construction.
-    from document_clustering_with_hadoop_mapreduce_spark.operators.events import (
-        sessionize,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.operators.skew import (
-        HOT_KEY_ROWS_THRESHOLD,
-        sampled_max_key_rows,
-    )
-
-    ev_sf = load_table(spark, SF_DIR, "events")
-    ev_auto = ev_hot.withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 4 != 3, F.lit(1).cast("long")).otherwise(
-            F.col("user_id")
-        ),
-    )
-    probe_hot = sampled_max_key_rows(ev_hot, ["user_id"])
-    probe_auto = sampled_max_key_rows(ev_auto, ["user_id"])
-    probe_sf = sampled_max_key_rows(ev_sf, ["user_id"])
-    # The fixture's hot key sits AT the 500k threshold (see the
-    # measurement-bug note above): fires_hot and the auto_hot timing are
-    # boundary-noise records — the seeded probe is deterministic on fixed
-    # data/partitioning, but any layout change can flip them, so they are
-    # NOT comparable round-over-round; hot_is_boundary_key flags this and
-    # sessionize_auto_hot_mode records which plan was actually timed
-    # (the probe cache guarantees the timed mode == the recorded probe).
-    auto_block = {
-        "threshold": HOT_KEY_ROWS_THRESHOLD,
-        "hot_max_user_rows_est": probe_hot,
-        "fires_hot": probe_hot > HOT_KEY_ROWS_THRESHOLD,
-        "hot_is_boundary_key": True,
-        "sessionize_auto_hot_mode": (
-            "chunked" if probe_hot > HOT_KEY_ROWS_THRESHOLD else "onepass"
-        ),
-        "auto_hot_max_user_rows_est": probe_auto,
-        "fires_auto_hot": probe_auto > HOT_KEY_ROWS_THRESHOLD,
-        "sf_max_user_rows_est": probe_sf,
-        "fires_sf": probe_sf > HOT_KEY_ROWS_THRESHOLD,
-        "sessionize_auto_hot_sec": min_of_runs(
-            lambda: sessionize(ev_hot, mode="auto").count()
-        ),
-        "sessionize_auto_redirected_sec": min_of_runs(
-            lambda: sessionize(ev_auto, mode="auto").count()
-        ),
-    }
-    relwin = bench_relational_window_skew(spark, out)
     shutil.rmtree(out, ignore_errors=True)
     return {
         "skew_build_sec": build_sec,
@@ -774,95 +693,6 @@ def bench_scale_skew(spark, registry, uniform_dir, docs, ev, emb, reps) -> dict:
         "skew_ratio": {
             n: round(skewed[n] / uniform[n], 2) for n in skew_q
         },
-        "sessionize_chunked_hot_10x": escape_hot,
-        "auto_redirect": auto_block,
-        **relwin,
-    }
-
-
-def bench_relational_window_skew(spark, out: str) -> dict:
-    """Round 13 (VERDICT r12 #1): planted hot-CUSTOMER twin for the two
-    per-customer windows (``customer_recent_orders``, ``rolling_30d_
-    spend``) and their chunked escapes. Orders ships unscaled in the 10x
-    dir (it's a headline dimension elsewhere), so this block builds its
-    own 10x pair: uniform (offset custkeys) and hot (50% of all rows
-    re-keyed to ONE customer — the events pattern).
-
-    Timing action: a full-row hash aggregate, NOT count() — count() lets
-    Catalyst PRUNE the cumsum/RANGE window columns (only row_number
-    survives the rn filter), which silently under-times exactly the
-    operator under test. (The headline slot keeps count() for
-    round-over-round comparability; this block measures the windows
-    themselves.)
-    """
-    from pyspark.sql import functions as F
-
-    from document_clustering_with_hadoop_mapreduce_spark.operators.relational import (
-        customer_recent_orders,
-        customer_recent_orders_chunked,
-        rolling_30d_spend,
-        rolling_30d_spend_chunked,
-    )
-
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    reps = spark.range(10).select(F.col("id").alias("rep"))
-    rest = [c for c in orders.columns if c not in ("o_orderkey", "o_custkey")]
-    (
-        orders.crossJoin(reps)
-        .select(
-            (F.col("o_orderkey") + F.col("rep") * 100_000_000).alias("o_orderkey"),
-            (F.col("o_custkey") + F.col("rep") * 10_000_000).alias("o_custkey"),
-            *rest,
-        )
-        .write.mode("overwrite")
-        .parquet(f"{out}/orders_uniform.parquet")
-    )
-    (
-        orders.crossJoin(reps)
-        .select(
-            (F.col("o_orderkey") + F.col("rep") * 100_000_000).alias("o_orderkey"),
-            F.when(F.col("o_orderkey") % 2 == 0, F.lit(1).cast("long"))
-            .otherwise(F.col("o_custkey") + F.col("rep") * 10_000_000)
-            .alias("o_custkey"),
-            *rest,
-        )
-        .write.mode("overwrite")
-        .parquet(f"{out}/orders_hot.parquet")
-    )
-    o_uni = spark.read.parquet(f"{out}/orders_uniform.parquet")
-    o_hot = spark.read.parquet(f"{out}/orders_hot.parquet")
-
-    def _force(df):
-        # ANSI-safe: mod the hashes before the overflow-checked long sum
-        return df.agg(
-            F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000)))
-        ).collect()
-
-    builders = {
-        "customer_recent_orders": lambda o: customer_recent_orders(cust, o),
-        "rolling_30d_spend": rolling_30d_spend,
-    }
-    escapes = {
-        "customer_recent_orders": lambda o: customer_recent_orders_chunked(
-            cust, o, chunk="month"
-        ),
-        "rolling_30d_spend": lambda o: rolling_30d_spend_chunked(o, 30),
-    }
-    uniform = {
-        n: min_of_runs(lambda b=b: _force(b(o_uni))) for n, b in builders.items()
-    }
-    hot = {n: min_of_runs(lambda b=b: _force(b(o_hot))) for n, b in builders.items()}
-    escape_hot = {
-        n: min_of_runs(lambda b=b: _force(b(o_hot))) for n, b in escapes.items()
-    }
-    return {
-        "relwin_uniform_10x": uniform,
-        "relwin_hot_10x": hot,
-        "relwin_ratio": {
-            n: round(hot[n] / uniform[n], 2) for n in builders if uniform[n]
-        },
-        "relwin_escape_hot_10x": escape_hot,
     }
 
 

@@ -324,8 +324,11 @@ def sparse_lloyd(
             # scalar and the new-centroid materialization used to be two
             # sequential jobs (agg collect + count). Unioning the WCSS
             # aggregate with a 1-row count over new_cents computes BOTH in
-            # one job — the assignment cache populates once and feeds both
-            # branches, new_cents' cache fills as its branch evaluates,
+            # one job — in local mode the assignment cache populates once
+            # and feeds both branches (on a multi-executor cluster the two
+            # union branches can compute sparse_assign partitions twice,
+            # before either has cached them); new_cents' cache fills as
+            # its branch evaluates,
             # and the WCSS value that lands in the trace is produced by
             # the IDENTICAL aggregate sub-plan as before (bit-equal).
             rows = (

@@ -34,40 +34,12 @@ def events_hourly(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = SESSION_GAP_MINUTES,
-    mode: str = "onepass",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
     """Gaps-and-islands sessionization: a session breaks after a
     ``gap_minutes`` silence. Per-session stats, exact micros arithmetic.
 
-    Hot-key bound: the per-user window sorts ALL of a user's events in
-    one task. For corpora with viral users, ``sessionize_chunked`` is the
-    row-identical escape that bounds the task at events-per-(user, chunk)
-    (one extra session-row exchange — measured +40% at fixture scale with
-    no hot key, 3.5x faster on a planted 3M-event user).
-
-    ``mode``: 'onepass' (default), 'chunked' (the escape), or 'auto' —
-    sample user occupancy (``skew.sampled_max_key_rows``, one ~1/10-scan
-    probe at construction) and take the escape when the hottest user
-    exceeds the measured ``HOT_KEY_ROWS_THRESHOLD`` crossover
-    (one-pass wins 1.35x at 3e5 hot events, loses 1.14x at 1e6 and
-    2.08x at 3e6 — the r13 sweep)."""
-    if mode not in ("onepass", "chunked", "auto"):
-        raise ValueError(
-            f"mode must be 'onepass', 'chunked', or 'auto', got {mode!r}"
-        )
-    if mode == "auto":
-        from .skew import HOT_KEY_ROWS_THRESHOLD, sampled_max_key_rows
-
-        mode = (
-            "chunked"
-            if sampled_max_key_rows(events, ["user_id"]) > HOT_KEY_ROWS_THRESHOLD
-            else "onepass"
-        )
-    if mode == "chunked":
-        return sessionize_chunked(events, gap_minutes)
+    Hot-key bound: the per-user window sorts all of a user's events in
+    one task; AQE cannot split a window partition."""
     gap_us = gap_minutes * 60 * 1_000_000
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -84,98 +56,6 @@ def sessionize(
             F.count(F.lit(1)).alias("n_events"),
             F.round((F.max(us) - F.min(us)) / 1_000_000.0, 6).alias("duration_sec"),
             dsum(F.col("value"), 4).alias("sum_value"),
-        )
-    )
-
-
-def sessionize_chunked(
-    events: DataFrame,
-    gap_minutes: int = SESSION_GAP_MINUTES,
-    chunk: str = "day",
-) -> DataFrame:
-    """``sessionize`` with the hot-user task BOUNDED: row-identical output
-    (pinned in tests), computed as per-(user, chunk) local sessionization
-    plus an exact boundary merge.
-
-    The plain gaps-and-islands plan sorts EVERY event of a user in one
-    task — a viral user (the planted case in bench's skew block) grows
-    that task linearly with their events, unboundedly at 100 TB. Here the
-    window partitions on (user, date_trunc(chunk, ts)), so the sort task
-    is bounded by one user's events per chunk (pick ``chunk`` = 'hour'
-    for hotter keys), and sessions that cross chunk boundaries are merged
-    by a SECOND gaps-and-islands over the per-user SESSION rows.
-
-    Exactness argument: the global break set is {events whose gap from
-    their predecessor exceeds the threshold}. Within-chunk passes compute
-    exactly those breaks whose predecessor shares the chunk; a
-    chunk-first event's predecessor is the last event of the previous
-    chunk = the previous local session's max ts, which is precisely what
-    the merge window compares. Two local sessions inside one chunk never
-    re-merge (their gap exceeded the threshold by construction), and
-    multi-chunk-spanning sessions chain through the islands sum. Stats
-    compose exactly: counts add, min/max nest, and the value sums stay in
-    DECIMAL until one final cast, so the merged sums are bit-equal to the
-    one-pass ``dsum``.
-
-    Cost: one extra (bounded) exchange over session rows vs the one-pass
-    form. The merge window's width is the user's SESSION count — tiny for
-    the dense viral user this exists for; for sparse users whose every
-    event is its own session it degenerates to the one-pass width, which
-    is exactly the regime where the one-pass form was already fine.
-
-    Crossover (measured, round 13 — the constant behind mode='auto'):
-    one-pass is ahead 1.35x at 3e5 events on the hottest user, behind
-    1.14x at 1e6 and 2.08x at 3e6 on local[32]; the shared
-    ``skew.HOT_KEY_ROWS_THRESHOLD`` (500k) sits mid-band. The sort-task
-    bound this form buys is events-per-(user, chunk): a 10-min-cadence
-    user is ~144 events/day-chunk, ~6/hour-chunk — pick ``chunk`` so the
-    hottest user's densest chunk stays comfortably inside one task's
-    memory (the fixture pins day-chunk width <= 145 for that cadence).
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
-    us = F.unix_micros(F.col("ts"))
-    ev = events.withColumn("__chunk", F.date_trunc(chunk, F.col("ts")))
-    wc = Window.partitionBy("user_id", "__chunk").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    wc_run = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = (
-        ev.withColumn(
-            "__new",
-            F.when(us - F.lag(us, 1).over(wc) > gap_us, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int"),
-        )
-        .withColumn("__lidx", F.sum("__new").over(wc_run))
-        .groupBy("user_id", "__chunk", "__lidx")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(us).alias("__min_us"),
-            F.max(us).alias("__max_us"),
-            # DECIMAL partial sum, cast deferred to the merged session so
-            # the final value is bit-equal to the one-pass dsum
-            F.sum(F.col("value").cast("decimal(28,6)")).alias("__dsum"),
-        )
-    )
-    # merge pass over SESSION rows: sessions of one user are disjoint in
-    # time, so (min_us, __chunk) is a total order; the break rule is the
-    # SAME strict > threshold the event-level pass uses
-    ws = Window.partitionBy("user_id").orderBy(F.col("__min_us").asc(), F.col("__chunk").asc())
-    ws_run = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    merged = local.withColumn(
-        "__new2",
-        F.when(F.col("__min_us") - F.lag("__max_us", 1).over(ws) > gap_us, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int"),
-    ).withColumn("session_idx", F.sum("__new2").over(ws_run))
-    return (
-        merged.groupBy("user_id", "session_idx")
-        .agg(
-            F.sum("__n").cast("long").alias("n_events"),
-            F.round((F.max("__max_us") - F.min("__min_us")) / 1_000_000.0, 6).alias(
-                "duration_sec"
-            ),
-            F.round(F.sum("__dsum").cast("double"), 4).alias("sum_value"),
         )
     )
 

@@ -116,43 +116,15 @@ def repeat_customers(customer: DataFrame, orders: DataFrame, min_orders: int = 5
     )
 
 
-def customer_recent_orders(
-    customer: DataFrame, orders: DataFrame, k: int = 3, mode: str = "onepass"
-) -> DataFrame:
+def customer_recent_orders(customer: DataFrame, orders: DataFrame, k: int = 3) -> DataFrame:
     """Window: each customer's k most recent orders with running spend.
 
     The cumulative sum runs over DECIMAL casts (house float discipline):
-    exact, hence order-independent — which also makes the chunked hot-key
-    escape (``customer_recent_orders_chunked``) bit-equal by construction
-    (decimal adds are associative; a double cumsum's prefix+local split
-    would drift past round-2 exactly for the huge-history customers the
-    escape exists for).
+    exact, hence order-independent.
 
-    Hot-key bound: BOTH windows buffer every order of a customer in one
-    task and AQE cannot split a window partition — the same class as
-    ``sessionize``/``filter_min_corpus_freq``. Orders-per-customer is
-    bounded in most real schemas, but for power-law shapes (a marketplace
-    aggregator account) ``customer_recent_orders_chunked`` bounds the
-    task at orders-per-(customer, chunk).
-
-    ``mode``: 'onepass' (default), 'chunked', or 'auto' — sample customer
-    occupancy (``skew.sampled_max_key_rows``) and take the chunked
-    escape past the measured ``HOT_KEY_ROWS_THRESHOLD`` crossover.
+    Hot-key bound: the window sorts all of a customer's orders in one
+    task; AQE cannot split a window partition.
     """
-    if mode not in ("onepass", "chunked", "auto"):
-        raise ValueError(
-            f"mode must be 'onepass', 'chunked', or 'auto', got {mode!r}"
-        )
-    if mode == "auto":
-        from .skew import HOT_KEY_ROWS_THRESHOLD, sampled_max_key_rows
-
-        mode = (
-            "chunked"
-            if sampled_max_key_rows(orders, ["o_custkey"]) > HOT_KEY_ROWS_THRESHOLD
-            else "onepass"
-        )
-    if mode == "chunked":
-        return customer_recent_orders_chunked(customer, orders, k)
     # ONE sort, not two: (o_orderdate, o_orderkey) is unique per row, so
     # the recency rank over the DESC ordering equals n - asc_rank + 1 —
     # the count(*) window has no required ordering and the asc row_number
@@ -174,107 +146,6 @@ def customer_recent_orders(
         .withColumn(
             "rn",
             (F.count(F.lit(1)).over(w_all) - F.row_number().over(w_asc) + 1).cast("int"),
-        )
-        .filter(F.col("rn") <= k)
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .select("c_custkey", "c_name", "o_orderkey", "rn", "running_spend")
-    )
-
-
-def customer_recent_orders_chunked(
-    customer: DataFrame, orders: DataFrame, k: int = 3, chunk: str = "month"
-) -> DataFrame:
-    """``customer_recent_orders`` with the hot-customer task BOUNDED:
-    row-identical output (pinned in tests), computed per (customer,
-    date_trunc(chunk, orderdate)) plus an exact prefix merge — the same
-    pattern as ``events.sessionize_chunked``.
-
-    The one-pass form sorts EVERY order of a customer in one task (twice:
-    cumsum asc + row_number desc). Here both local passes partition on
-    (custkey, chunk), so the sort task is bounded by one customer's
-    orders per chunk; the cross-chunk state is carried by a per-(cust,
-    chunk) SUMMARY frame (exclusive decimal prefix sum + exclusive
-    row-count prefix + customer total), which is calendar x customer
-    sized, not order sized.
-
-    Exactness: the running spend is an exact DECIMAL sum, so prefix +
-    local-cumsum equals the one-pass cumsum bit-for-bit (associativity);
-    the global recency rank of a row with local ascending rank ``lrn``
-    is ``tot_n - (prefix_n + lrn) + 1`` — pure integer arithmetic. A row
-    in the global top-k most recent is necessarily in its own chunk's
-    top-k (fewer than k rows are more recent anywhere, a fortiori in its
-    chunk), so filtering to per-chunk top-k candidates loses nothing and
-    bounds everything downstream at k rows per (cust, chunk).
-
-    JOIN-FREE since round 14 (the r13 form paid a second orders scan +
-    a partial-agg exchange for a per-chunk summary, then joined it back —
-    the escape LOST to the one-pass window until a key carried millions
-    of rows): every chunk's LAST row (``lrn == nc``) is itself a top-k
-    candidate (``nc - lrn = 0 < k``) and already carries the chunk total
-    (``run`` at the last row = the chunk's exact decimal sum) and the
-    chunk count (``nc``) — so the candidate frame contains the whole
-    summary. The cross-chunk prefix state is a SECOND window over the
-    k-bounded candidate rows, partitioned on custkey, ordered by
-    (chunk, lrn): chunk-last contributions accumulate in order (the last
-    row has the chunk-max lrn, so it sorts after every same-chunk
-    candidate and its contribution never leaks into same-chunk
-    prefixes); subtracting a row's OWN contribution yields the strict
-    predecessor-chunk prefix. One scan, ONE corpus-scale exchange (same
-    as the one-pass form), plus one k-per-(cust,chunk)-bounded exchange.
-
-    Cost vs one-pass: the bounded second exchange only; the sort task
-    shrinks from one customer's whole history to one (customer, chunk).
-    """
-    price_dec = F.col("o_totalprice").cast("decimal(28,6)")
-    ords = orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        price_dec.alias("__p"),
-        F.date_trunc(chunk, F.col("o_orderdate").cast("timestamp")).alias("__chunk"),
-    )
-    wc = Window.partitionBy("o_custkey", "__chunk").orderBy(
-        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
-    )
-    wc_run = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wc_all = Window.partitionBy("o_custkey", "__chunk")
-    local = (
-        ords.withColumn("__lrn", F.row_number().over(wc))
-        .withColumn("__run", F.sum("__p").over(wc_run))
-        .withColumn("__nc", F.count(F.lit(1)).over(wc_all))
-    )
-    # per-chunk top-k most recent = the k largest ascending ranks; this
-    # set necessarily includes every chunk's last row (nc - lrn = 0 < k),
-    # the summary carrier
-    is_last = F.col("__lrn") == F.col("__nc")
-    cands = local.filter(F.col("__nc") - F.col("__lrn") < k).select(
-        "o_custkey",
-        "o_orderkey",
-        "__lrn",
-        "__run",
-        # chunk-summary contributions, nonzero only on chunk-last rows
-        F.when(is_last, F.col("__run"))
-        .otherwise(F.lit(0).cast("decimal(38,6)"))
-        .alias("__cp"),
-        F.when(is_last, F.col("__nc")).otherwise(F.lit(0)).alias("__cn"),
-        "__chunk",
-    )
-    wp = Window.partitionBy("o_custkey").orderBy(
-        F.col("__chunk").asc(), F.col("__lrn").asc()
-    )
-    wp_cum = wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wp_all = Window.partitionBy("o_custkey")
-    # strict predecessor-chunk prefixes: cumulative contribution minus own
-    pfx_p = F.sum("__cp").over(wp_cum) - F.col("__cp")
-    pfx_n = F.sum("__cn").over(wp_cum) - F.col("__cn")
-    tot_n = F.sum("__cn").over(wp_all)
-    return (
-        cands.withColumn(
-            "rn", (tot_n - (pfx_n + F.col("__lrn")) + 1).cast("int")
-        )
-        .withColumn(
-            "running_spend",
-            F.round((pfx_p + F.col("__run")).cast("double"), 2),
         )
         .filter(F.col("rn") <= k)
         .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
@@ -358,33 +229,13 @@ def asof_last_purchase(events: DataFrame) -> DataFrame:
     )
 
 
-def rolling_30d_spend(orders: DataFrame, mode: str = "onepass") -> DataFrame:
+def rolling_30d_spend(orders: DataFrame) -> DataFrame:
     """Time-RANGE window: each order with the customer's trailing-30-day
     spend (inclusive). RANGE frames bound by event-time, not row count —
     the shape behind sliding feature windows; one exchange on custkey.
 
     Hot-key bound: the RANGE window buffers every order of a customer in
-    one task (same unsplittable-window class as ``sessionize``);
-    ``rolling_30d_spend_chunked`` bounds the task at two time-chunks of
-    one customer's orders, row-identical.
-
-    ``mode``: 'onepass' (default), 'chunked', or 'auto' — sample customer
-    occupancy (``skew.sampled_max_key_rows``) and take the chunked
-    escape past the measured ``HOT_KEY_ROWS_THRESHOLD`` crossover."""
-    if mode not in ("onepass", "chunked", "auto"):
-        raise ValueError(
-            f"mode must be 'onepass', 'chunked', or 'auto', got {mode!r}"
-        )
-    if mode == "auto":
-        from .skew import HOT_KEY_ROWS_THRESHOLD, sampled_max_key_rows
-
-        mode = (
-            "chunked"
-            if sampled_max_key_rows(orders, ["o_custkey"]) > HOT_KEY_ROWS_THRESHOLD
-            else "onepass"
-        )
-    if mode == "chunked":
-        return rolling_30d_spend_chunked(orders)
+    one task; AQE cannot split a window partition."""
     w = (
         Window.partitionBy("o_custkey")
         # NTZ -> epoch seconds (session tz is pinned to UTC) for the RANGE
@@ -398,64 +249,4 @@ def rolling_30d_spend(orders: DataFrame, mode: str = "onepass") -> DataFrame:
         F.round(
             F.sum(F.col("o_totalprice").cast("decimal(28,6)")).over(w).cast("double"), 2
         ).alias("spend_30d"),
-    )
-
-
-def rolling_30d_spend_chunked(
-    orders: DataFrame, chunk_days: int = 30
-) -> DataFrame:
-    """``rolling_30d_spend`` with the hot-customer task BOUNDED:
-    row-identical output (pinned in tests), computed inside aligned
-    ``chunk_days``-wide time chunks with each order REPLICATED into its
-    successor chunk as a contributor — the standard two-chunk trick for
-    sliding windows.
-
-    Alignment argument (the RANGE twin of ``sessionize_chunked``'s
-    boundary merge): the frame is [t - 30d, t] inclusive and chunks are
-    aligned multiples of ``chunk_days`` >= 30 epoch days, so for a
-    target order at t in chunk c, every contributor s in [t - 30d, t]
-    satisfies s >= t - 30d >= chunk_start(c) - chunk_width, i.e. s lies
-    in chunk c or c-1 — never earlier. Partitioning the window on
-    (custkey, chunk) over {chunk-c rows} U {chunk-(c-1) rows replicated
-    forward} therefore sees exactly the one-pass frame for every target;
-    each original order appears in the partition exactly once (own rows
-    with shift 0, predecessors only via their shift-1 copy). The sum is
-    exact DECIMAL, so it is bit-equal regardless of the split.
-
-    Cost: 2x rows through the one exchange (each order ships to its own
-    and its successor chunk); the sort task is bounded by TWO chunks of
-    one customer's orders instead of their whole history. The one-pass
-    form wins when no customer is hot (measured — bench skew block);
-    this form wins unboundedly once one is.
-    """
-    if chunk_days < 30:
-        raise ValueError(
-            f"chunk_days must be >= the 30-day frame width, got {chunk_days}"
-        )
-    width = chunk_days * 86400
-    sec = F.unix_seconds(F.col("o_orderdate").cast("timestamp"))
-    replicated = (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            sec.alias("__sec"),
-            F.col("o_totalprice").cast("decimal(28,6)").alias("__p"),
-        )
-        .withColumn("__shift", F.explode(F.array(F.lit(0), F.lit(1))))
-        .withColumn(
-            "__pchunk", F.floor(F.col("__sec") / F.lit(width)) + F.col("__shift")
-        )
-    )
-    w = (
-        Window.partitionBy("o_custkey", "__pchunk")
-        .orderBy("__sec")
-        .rangeBetween(-30 * 86400, 0)
-    )
-    return (
-        replicated.withColumn(
-            "spend_30d", F.round(F.sum("__p").over(w).cast("double"), 2)
-        )
-        .filter(F.col("__shift") == 0)
-        .select("o_custkey", "o_orderkey", "o_orderdate", "spend_30d")
     )

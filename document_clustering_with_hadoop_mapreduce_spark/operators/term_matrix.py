@@ -39,74 +39,21 @@ def term_doc_counts(
     return terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def filter_min_corpus_freq(
-    matrix: DataFrame, min_total: int = 3, mode: str = "window"
-) -> DataFrame:
+def filter_min_corpus_freq(matrix: DataFrame, min_total: int = 3) -> DataFrame:
     """A2: keep all (doc, term) rows of terms whose corpus-wide total >= N.
 
     Window-sum per term, then filter — the fan-back is free because the rows
     are already present (no join). The reference's combiner-as-reducer bug
     (SURVEY.md §2.7-N7) cannot occur: the window sees the global sum.
 
-    Hot-key bound: the window buffers EVERY row of a term in one task,
-    and AQE cannot split a window partition — a term present in most of
-    a 100 TB corpus serializes its df rows. ``filter_min_corpus_freq_
-    joined`` is the row-identical escape whose hot term rides a semi
-    join, which AQE's skew-join handling CAN split.
-
-    ``mode``: 'window' (default), 'join' (the escape), or 'auto' —
-    sample term occupancy (``skew.sampled_max_key_rows``, one ~1/10-scan
-    probe at construction) and take the escape when the hottest term
-    exceeds the measured ``HOT_KEY_ROWS_THRESHOLD`` crossover, so the
-    caller of a 100 TB job need not know their key is hot."""
-    if mode not in ("window", "join", "auto"):
-        raise ValueError(f"mode must be 'window', 'join', or 'auto', got {mode!r}")
-    if mode == "auto":
-        from .skew import HOT_KEY_ROWS_THRESHOLD, sampled_max_key_rows
-
-        if sampled_max_key_rows(matrix, ["term"]) > HOT_KEY_ROWS_THRESHOLD:
-            mode = "join"
-    if mode == "join":
-        return filter_min_corpus_freq_joined(matrix, min_total)
+    Hot-key bound: the window buffers every row of a term in one task;
+    AQE cannot split a window partition."""
     w = Window.partitionBy("term")
     return (
         matrix.withColumn("corpus_freq", F.sum("cnt").over(w))
         .filter(F.col("corpus_freq") >= min_total)
         .drop("corpus_freq")
     )
-
-
-def filter_min_corpus_freq_joined(
-    matrix: DataFrame, min_total: int = 3, materialize: bool = True
-) -> DataFrame:
-    """A2's skew escape: the same row set via aggregate + LEFT SEMI join.
-
-    The qualifying-term list comes from a map-side-partial groupBy (its
-    output is vocab-bounded), and the fan-back is a semi join on term —
-    under AQE a hot term's join partition is SPLIT across tasks
-    (skew-join handling), where the window form above must buffer the
-    term's whole df on one task. Two exchanges instead of one, so the
-    DEFAULT form wins whenever no term is hot (measured at fixture scale
-    — see round-12 COVERAGE); this form wins unboundedly once one is.
-
-    The matrix lineage has TWO consumers here (the keep-list aggregate
-    and the fan-back probe) and Catalyst does not unify them, so by
-    default the matrix is lazily checkpointed once — a caller passing a
-    raw tokenize plan would otherwise tokenize the corpus twice. Pass
-    ``materialize=False`` for inputs that are cheap to recompute (a
-    materialized triples file).
-    """
-    if materialize:
-        matrix = matrix.localCheckpoint(eager=False)
-    keep = (
-        matrix.groupBy("term")
-        .agg(F.sum("cnt").alias("__tot"))
-        .filter(F.col("__tot") >= min_total)
-        .select("term")
-    )
-    # the equi-join key moves first in join() output — restore the
-    # window form's column order so the two forms are drop-in twins
-    return matrix.join(keep, "term", "left_semi").select(*matrix.columns)
 
 
 def term_totals(matrix: DataFrame) -> DataFrame:

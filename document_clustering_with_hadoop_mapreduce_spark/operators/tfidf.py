@@ -29,7 +29,6 @@ def tfidf(
     n_docs: int | None = None,
     compat_n1: bool = False,
     materialize: bool = True,
-    df_via_join: bool | str = False,
 ) -> DataFrame:
     """(doc_id, term, cnt, tf, idf, tfidf).
 
@@ -40,57 +39,32 @@ def tfidf(
     footer count is nearly free, and with a known N the matrix has exactly
     one consumer, so no checkpoint/re-scan trade exists at any scale.
 
-    ``materialize`` (relevant when the matrix has two consumers: ``n_docs``
-    None, or ``df_via_join`` — either adds a second aggregate branch over
-    the matrix): lazily checkpoint the matrix so the extra branch does not
-    re-run the matrix pipeline. Pass False when the input is cheap to
-    recompute (an
+    ``materialize`` (relevant when ``n_docs`` is None, which adds a second
+    aggregate branch over the matrix): lazily checkpoint the matrix so the
+    extra branch does not re-run the matrix pipeline. Pass False when the
+    input is cheap to recompute (an
     already-materialized triples file) or when the CALLER materializes the
     tf-idf output itself — double-checkpointing pins two nnz-sized copies
     in executor storage for no benefit. NB: each materialization lives
     until its RDD is GC'd (ContextCleaner); long-lived sessions re-running
     matrix queries should prefer a driver-known ``n_docs``.
 
-    ``df_via_join`` (standard idf only): compute the per-term df through
-    a vocab-bounded aggregate + equi-join instead of the count window.
-    The window buffers EVERY row of a term in one task and AQE cannot
-    split a window partition — a term present in most of a 100 TB corpus
-    serializes its df rows with no memory bound — where the join's hot
-    partition AQE's skew-join handling CAN split (the
-    ``filter_min_corpus_freq_joined`` rationale; row-identical, pinned).
-    Default stays the single-exchange window — optimal when no term is
-    hot, which the fixture corpora and most real vocabularies are.
-    Pass ``df_via_join='auto'`` to sample term occupancy at construction
-    (``skew.sampled_max_key_rows``) and flip to the join past the
-    measured ``HOT_KEY_ROWS_THRESHOLD`` crossover.
+    Hot-key bound: the standard per-term df window buffers every row of a
+    term in one task; AQE cannot split a window partition.
     """
-    if df_via_join not in (True, False, "auto"):
-        raise ValueError(
-            f"df_via_join must be True, False, or 'auto', got {df_via_join!r}"
-        )
-    if df_via_join == "auto":
-        if compat_n1:
-            df_via_join = False  # doc-keyed window is doc-length-bounded
-        else:
-            from .skew import HOT_KEY_ROWS_THRESHOLD, sampled_max_key_rows
-
-            df_via_join = (
-                sampled_max_key_rows(matrix, ["term"]) > HOT_KEY_ROWS_THRESHOLD
-            )
     if compat_n1:
         # N1: "df" is the number of distinct terms in the same DOCUMENT.
         w = Window.partitionBy("doc_id")
     else:
         w = Window.partitionBy("term")
-    # The matrix lineage gains a SECOND consumer in two cases: the
-    # derived-count branch (n_docs None) and the df_via_join dfreq
-    # aggregate. Catalyst does NOT unify such branches (the
+    # The derived-count branch (n_docs None) gives the matrix lineage a
+    # SECOND consumer. Catalyst does NOT unify such branches (the
     # tokenize-lambda canonicalization failure; plan-audited: two
-    # FileScans), so in either case the matrix is lazily materialized
-    # once and both branches read the nnz-sized checkpoint instead of
-    # re-tokenizing the corpus. ``materialize=False`` opts out for
-    # inputs that are cheap to recompute.
-    two_consumers = n_docs is None or (df_via_join and not compat_n1)
+    # FileScans), so the matrix is lazily materialized once and both
+    # branches read the nnz-sized checkpoint instead of re-tokenizing the
+    # corpus. ``materialize=False`` opts out for inputs that are cheap to
+    # recompute.
+    two_consumers = n_docs is None
     if materialize and two_consumers:
         matrix = matrix.localCheckpoint(eager=False)
     if n_docs is not None:
@@ -101,13 +75,7 @@ def tfidf(
         n_df = matrix.agg(F.countDistinct("doc_id").cast("double").alias("__n_docs"))
         with_n = with_tf.crossJoin(F.broadcast(n_df))
         n_col = F.col("__n_docs")
-    if df_via_join and not compat_n1:
-        # (doc, term) rows are unique, so count-rows-per-term over the
-        # matrix equals the window's per-partition count exactly
-        dfreq = matrix.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        with_df = with_n.join(dfreq, "term").select(*with_n.columns, "df")
-    else:
-        with_df = with_n.withColumn("df", F.count(F.lit(1)).over(w))
+    with_df = with_n.withColumn("df", F.count(F.lit(1)).over(w))
     return (
         with_df.withColumn("idf", F.log(n_col / F.col("df")))
         .withColumn("tfidf", F.col("tf") * F.col("idf"))

@@ -133,15 +133,28 @@ class TestClearCachesFreshness:
         assert len(qs._IVF_INDEX_CACHE) == 1
 
     def test_clear_caches_empties_every_cache(self, spark, sf_dir):
-        from document_clustering_with_hadoop_mapreduce_spark.operators import (
-            similarity as sim,
-        )
+        """Every module-level ``_*_CACHE`` dict in the package is one of
+        the four that ``caches.py`` documents, and ``clear_caches()``
+        empties each — a new process cache must be added to both."""
+        import importlib
+        import pkgutil
 
+        import document_clustering_with_hadoop_mapreduce_spark as pkg
+
+        found = {}
+        for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+            mod = importlib.import_module(info.name)
+            for attr, val in vars(mod).items():
+                if attr.startswith("_") and attr.endswith("_CACHE") and isinstance(val, dict):
+                    found[f"{info.name[len(pkg.__name__) + 1:]}.{attr}"] = val
+        assert set(found) == {
+            "plans.registry._N_DOCS_CACHE",
+            "plans.queries_events._BPE_MERGE_CACHE",
+            "plans.queries_similarity._IVF_INDEX_CACHE",
+            "operators.similarity._LSH_SIZING_CACHE",
+        }
         reg._n_docs(spark, sf_dir)
         all_queries()["doc_quality"].spark(spark, sf_dir)
         assert reg._N_DOCS_CACHE and qe._BPE_MERGE_CACHE
         clear_caches()
-        assert not reg._N_DOCS_CACHE
-        assert not qe._BPE_MERGE_CACHE
-        assert not qs._IVF_INDEX_CACHE
-        assert not sim._LSH_SIZING_CACHE
+        assert not any(found.values())

@@ -31,7 +31,11 @@ FAST_SMOKE = {
     "dedup_components",
     "top_terms_global",
     "kmeans_assign_seeded",
+    "term_filter_min3",
+    "tfidf_standard",
 }
+# a renamed or removed slot must fail collection, not silently drop out
+assert FAST_SMOKE <= set(QUERIES), sorted(FAST_SMOKE - set(QUERIES))
 
 
 @pytest.mark.parametrize(

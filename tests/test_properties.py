@@ -1,7 +1,7 @@
 """Property-based tests (hypothesis): invariants that hold for ALL inputs,
-not just fixtures — MTX round-trips, tokenizer algebra, salting neutrality,
-minhash bounds. Spark-side properties run on small generated frames
-(settings keep example counts low; each example is a Spark job)."""
+not just fixtures — MTX round-trips, tokenizer algebra, minhash bounds.
+Spark-side properties run on small generated frames (settings keep
+example counts low; each example is a Spark job)."""
 
 from __future__ import annotations
 
@@ -24,11 +24,10 @@ from document_clustering_with_hadoop_mapreduce_spark.sources.mtx import (
     write_mtx_single,
 )
 
-# round-14 suite tiering (VERDICT r13 #1): this whole module is the
-# property-fuzz / sweep tier — excluded from the default profile so the
-# driver-run suite finishes inside its budget; run with --runslow.
-pytestmark = pytest.mark.slow
-
+# Suite tiering: the Spark-backed properties are the property-fuzz tier
+# (each example is a Spark job), marked slow so the default profile
+# finishes inside its budget; run them with --runslow. The pure-Python
+# properties are cheap and run in the default tier.
 
 SETTINGS = settings(
     max_examples=8,
@@ -48,6 +47,7 @@ triples = st.lists(
 )
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(data=triples)
 def test_mtx_roundtrip_any_triples(spark, tmp_path_factory, data):
@@ -69,6 +69,7 @@ def test_mtx_roundtrip_any_triples(spark, tmp_path_factory, data):
                     if not (k == (n_rows, n_cols) and v == float(nnz))}
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(
     text=st.text(
@@ -90,25 +91,6 @@ def test_tokenizer_properties(spark, text):
     assert len(toks) <= max(1, len(text.split()))
 
 
-@SETTINGS
-@given(
-    rows=st.lists(
-        st.tuples(st.integers(0, 5), st.integers(-1000, 1000)),
-        min_size=1, max_size=80,
-    ),
-    n_salts=st.sampled_from([2, 7, 16]),
-)
-def test_salted_sum_neutral_for_any_input(spark, rows, n_salts):
-    from document_clustering_with_hadoop_mapreduce_spark.operators.skew import salted_sum
-
-    df = spark.createDataFrame(
-        [(k, float(v)) for k, v in rows], "k INT, v DOUBLE"
-    )
-    direct = {r["k"]: r["s"] for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
-    salted = {r["k"]: r["total"] for r in salted_sum(df, ["k"], "v", "total", n_salts).collect()}
-    assert salted == direct
-
-
 @given(x=st.integers(min_value=0, max_value=(1 << 60) - 1))
 @settings(max_examples=200, deadline=None)
 def test_universal_hash_range_pure_python(x):
@@ -121,6 +103,7 @@ def test_universal_hash_range_pure_python(x):
         assert 0 <= h < MERSENNE_P
 
 
+@pytest.mark.slow
 def test_doc_repetition_fold_semantics(spark):
     """Pin the run-length fold against hand-computed stats: 'a b a b a'
     has token counts {a:3, b:2} and bigram counts {'a b':2, 'b a':2}."""
@@ -143,6 +126,7 @@ def test_doc_repetition_fold_semantics(spark):
     assert got[4]["max_token_frac"] == 1.0 and got[4]["dup_ngram_frac"] == 1.0
 
 
+@pytest.mark.slow
 def test_stratified_sample_is_stable_subset(spark, sf_dir):
     """Sampling twice gives the identical row set; rate=1.0 strata are kept
     in full; the sample is a subset of the input."""
@@ -160,6 +144,7 @@ def test_stratified_sample_is_stable_subset(spark, sf_dir):
     assert 0 < en_kept < en_total
 
 
+@pytest.mark.slow
 def test_doc_features_matches_standalone_operators(spark, sf_dir):
     """The fused doc_features projection (the registered doc_quality slot)
     must agree column-for-column with the three standalone operators it
@@ -188,6 +173,7 @@ def test_doc_features_matches_standalone_operators(spark, sf_dir):
             assert f[c] == r[c], (r["doc_id"], c)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=12,
     deadline=None,
@@ -234,6 +220,7 @@ _WORDS = st.sampled_from(["aa", "bb", "cc", "dd", "ee"])  # tiny alphabet forces
 _DOC = st.lists(_WORDS, min_size=0, max_size=12).map(" ".join)
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(docs=st.lists(_DOC, min_size=1, max_size=8), n_eval=st.integers(min_value=1, max_value=3))
 def test_contamination_matches_python_ngram_overlap(spark, docs, n_eval):
@@ -264,6 +251,7 @@ def test_contamination_matches_python_ngram_overlap(spark, docs, n_eval):
     assert kept == {i for i, _ in rows} - set(want)
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(
     lines=st.lists(
@@ -302,6 +290,7 @@ def test_c4_filter_matches_python_rules(spark, lines):
 word = st.text(alphabet="abcde", min_size=1, max_size=4)
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(
     docs=st.lists(
@@ -330,6 +319,7 @@ def test_sequence_pack_matches_python_packer(spark, docs, max_tokens):
         cum += n
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(
     docs=st.lists(
@@ -368,6 +358,7 @@ def test_duplicate_spans_match_python_counter(spark, docs, window):
     assert got == set(want.values()), (got, want)
 
 
+@pytest.mark.slow
 @SETTINGS
 @given(
     vecs=st.lists(
@@ -454,6 +445,7 @@ def test_temperature_alpha_one_proportional_when_uncapped(masses, budget):
         assert abs(t[s] - budget * m / total) < 1e-6
 
 
+@pytest.mark.slow
 @given(
     text=st.text(
         alphabet="abc defg",  # tiny alphabet: dense hash ties exercise the
@@ -481,6 +473,7 @@ def test_winnow_spark_matches_python_on_random_text(spark, text, k, w):
     assert got == _winnow_py(text, k=k, w=w)
 
 
+@pytest.mark.slow
 @given(
     text=st.text(alphabet="ab c", min_size=0, max_size=120),
     chunk_tokens=st.integers(min_value=2, max_value=12),
@@ -516,6 +509,7 @@ def test_chunking_matches_python_on_random_text(spark, text, chunk_tokens, overl
     assert got == sorted(want)
 
 
+@pytest.mark.slow
 @given(
     assignment=st.lists(
         st.integers(min_value=0, max_value=9), min_size=1, max_size=60
@@ -580,6 +574,7 @@ _cos_docs = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(docs=_cos_docs, thresh=st.sampled_from([0.2, 0.6, 0.95]))
 @settings(
     max_examples=8,
@@ -633,6 +628,7 @@ _winnow_docs = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(docs=_winnow_docs, max_df=st.sampled_from([2, 4, 8]))
 @settings(
     max_examples=8,
