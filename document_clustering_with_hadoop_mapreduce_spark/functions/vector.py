@@ -39,18 +39,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(prod == 0.0, F.lit(0.0)).otherwise(dot(a, b) / prod)
 
 
-def squared_euclidean(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def euclidean(a: Column, b: Column) -> Column:
-    return F.sqrt(squared_euclidean(a, b))
-
-
 def l2_normalize(col: Column) -> Column:
     """Unit-normalize an array column (JVM-side; zero vectors pass through)."""
     n = F.sqrt(

@@ -276,18 +276,6 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def lsh_buckets(
-    embeddings: DataFrame,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        lsh_bucket(_as_double(F.col(vec_col)), planes).alias("bucket"),
-    )
-
-
 def _auto_sizing(
     embeddings: DataFrame,
     planes: list[list[float]],

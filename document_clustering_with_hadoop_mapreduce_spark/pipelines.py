@@ -312,48 +312,3 @@ def task_2_3_doc_kmeans_scalable(
     return task_2_2_doc_kmeans(
         spark, tfidf_mtx, k=k, seed=seed, init_mode="k-means||", max_iter=max_iter
     )
-
-
-def build_training_export(
-    documents,
-    out_dir: str,
-    n_shards: int = 64,
-    max_tokens: int = 2048,
-    num_streams: int = 1024,
-    salt: str = "export-v1",
-):
-    """Curated corpus -> trainer-ready artifact, the last mile after
-    ``corpus_curation``: a deterministic global shuffle into
-    ``out_dir/shards/shard=<i>/`` parquet dirs (training order = columns
-    (shard, pos) — sources/export.py) plus a sequence-packing MANIFEST at
-    ``out_dir/manifest`` mapping every doc to its packed training
-    sequence (operators/textstats.py::sequence_pack — (stream, seq,
-    seq_id, offset, n_tokens)), so the loader can assemble fixed-capacity
-    sequences without re-tokenizing.
-
-    Everything is a pure function of (salt, doc ids, token counts): a
-    re-run reproduces both artifacts exactly, and a new ``salt`` is a
-    fresh epoch permutation. Returns {"n_docs", "n_shards",
-    "n_sequences"} driver-side scalars for the build log — three tiny
-    aggregates, nothing corpus-sized collected.
-    """
-    from pyspark.sql import functions as F
-
-    from .operators.textstats import sequence_pack
-    from .sources.export import write_training_shards
-
-    write_training_shards(
-        documents, f"{out_dir}/shards", n_shards=n_shards, salt=salt
-    )
-    manifest = sequence_pack(
-        documents, max_tokens=max_tokens, num_streams=num_streams, salt=salt
-    )
-    manifest.write.mode("overwrite").parquet(f"{out_dir}/manifest")
-    spark = documents.sparkSession
-    written = spark.read.parquet(f"{out_dir}/shards")
-    man = spark.read.parquet(f"{out_dir}/manifest")
-    return {
-        "n_docs": written.count(),
-        "n_shards": written.select("shard").distinct().count(),
-        "n_sequences": man.select("seq_id").distinct().count(),
-    }

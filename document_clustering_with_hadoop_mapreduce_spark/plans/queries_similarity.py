@@ -67,11 +67,11 @@ def _planes_values_sql() -> str:
     return f"(VALUES {rows}) AS planes(p, pl)"
 
 
-# NOTE: lsh_buckets (bucket id per vector) is a strict sub-plan of
-# ann_lsh_topk below; tests/test_similarity.py value-tests it directly
-# (bucket ids vs a pure-python reproduction) rather than it holding its
-# own registry slot (the driver gate records at most 50 queries — every
-# slot must be a distinct capability).
+# NOTE: the lsh_bucket id per vector is a strict sub-plan of ann_lsh_topk
+# below; tests/test_similarity.py value-tests it directly (bucket ids vs a
+# pure-python reproduction) rather than it holding its own registry slot
+# (the registry holds at most 50 slots — every slot must be a distinct
+# capability).
 
 
 @register(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+from collections import Counter
 
 import duckdb
 import pytest
@@ -42,6 +43,20 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip_slow)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line per distinct skip reason with its count, so every run shows
+    what it did not check (a missing reference fixture, the slow tier)
+    instead of folding it into the skipped total."""
+    reasons = Counter()
+    for rep in terminalreporter.stats.get("skipped", []):
+        reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else str(rep.longrepr)
+        reasons[reason.removeprefix("Skipped: ")] += 1
+    if reasons:
+        terminalreporter.section("skip reasons")
+        for reason, n in sorted(reasons.items(), key=lambda kv: (-kv[1], kv[0])):
+            terminalreporter.write_line(f"{reason}: {n}")
 
 
 @pytest.fixture(scope="session")

@@ -60,46 +60,3 @@ def test_parts_writer_scale_path(spark, tmp_path):
     back = read_mtx(spark, out, header=False)
     assert back.count() == 5
     assert back.filter(F.col("value") == 5.0).count() == 1
-
-
-def test_jsonl_roundtrip_documents(spark, sf_dir, tmp_path):
-    """documents parquet -> gzip JSONL shards -> read back: identical rows;
-    malformed lines are dropped under the default P7-style policy."""
-    from document_clustering_with_hadoop_mapreduce_spark.sources.jsonl import (
-        read_documents_jsonl,
-        write_documents_jsonl,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents", fan_out=False)
-    path = str(tmp_path / "docs_jsonl")
-    write_documents_jsonl(docs, path, shards=3)
-    back = read_documents_jsonl(spark, path)
-    assert sorted((r.asDict() for r in back.collect()), key=lambda d: d["doc_id"]) == sorted(
-        (r.asDict() for r in docs.collect()), key=lambda d: d["doc_id"]
-    )
-    # malformed-line policy: the corrupt line is dropped by a STABLE filter
-    # (projection-independent: even a doc_id-only projection sees 2 rows)
-    bad = tmp_path / "bad"
-    bad.mkdir()
-    (bad / "part-0.json").write_text(
-        '{"doc_id": 1, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}\n'
-        "this is not json\n"
-        '{"doc_id": 2, "text": "ok2", "lang": "en", "source": "s", "n_chars": 3}\n'
-    )
-    got = read_documents_jsonl(spark, str(bad))
-    assert {r["doc_id"] for r in got.collect()} == {1, 2}
-    assert got.select("doc_id").count() == 2  # stable under projection
-    assert "_corrupt_record" not in got.columns
-    # quarantine path: the raw offending line is preserved
-    kept = read_documents_jsonl(spark, str(bad), drop_malformed=False)
-    assert kept.count() == 3
-    corrupt = [r["_corrupt_record"] for r in kept.collect() if r["_corrupt_record"]]
-    assert corrupt == ["this is not json"]
-    # the ingest path is a pure scan->project->filter pipeline: no
-    # materialization (localCheckpoint would surface as Scan ExistingRDD)
-    # — full lineage, nothing pinned in executor storage at 100 TB
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan
-    assert "Checkpoint" not in plan
-    assert "Scan text" in plan

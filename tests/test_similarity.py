@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.similarity import (
     block_topk_pairs,
-    lsh_buckets,
+    lsh_bucket,
     random_hyperplanes,
     top_similar_pairs,
 )
@@ -24,8 +24,9 @@ def test_lsh_buckets_match_pure_python(spark, sf_dir):
     """Bucket id = packed sign bits of hyperplane dots, reproduced exactly
     in python (same plane constants, same left-to-right summation)."""
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    got = {r["vec_id"]: r["bucket"] for r in lsh_buckets(emb, PLANES).collect()}
-    rows = emb.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")).collect()
+    v = F.transform("embedding", lambda x: x.cast("double"))
+    rows = emb.select("vec_id", lsh_bucket(v, PLANES).alias("bucket"), v.alias("v")).collect()
+    got = {r["vec_id"]: r["bucket"] for r in rows}
     for r in rows:
         v = list(r["v"])
         want = 0

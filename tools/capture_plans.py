@@ -1,4 +1,4 @@
-"""Capture .explain('formatted') for every registered query into plans/<tag>/.
+"""Capture .explain('formatted') for every registered query into a directory.
 
 Usage: python tools/capture_plans.py <outdir> <suffix> [name ...]
 
