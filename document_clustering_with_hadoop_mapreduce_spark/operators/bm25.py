@@ -11,20 +11,19 @@ search-the-corpus tool. Uses the Lucene idf form,
 
 summed over the query terms.
 
-Scale shape: the query slice is ``matrix.filter(term IN q)`` — a handful
-of postings lists, with the predicate pushed into the matrix scan (or a
-partition prune when the matrix is laid out bucketed by term). Per-term
-df comes from that same slice (one q-row aggregate, broadcast back);
-the only corpus-sized frames are the doc-length table (one aggregate —
-at query time this is a precomputed index, the ``bm25_doc_stats`` half)
-joined on doc_id, and N/avgdl ride as 1-row broadcast scalars (or a
-driver-known ``n_docs``, the tfidf discipline). Top-k is ORDER BY +
-LIMIT — TakeOrderedAndProject, never a global sort materialization.
+Scale shape: the query slice is the matrix joined to the broadcast list
+of queried terms — a handful of postings lists. Per-term df comes from
+that same slice (one term-sized aggregate, broadcast back); the only
+corpus-sized frames are the doc-length table (one aggregate — at query
+time this is a precomputed index, the ``bm25_doc_stats`` half) joined on
+doc_id, and N/avgdl ride as 1-row broadcast scalars (or a driver-known
+``n_docs``, the tfidf discipline). Top-k is a per-query window over the
+match-bounded score frame, never a global sort.
 
 Float discipline: per-(doc, term) components are 12dp-rounded and
 DECIMAL(38,12)-summed (order-independent across engines and partition
 orders), the final score rounds to 6dp, and ranking ties break on doc_id
-— so the DuckDB oracle (``bm25_oracle_sql``) matches bit-for-bit.
+— so the DuckDB oracle (``bm25_batch_oracle_sql``) matches bit-for-bit.
 """
 
 from __future__ import annotations
@@ -42,62 +41,6 @@ def bm25_doc_stats(matrix: DataFrame) -> DataFrame:
     BM25; persist it next to the matrix so queries never re-aggregate the
     corpus."""
     return matrix.groupBy("doc_id").agg(F.sum("cnt").cast("long").alias("dl"))
-
-
-def bm25_topk(
-    matrix: DataFrame,
-    query_terms: Sequence[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n_docs: int | None = None,
-    doc_stats: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, score): the ``k`` best-scoring documents for the query,
-    score descending, ties on doc_id ascending.
-
-    ``query_terms`` should be cleaned tokens (the ``functions.text.tokens``
-    alphabet); terms absent from the matrix — including stopwords the
-    matrix build dropped — contribute nothing, the BM25 convention.
-    ``n_docs`` may be passed driver-known (parquet footer count — prefer
-    it, same reasoning as ``tfidf``); ``doc_stats`` may be passed
-    precomputed (the index regime) — both default to deriving from the
-    matrix.
-    """
-    terms = sorted(set(query_terms))
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    dl = doc_stats if doc_stats is not None else bm25_doc_stats(matrix)
-    avgdl = dl.agg(F.avg("dl").alias("avgdl"))
-    if n_docs is not None:
-        n_col = F.lit(float(n_docs))
-        with_n = lambda df: df  # noqa: E731
-    else:
-        n_df = dl.agg(F.count(F.lit(1)).cast("double").alias("__n_docs"))
-        n_col = F.col("__n_docs")
-        with_n = lambda df: df.crossJoin(F.broadcast(n_df))  # noqa: E731
-
-    posting = matrix.filter(F.col("term").isin(list(terms)))
-    df_ = posting.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    scored = with_n(
-        posting.join(F.broadcast(df_), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-    )
-    idf = F.log(F.lit(1.0) + (n_col - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    comp = idf * (
-        (F.col("cnt") * (k1 + 1))
-        / (F.col("cnt") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", F.round(comp, 12).cast(_DEC).alias("__c"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("__c").cast("double"), 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(int(k))
-    )
 
 
 def bm25_batch_topk(
@@ -121,9 +64,13 @@ def bm25_batch_topk(
     Duplicate (query_id, term) rows are collapsed (bag-of-words queries
     weight by document tf, not query tf — the BM25 convention).
 
-    Same float discipline as ``bm25_topk``: 12dp DECIMAL component sums,
-    6dp scores, ties on doc_id. The two agree exactly on a single query
-    (pinned in tests).
+    Query terms are cleaned tokens (the ``functions.text.tokens``
+    alphabet); terms absent from the matrix — including stopwords the
+    matrix build dropped — contribute nothing, the BM25 convention.
+    ``n_docs`` may be passed driver-known (parquet footer count — prefer
+    it, same reasoning as ``tfidf``); ``doc_stats`` may be passed
+    precomputed (the index regime) — both default to deriving from the
+    matrix.
     """
     from .topk import top_k_per_group
 
@@ -232,41 +179,6 @@ bm25r AS (
   FROM bm_scores
   QUALIFY rank <= {int(k)}
 )"""
-
-
-def bm25_oracle_sql(
-    query_terms: Sequence[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    matrix_cte: str | None = None,
-) -> str:
-    """DuckDB mirror of ``bm25_topk`` over the shared matrix CTE — same
-    Lucene idf, same 12dp-round + DECIMAL sum + 6dp output, same
-    (score desc, doc_id asc) LIMIT."""
-    from ..plans.oracles import MATRIX_CTE
-
-    terms = sorted(set(query_terms))
-    in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
-    return f"""{matrix_cte or MATRIX_CTE},
-bm_dl AS (SELECT doc_id, sum(cnt)::BIGINT AS dl FROM matrix GROUP BY doc_id),
-bm_avg AS (SELECT avg(dl) AS avgdl FROM bm_dl),
-bm_n AS (SELECT count(*)::DOUBLE AS n_docs FROM bm_dl),
-bm_post AS (SELECT doc_id, term, cnt FROM matrix WHERE term IN ({in_list})),
-bm_df AS (SELECT term, count(*)::DOUBLE AS df FROM bm_post GROUP BY term),
-bm_comp AS (
-  SELECT p.doc_id,
-         CAST(round(
-           ln(1.0 + (n.n_docs - f.df + 0.5) / (f.df + 0.5))
-           * (p.cnt * ({k1} + 1)) / (p.cnt + {k1} * (1 - {b} + {b} * d.dl / a.avgdl)),
-         12) AS DECIMAL(38,12)) AS c
-  FROM bm_post p
-  JOIN bm_df f USING (term) JOIN bm_dl d USING (doc_id)
-  CROSS JOIN bm_avg a CROSS JOIN bm_n n
-)
-SELECT doc_id, round(CAST(sum(c) AS DOUBLE), 6) AS score
-FROM bm_comp GROUP BY doc_id
-ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"""
 
 
 def rrf_fuse(

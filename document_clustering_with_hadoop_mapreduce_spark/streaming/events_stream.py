@@ -317,36 +317,6 @@ def stream_term_counts(documents: DataFrame) -> DataFrame:
     return toks.groupBy("term").agg(F.count(F.lit(1)).alias("total_freq"))
 
 
-def stream_gram_bucket_counts(
-    documents: DataFrame, n: int = 3, n_buckets: int = 1 << 20
-) -> DataFrame:
-    """Heavy-hitter pass 1 as a STREAM: per-bucket n-gram counts over the
-    document stream. The streaming state is the bucket table itself —
-    bounded by ``n_buckets`` (a parameter, never data-sized), which is
-    precisely why the count-min-style sketch is the streaming-safe form
-    of frequency mining: per-gram counting state would grow with the
-    corpus and is exactly what Structured Streaming must never hold.
-
-    Finalize a CLOSED stream by filtering the accumulated totals to
-    candidates (``bucket_cnt >= min_count``) and running the batch
-    ``operators.heavyhitters.exact_recount`` over the ingested corpus —
-    equivalence with the one-shot batch miner is asserted in tests.
-    """
-    from ..functions.hashing import md5_int60
-    from ..operators.heavyhitters import _gram_strings
-    from ..functions.text import tokens
-    from pyspark.sql import functions as F
-
-    grams = documents.select(
-        F.filter(tokens(F.col("text")), lambda t: t != "").alias("__toks")
-    ).select(F.explode(_gram_strings(F.col("__toks"), n)).alias("ngram"))
-    return (
-        grams.select(F.pmod(md5_int60(F.col("ngram")), F.lit(n_buckets)).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_cnt"))
-    )
-
-
 def run_stream_drift_monitor(
     doc_stream: DataFrame,
     reference: DataFrame,

@@ -9,9 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.bm25 import (
+    bm25_batch_oracle_sql,
+    bm25_batch_topk,
     bm25_doc_stats,
-    bm25_oracle_sql,
-    bm25_topk,
 )
 from document_clustering_with_hadoop_mapreduce_spark.operators.term_matrix import (
     term_doc_counts,
@@ -40,17 +40,24 @@ def query(matrix):
     return [r["term"] for r in rows]
 
 
+def _one_query(matrix, terms, k, **kw):
+    """``bm25_batch_topk`` over a one-query frame, in rank order."""
+    spark = matrix.sparkSession
+    qdf = spark.createDataFrame([("q", t) for t in terms], "query_id string, term string")
+    return bm25_batch_topk(matrix, qdf, k=k, **kw).orderBy("rank")
+
+
 def test_matches_duckdb_oracle(matrix, duck, query):
-    got = bm25_topk(matrix, query, k=25)
-    assert_matches_oracle(got, duck, bm25_oracle_sql(query, k=25))
+    got = _one_query(matrix, query, k=25)
+    assert_matches_oracle(got, duck, bm25_batch_oracle_sql([("q", t) for t in query], k=25))
     assert got.count() == 25
 
 
 def test_precomputed_stats_and_known_n_match_derived(matrix, query):
     stats = bm25_doc_stats(matrix).localCheckpoint()
     n = stats.count()
-    a = bm25_topk(matrix, query, k=15)
-    b = bm25_topk(matrix, query, k=15, n_docs=n, doc_stats=stats)
+    a = _one_query(matrix, query, k=15)
+    b = _one_query(matrix, query, k=15, n_docs=n, doc_stats=stats)
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
 
 
@@ -64,7 +71,7 @@ def test_tf_saturation_and_ordering(spark):
         spark,
         [(1, "zebra", 3), (1, "pad", 7), (2, "zebra", 1), (2, "pad", 9), (3, "pad", 10)],
     )
-    got = bm25_topk(m, ["zebra"], k=5).collect()
+    got = _one_query(m, ["zebra"], k=5).collect()
     assert [r["doc_id"] for r in got] == [1, 2]  # doc 3 has no query term
 
 
@@ -75,7 +82,7 @@ def test_rare_term_outweighs_common(spark):
     rows += [(1, "rare", 1)]
     rows += [(i, "pad", 5) for i in range(1, 11)]
     m = _mini_matrix(spark, rows)
-    got = bm25_topk(m, ["rare", "common"], k=1).collect()
+    got = _one_query(m, ["rare", "common"], k=1).collect()
     assert got[0]["doc_id"] == 1
 
 
@@ -84,67 +91,33 @@ def test_length_normalization(spark):
     m = _mini_matrix(
         spark, [(1, "q", 2), (1, "pad", 2), (2, "q", 2), (2, "pad", 40)]
     )
-    got = bm25_topk(m, ["q"], k=2).collect()
+    got = _one_query(m, ["q"], k=2).collect()
     assert [r["doc_id"] for r in got] == [1, 2]
     assert got[0]["score"] > got[1]["score"]
 
 
 def test_scores_positive_and_finite(matrix, query):
-    for r in bm25_topk(matrix, query, k=10).collect():
+    for r in _one_query(matrix, query, k=10).collect():
         assert r["score"] > 0 and math.isfinite(r["score"])
 
 
 def test_validation(matrix):
-    with pytest.raises(ValueError, match="query_terms"):
-        bm25_topk(matrix, [])
     with pytest.raises(ValueError, match="k must"):
-        bm25_topk(matrix, ["x"], k=0)
-
-
-def test_topk_plan_take_ordered(matrix, query):
-    plan = (
-        bm25_topk(matrix, query, k=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
+        _one_query(matrix, ["x"], k=0)
 
 
 def test_batch_matches_oracle(spark, matrix, duck, query):
     rows = [("q0", query[0]), ("q0", query[1]), ("q1", query[2]), ("q1", query[0]),
             ("q1", query[0])]  # dup (query, term) must collapse
     qdf = spark.createDataFrame(rows, "query_id string, term string")
-    from document_clustering_with_hadoop_mapreduce_spark.operators.bm25 import (
-        bm25_batch_oracle_sql,
-        bm25_batch_topk,
-    )
-
     got = bm25_batch_topk(matrix, qdf, k=12)
     assert_matches_oracle(got, duck, bm25_batch_oracle_sql(rows, k=12))
     assert got.filter(F.col("rank") > 12).count() == 0
 
 
-def test_batch_single_query_equals_topk(spark, matrix, query):
-    from document_clustering_with_hadoop_mapreduce_spark.operators.bm25 import (
-        bm25_batch_topk,
-    )
-
-    qdf = spark.createDataFrame([("q", t) for t in query], "query_id string, term string")
-    batch = [
-        (r["doc_id"], r["score"])
-        for r in bm25_batch_topk(matrix, qdf, k=9).orderBy("rank").collect()
-    ]
-    single = [(r["doc_id"], r["score"]) for r in bm25_topk(matrix, query, k=9).collect()]
-    assert batch == single
-
-
 def test_batch_plan_shape(spark, matrix, query):
     """Query list and per-term stats must broadcast; never a cartesian or
     nested-loop join anywhere in the batch plan."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.bm25 import (
-        bm25_batch_topk,
-    )
-
     qdf = spark.createDataFrame(
         [("q0", query[0]), ("q1", query[1])], "query_id string, term string"
     )

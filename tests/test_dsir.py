@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.dsir import (

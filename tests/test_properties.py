@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from document_clustering_with_hadoop_mapreduce_spark.functions.hashing import (
     MERSENNE_P,
     minhash_params,
-    universal_hash,
 )
 from document_clustering_with_hadoop_mapreduce_spark.sources.mtx import (
 

@@ -4,8 +4,8 @@ live root, or is named in ``KEEP`` (it stays, with the reason) or ``OPEN``
 
 Live roots are what the engine actually runs or gates: the ``@register``
 slots (their oracles are the decorator arguments), the ``pipelines.task_*``
-reference-task drivers, the ``streaming/`` twins, ``bench.py``,
-``__spark_entry__.py``, ``tools/`` and ``perfbench/``. Tests are not roots:
+reference-task drivers, the ``streaming/`` twins, ``__spark_entry__.py``,
+``tools/`` and ``perfbench/``. Tests are not roots:
 a function only a test calls is checked by nothing the engine runs, so it is
 deleted together with its tests.
 
@@ -13,12 +13,15 @@ The scan is static (AST only, no import, no Spark session). A name is an
 edge when it resolves, through the module's own top-level names or its
 imports, to a top-level definition of a package module. Local names that
 shadow a module name count as edges, so the scan over-approximates what is
-reachable; it never reports a live definition as dead.
+reachable; it never reports a live definition as dead. Because an import
+that resolves nowhere is simply not an edge, a separate test checks that
+every module the entry files import exists.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.util
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -29,14 +32,8 @@ PKG = "document_clustering_with_hadoop_mapreduce_spark"
 KEEP = {
     f"{PKG}.operators.bpe.encode_word":
         "pure-Python BPE reference the fused doc_quality slot is checked against",
-    f"{PKG}.operators.bm25.bm25_oracle_sql":
-        "DuckDB oracle for bm25_topk",
-    f"{PKG}.operators.heavyhitters.frequent_ngrams_oracle_sql":
-        "DuckDB oracle for frequent_ngrams",
-    f"{PKG}.sources.export.global_shuffle_oracle_sql":
-        "DuckDB oracle for global_shuffle",
-    f"{PKG}.sources.export._oracle_key_sql":
-        "sort key of the global_shuffle oracle",
+    f"{PKG}.operators.bm25.bm25_batch_oracle_sql":
+        "DuckDB oracle the live bm25_batch_topk is tested against",
     f"{PKG}.compat.shims.assign_nearest_n3":
         "the reference's N3 cosine quirk, kept for golden parity",
     f"{PKG}.sources.mtx.write_mtx_parts":
@@ -58,8 +55,6 @@ OPEN = {
     f"{PKG}.operators.similarity.top_similar_pairs": "engine pair of block_topk_pairs",
     f"{PKG}.operators.similarity.quantized_topk": "engine pair of quantized_ivf_topk",
     f"{PKG}.operators.dedup.star_components": "engine pair of duplicate_components",
-    f"{PKG}.operators.bm25.bm25_topk": "single-query engine beside bm25_batch_topk",
-    f"{PKG}.operators.bm25.bm25_batch_oracle_sql": "test oracle of the bench-only bm25_batch_topk",
     f"{PKG}.operators.bpe.bpe_train": "driver-side loop beside the live bpe_train_plan",
     f"{PKG}.operators.bpe._initial_symbols": "helper of bpe_train",
     f"{PKG}.operators.bpe._adjacent_pairs": "helper of bpe_train",
@@ -114,9 +109,6 @@ OPEN = {
     f"{PKG}.sources.bucketing.table_df": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.write_date_partitioned": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.compact_to_target_bytes": "test-only operator (test_bucketing)",
-    f"{PKG}.sources.export.write_training_shards": "test-only operator (test_export)",
-    f"{PKG}.sources.export.curriculum_order": "test-only operator (test_export)",
-    f"{PKG}.sources.export.curriculum_order_oracle_sql": "test-only operator (test_export)",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -232,7 +224,11 @@ class _Scan:
                         yield hit
 
     def reachable(self, extra_roots=()) -> set[tuple[str, str]]:
-        todo: list[tuple[str, str]] = list(extra_roots)
+        # an extra root whose module or definition is gone adds nothing; the
+        # stale-entry check names it
+        todo: list[tuple[str, str]] = [
+            (m, d) for m, d in extra_roots if d in getattr(self.modules.get(m), "defs", {})
+        ]
 
         def visit(module, aliases, node):
             todo.extend(self.refs(module, aliases, node))
@@ -279,7 +275,7 @@ def _is_root(module: str, name: str, stmt: ast.stmt) -> bool:
 
 
 def _entry_files() -> list[Path]:
-    files = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    files = [REPO / "__spark_entry__.py"]
     for d in ("tools", "perfbench"):
         files += sorted((REPO / d).rglob("*.py"))
     return [f for f in files if f.exists()]
@@ -300,7 +296,7 @@ def test_every_definition_is_reachable_or_kept():
     unexplained = sorted(dead - KEEP.keys() - OPEN.keys())
     assert not unexplained, (
         f"{len(unexplained)} top-level definitions are reached by no slot, task "
-        "pipeline, streaming twin, bench or tool; delete them with their tests "
+        "pipeline, streaming twin, perfbench or tool; delete them with their tests "
         "(or name them in KEEP with a reason):\n  " + "\n  ".join(unexplained)
     )
 
@@ -311,3 +307,42 @@ def test_keep_and_open_names_are_still_unreachable():
     stale_open = sorted(OPEN.keys() - dead)
     assert not stale_keep, f"KEEP entries that are gone or now reachable: {stale_keep}"
     assert not stale_open, f"OPEN entries that are gone or now reachable: {stale_open}"
+
+
+def test_stale_keep_name_is_reported_not_raised(monkeypatch):
+    """A KEEP name whose module or definition is gone shows up as stale
+    (it is not among the unreachable definitions) instead of crashing the
+    scan."""
+    gone = [f"{PKG}.sources.no_such_module.no_such_def", f"{PKG}.operators.bm25.no_such_def"]
+    for name in gone:
+        monkeypatch.setitem(KEEP, name, "stale")
+    unreachable, _ = _unreachable()
+    assert set(gone) <= KEEP.keys() - unreachable
+
+
+def _resolves(module: str, script_dir: Path) -> bool:
+    """Whether ``module`` names a file of the repo (under the repo root,
+    which tools run with on ``PYTHONPATH``, or the script's own directory)
+    or an installed top-level package. ``find_spec`` of a top-level name
+    imports nothing."""
+    parts = module.split(".")
+    for base in (REPO, script_dir):
+        if (base / parts[0]).is_dir() or (base / f"{parts[0]}.py").is_file():
+            path = base.joinpath(*parts)
+            return path.with_suffix(".py").is_file() or (path / "__init__.py").is_file()
+    return importlib.util.find_spec(parts[0]) is not None
+
+
+def test_entry_file_imports_resolve():
+    dangling = []
+    for path in _entry_files():
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                names = [node.module]
+            else:
+                continue
+            rel = path.relative_to(REPO)
+            dangling += [f"{rel}:{node.lineno}: {n}" for n in names if not _resolves(n, path.parent)]
+    assert not dangling, "entry files import modules that do not exist:\n  " + "\n  ".join(dangling)

@@ -203,43 +203,3 @@ def test_cut_duplicate_spans_planted_license_block_at_50k_docs(spark):
     assert keeper["n_removed"] == 0 and keeper["clean_text"].startswith(licence)
     sample = out.filter(F.col("doc_id") == 7).collect()[0]
     assert sample["clean_text"] == "t7 u7 v7 w7"
-
-
-def test_frequent_ngrams_planted_boilerplate_at_50k_docs(spark):
-    """Heavy-hitter mining at 10x fixture scale: a 5-token boilerplate
-    block planted in 2,000 of 50k docs (plus a sub-threshold block in 500)
-    must yield EXACTLY the block's three trigrams with exact counts — the
-    candidate pass must prune the ~0.5M singleton grams without losing a
-    heavy one, and the sub-threshold block must not leak through."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.heavyhitters import (
-        frequent_ngrams,
-    )
-
-    block = "permission is hereby granted free"  # 5 tokens -> 3 trigrams
-    minor = "rights reserved to the author"  # 500 < min_count occurrences
-    docs = spark.range(N_DOCS).select(
-        F.col("id").alias("doc_id"),
-        F.when(
-            F.col("id") < 2_000,
-            F.format_string(block + " t%s u%s v%s w%s", *([F.col("id")] * 4)),
-        )
-        .when(
-            F.col("id") < 2_500,
-            F.format_string(minor + " x%s y%s z%s", *([F.col("id")] * 3)),
-        )
-        .otherwise(
-            F.format_string(
-                "a%s b%s c%s d%s e%s f%s g%s h%s i%s j%s", *([F.col("id")] * 10)
-            ),
-        )
-        .alias("text"),
-    )
-    got = {
-        r["ngram"]: r["cnt"]
-        for r in frequent_ngrams(docs, n=3, min_count=1_000).collect()
-    }
-    assert got == {
-        "permission is hereby": 2_000,
-        "is hereby granted": 2_000,
-        "hereby granted free": 2_000,
-    }

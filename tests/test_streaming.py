@@ -213,49 +213,6 @@ def test_stream_incremental_dedup_resumes_without_replay(spark, tmp_path):
     assert got2.count() >= n1
 
 
-def test_stream_bucket_counts_equal_batch_and_finalize_exactly(spark, sf_dir):
-    """Heavy-hitter streaming twin: the streamed bucket-count state over a
-    closed corpus must equal batch pass 1 exactly, and finalizing its
-    candidates through the batch exact recount must equal the one-shot
-    miner."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.heavyhitters import (
-        _gram_stream,
-        exact_recount,
-        frequent_ngrams,
-        heavy_buckets,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.streaming.events_stream import (
-        read_documents_stream,
-        stream_gram_bucket_counts,
-    )
-
-    n_buckets = 1 << 16
-    stream = stream_gram_bucket_counts(
-        read_documents_stream(spark, f"{sf_dir}/documents.parquet"),
-        n=2,
-        n_buckets=n_buckets,
-    )
-    got = run_stream_to_memory(stream, "hh_buckets_t1")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grams = _gram_stream(docs, 2, "text")
-    batch = {
-        (r["bucket"], r["bucket_cnt"])
-        for r in heavy_buckets(grams, 1, n_buckets).collect()
-    }
-    assert {(r["bucket"], r["bucket_cnt"]) for r in got.collect()} == batch
-
-    cand = got.filter(F.col("bucket_cnt") >= 3).select("bucket")
-    finalized = {
-        (r["ngram"], r["cnt"])
-        for r in exact_recount(grams, cand, 3, n_buckets).collect()
-    }
-    oneshot = {
-        (r["ngram"], r["cnt"])
-        for r in frequent_ngrams(docs, n=2, min_count=3, n_buckets=n_buckets).collect()
-    }
-    assert finalized == oneshot and len(oneshot) > 0
-
-
 def test_stream_chunking_equals_batch(spark, sf_dir):
     """chunk_documents is a pure map-side projection, so it applies to a
     document STREAM unchanged (the structured-streaming contract for

@@ -28,11 +28,11 @@ NOT every nonzero count is a defect — triage before "fixing":
   execution — so corpus-scale cuts deliberately keep plain checkpoints
   and their construction-time jobs.
 
-Usage:
-    python tools/construction_audit.py              # all slots, sf0.001
-    python tools/construction_audit.py lsh kmeans   # substring filter
+Usage (from the repo root):
+    PYTHONPATH=. python tools/construction_audit.py              # all slots, sf0.001
+    PYTHONPATH=. python tools/construction_audit.py lsh kmeans   # substring filter
 
-Prints one JSON line: {"slots": {name: {"jobs": N, "sec": s}}, "sf": ...}.
+Prints one JSON line: {"slots": {name: {"jobs": N, "sec": s}}, "sf_dir": ...}.
 """
 
 from __future__ import annotations
@@ -42,9 +42,6 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bench import parse_sf
 from document_clustering_with_hadoop_mapreduce_spark.plans.registry import all_queries
 from document_clustering_with_hadoop_mapreduce_spark.session import get_spark
 
@@ -74,7 +71,7 @@ def main() -> None:
             "sec": round(time.perf_counter() - t0, 3),
         }
     ranked = dict(sorted(out.items(), key=lambda kv: -kv[1]["jobs"]))
-    print(json.dumps({"slots": ranked, "sf": parse_sf(SF_DIR)}))
+    print(json.dumps({"slots": ranked, "sf_dir": SF_DIR}))
 
 
 if __name__ == "__main__":

@@ -1,12 +1,12 @@
 """Isolate and time registered queries with the noop sink (guide §1.4).
 
-Usage: python tools/isolate_query.py [-n RUNS] [name ...]
+Usage: PYTHONPATH=. python tools/isolate_query.py [-n RUNS] [name ...]
 
 Times each named query (default: all 50) at $SPARK_GRAFT_SF_DIR with
 ``df.write.format('noop')`` — every column of every row is computed and
 discarded, so the number is the computation, not the sink and not a
 count()-pruned subtree. One warm-up run, then min-of-N (default 2).
-Prints one JSON line {"noop_sec": {name: sec, ...}, "sf": ...}.
+Prints one JSON line {"noop_sec": {name: sec, ...}, "sf_dir": ...}.
 """
 
 from __future__ import annotations
@@ -50,8 +50,7 @@ def main() -> None:
         out[name] = round(min(runs), 3)
         print(f"{name}: {out[name]}", file=sys.stderr, flush=True)
     spark.sparkContext.setJobDescription(None)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    print(json.dumps({"noop_sec": out, "sf": float(sf) if sf.replace('.', '').isdigit() else sf}))
+    print(json.dumps({"noop_sec": out, "sf_dir": SF_DIR}))
     spark.stop()
 
 

@@ -10,10 +10,10 @@ both engines still agree) — only a nonzero ``disagreements`` is the
 tripwire firing (see operators/similarity.py::_round6 and
 plans/round6_monitor.py for scope + precision caveats).
 
-    python tools/round6_boundary_scan.py          # $SPARK_GRAFT_SF_DIR
+    PYTHONPATH=. python tools/round6_boundary_scan.py    # $SPARK_GRAFT_SF_DIR
 
 Prints one JSON line:
-{"slots": {name: {rows, disagreements, near_boundary}}, "sf": ...}.
+{"slots": {name: {rows, disagreements, near_boundary}}, "sf_dir": ...}.
 The same scan gates every round in tests/test_round6_boundary.py.
 """
 
@@ -21,11 +21,7 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bench import parse_sf
 from document_clustering_with_hadoop_mapreduce_spark.plans.round6_monitor import scan_all
 from document_clustering_with_hadoop_mapreduce_spark.session import get_spark
 
@@ -37,10 +33,7 @@ def main() -> None:
     spark = get_spark("round6-scan", master=f"local[{CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
     slots = scan_all(spark, SF_DIR)
-    print(json.dumps({
-        "slots": slots,
-        "sf": parse_sf(SF_DIR),
-    }))
+    print(json.dumps({"slots": slots, "sf_dir": SF_DIR}))
     spark.stop()
 
 
