@@ -4,20 +4,26 @@ The reference pivots TF-IDF triples into DENSE zero-padded vector strings
 (A11, ref sources/2.2/source/ConvertInput.java:23-49) and ships k x V
 centroid strings through job config. At 100 TB vocabulary x corpus scale
 that dense pivot is the scalability killer. The Spark-native design keeps
-the matrix SPARSE and expresses nearest-centroid assignment as relational
-algebra:
+the matrix SPARSE and the centroids sparse too: the driver holds them as
+(cluster, term, w) rows — k x centroid-nnz values, never k x V — and
+ships them to the executors as ONE term-keyed local relation
+(term, ws[k]), broadcast:
 
     dist²(d, c) = ||d||² + ||c||² - 2·(d · c)
 
-- per-doc sum-of-squares: one groupBy(doc)
-- per-centroid sum-of-squares: tiny aggregate, broadcast
-- cross terms d·c: the triples JOIN the (broadcast) sparse centroid set on
-  `term`, then groupBy(doc, cluster) sums w·w — shuffle bounded by
-  nnz x k, never materializing any dense vector
-- argmin per doc via one more window-free array-min
+- ||c||²: a per-cluster constant, summed on the driver from the held rows
+- ||d||² and all k dot products d·c: ONE groupBy(doc_id) over
+  matrix ⋈ broadcast(ws) (a left join; terms no centroid holds weigh 0)
+- argmin per doc: one array_min over the k rounded distances
+
+The Lloyd recompute (``sparse_lloyd``) is one more groupBy(cluster, term)
+over the members' terms; its collect brings back the new centroids and
+the iteration's WCSS together — one aggregate per Lloyd step, as the
+reference's one MapReduce job per iteration (``KMeansMapper`` assigns,
+``KMeansReducer`` averages).
 
 Every step is a DataFrame op, so the WHOLE assignment is SQL-expressible
-and DuckDB-oracle-checked (plans/queries_cluster.py) — unlike the dense
+and DuckDB-oracle-checked (plans/queries_doc_cluster.py) — unlike the dense
 MLlib path, which is rows-only checked.
 
 ``pivot_to_sparse_vectors`` (A11) is still provided for MLlib interop.
@@ -25,7 +31,11 @@ MLlib path, which is rows-only checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from itertools import groupby, islice
+from typing import NamedTuple
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -44,49 +54,120 @@ def seeded_sparse_centroids(matrix: DataFrame, k: int, weight_col: str = "tfidf"
     )
 
 
+class _HeldCentroids(NamedTuple):
+    """Sparse centroids held on the driver, in the shape the kernel ships.
+
+    ``clusters``: the non-empty cluster ids, ascending (k' of them);
+    ``ws``: local relation (term, ws array<double>[k']) — ws[j] is cluster
+    ``clusters[j]``'s weight for the term, null where it has none;
+    ``c_ss``: each cluster's ||c||², same order."""
+
+    clusters: list[int]
+    ws: DataFrame
+    c_ss: list[float]
+
+    def frame(self) -> DataFrame:
+        """The centroids as (cluster, term, w) rows — lazy, from ``ws``."""
+        ids = F.array(*[F.lit(c) for c in self.clusters])
+        return (
+            self.ws.select("term", F.posexplode("ws").alias("j", "w"))
+            .where(F.col("w").isNotNull())
+            .select(ids[F.col("j")].alias("cluster"), "term", "w")
+        )
+
+
+def _hold(spark: SparkSession, rows) -> _HeldCentroids:
+    """(cluster, term, w) rows -> ``_HeldCentroids``. The relation is built
+    from an Arrow table, so Spark plans it as a LocalRelation (a Python
+    list would be parallelized into an RDD of pickled rows). Rows are
+    taken in (cluster, term) order, so ||c||² is summed in one fixed
+    order."""
+    clusters = sorted({r[0] for r in rows})
+    slot = {c: j for j, c in enumerate(clusters)}
+    ws: dict[str, list[float | None]] = {}
+    c_ss = [0.0] * len(clusters)
+    for c, term, w in sorted(tuple(r) for r in rows):
+        ws.setdefault(term, [None] * len(clusters))[slot[c]] = w
+        c_ss[slot[c]] += w * w
+    table = pa.table({
+        "term": pa.array(list(ws), pa.string()),
+        "ws": pa.array(list(ws.values()), pa.list_(pa.float64())),
+    })
+    return _HeldCentroids(clusters, spark.createDataFrame(table), c_ss)
+
+
+def _collect_held(centroids: DataFrame) -> _HeldCentroids:
+    return _hold(
+        centroids.sparkSession, centroids.select("cluster", "term", "w").collect()
+    )
+
+
+def _doc_dists(
+    matrix: DataFrame,
+    cents: _HeldCentroids,
+    weight_col: str,
+    round_decimals: int,
+    *aggs,
+) -> DataFrame:
+    """The per-doc kernel: ONE groupBy(doc_id) over matrix ⋈ broadcast(ws)
+    -> (doc_id, ..., dists), ``dists`` holding one struct(dist_sq,
+    cluster) per held centroid. Docs sharing no term with a centroid
+    still get a finite distance (||d||² + ||c||²), exactly as the dense
+    math would. ``aggs`` are extra per-doc aggregates riding the same
+    groupBy."""
+    x = F.col(weight_col)
+    per_doc = (
+        matrix.join(F.broadcast(cents.ws), "term", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.sum(x * x).alias("doc_ss"),
+            *[
+                F.sum(x * F.coalesce(F.col("ws")[j], F.lit(0.0))).alias(f"dot{j}")
+                for j in range(len(cents.clusters))
+            ],
+            *aggs,
+        )
+    )
+    dists = F.array(*[
+        F.struct(
+            F.round(
+                # clamp: algebraic distance is >= 0, fp cancellation can
+                # give -1e-15 (and a "-0.0" that breaks cross-engine compare)
+                F.greatest(
+                    F.col("doc_ss") + F.lit(c_ss) - 2 * F.col(f"dot{j}"), F.lit(0.0)
+                ),
+                round_decimals,
+            ).alias("dist_sq"),
+            F.lit(c).alias("cluster"),
+        )
+        for j, (c, c_ss) in enumerate(zip(cents.clusters, cents.c_ss))
+    ])
+    return per_doc.withColumn("dists", dists)
+
+
 def sparse_dists(
     matrix: DataFrame,
     centroids: DataFrame,
     weight_col: str = "tfidf",
     round_decimals: int = 6,
-    doc_ss: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, cluster, dist_sq) for EVERY doc x centroid pair.
 
     The full grid behind ``sparse_assign`` — n x k rows, the frame the
-    silhouette evaluation also needs. Docs sharing no term with a
-    centroid still get a finite distance (||d||² + ||c||²), exactly as
-    the dense math would.
+    silhouette evaluation also needs: the per-doc kernel's k distances,
+    exploded. ``centroids`` (cluster, term, w) is collected to the driver
+    (k x centroid-nnz rows)."""
+    per_doc = _doc_dists(matrix, _collect_held(centroids), weight_col, round_decimals)
+    return per_doc.select("doc_id", F.inline("dists")).select("doc_id", "cluster", "dist_sq")
 
-    ``doc_ss`` optionally supplies the per-doc sum of squares — it is
-    iteration-INVARIANT, so loop callers (``sparse_lloyd``) compute it
-    once and pass the cached frame instead of re-aggregating the matrix
-    every iteration.
-    """
-    if doc_ss is None:
-        doc_ss = matrix.groupBy("doc_id").agg(
-            F.sum(F.col(weight_col) * F.col(weight_col)).alias("doc_ss")
-        )
-    cent_ss = centroids.groupBy("cluster").agg(F.sum(F.col("w") * F.col("w")).alias("c_ss"))
 
-    dots = (
-        matrix.join(F.broadcast(centroids), "term")
-        .groupBy("doc_id", "cluster")
-        .agg(F.sum(F.col(weight_col) * F.col("w")).alias("dot"))
-    )
-    # every doc x every centroid (docs with zero overlap included)
-    grid = doc_ss.crossJoin(F.broadcast(cent_ss))
-    return grid.join(dots, ["doc_id", "cluster"], "left").withColumn(
-        "dist_sq",
-        F.round(
-            # clamp: algebraic distance is >= 0, fp cancellation can
-            # give -1e-15 (and a "-0.0" that breaks cross-engine compare)
-            F.greatest(
-                F.col("doc_ss") + F.col("c_ss") - 2 * F.coalesce(F.col("dot"), F.lit(0.0)),
-                F.lit(0.0),
-            ),
-            round_decimals,
-        ),
+def _argmin(per_doc: DataFrame, *keep: str) -> DataFrame:
+    """The kernel's nearest centroid -> (doc_id, cluster, dist_sq, *keep):
+    array_min orders the structs by the ROUNDED distance, then the lowest
+    cluster id (cross-engine determinism)."""
+    b = F.array_min("dists")
+    return per_doc.select(
+        "doc_id", b["cluster"].alias("cluster"), b["dist_sq"].alias("dist_sq"), *keep
     )
 
 
@@ -106,16 +187,15 @@ def sparse_assign(
     centroids: DataFrame,
     weight_col: str = "tfidf",
     round_decimals: int = 6,
-    doc_ss: DataFrame | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment on sparse vectors (squared euclidean).
 
     ``matrix``: (doc_id, term, <weight_col>); ``centroids``: (cluster,
-    term, w) — sparse, broadcast (k x avg-nnz rows, i.e. tiny vs corpus).
-    ``sparse_dists`` + ``assign_from_dists``.
-    """
-    return assign_from_dists(
-        sparse_dists(matrix, centroids, weight_col, round_decimals, doc_ss)
+    term, w) — sparse, collected to the driver and broadcast (k x avg-nnz
+    rows, i.e. tiny vs corpus). The same kernel and argmin as every
+    ``sparse_lloyd`` iteration."""
+    return _argmin(
+        _doc_dists(matrix, _collect_held(centroids), weight_col, round_decimals)
     )
 
 
@@ -200,50 +280,11 @@ def pivot_to_sparse_vectors(matrix: DataFrame, weight_col: str = "tfidf") -> Dat
     return pairs.select("doc_id", to_vec_udf("pairs").alias("features"))
 
 
-def recompute_sparse_centroids(
-    matrix: DataFrame,
-    assignments: DataFrame,
-    weight_col: str = "tfidf",
-    round_decimals: int | None = None,
-    top_t: int | None = None,
-) -> DataFrame:
-    """Sparse centroid recompute: mean over cluster members per term,
-    zeros implicit — sum(w) / n_members(cluster), keyed (cluster, term).
-    Two narrow aggregates; centroid nnz is bounded by the union of member
-    nnz, so centroids STAY sparse (the reference's dense reducer held
-    k x V doubles in memory, ref sources/2.2/source/KMeansReducer.java).
-
-    ``round_decimals`` rounds centroid weights in-plan so iterated
-    centroids stay comparable against the DuckDB oracle.
-
-    ``top_t`` truncates each centroid to its T strongest terms (weight
-    desc, term asc tie-break) — the standard sparse-projection step of
-    large-scale spherical k-means. After one mean, an exact centroid's
-    support is the UNION of member supports (~vocabulary-sized for big
-    clusters), which would make the next iteration's broadcast k x V;
-    truncation caps it at k x T. Exact paths (oracle gates) leave this
-    None."""
-    n_members = assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-    w = F.col("w_sum") / F.col("n")
-    if round_decimals is not None:
-        w = F.round(w, round_decimals)
-    cents = (
-        matrix.join(assignments.select("doc_id", "cluster"), "doc_id")
-        .groupBy("cluster", "term")
-        .agg(F.sum(weight_col).alias("w_sum"))
-        .join(F.broadcast(n_members), "cluster")
-        .select("cluster", "term", w.alias("w"))
-    )
-    if top_t is not None:
-        rank_w = Window.partitionBy("cluster").orderBy(
-            F.col("w").desc(), F.col("term").asc()
-        )
-        cents = (
-            cents.withColumn("__rn", F.row_number().over(rank_w))
-            .filter(F.col("__rn") <= top_t)
-            .drop("__rn")
-        )
-    return cents
+def _top_t(rows, t: int) -> list:
+    """Each cluster's T strongest (cluster, term, w) rows: weight desc,
+    term asc tie-break."""
+    rows = sorted(rows, key=lambda r: (r[0], -r[2], r[1]))
+    return [r for _, g in groupby(rows, key=lambda r: r[0]) for r in islice(g, t)]
 
 
 def sparse_lloyd(
@@ -258,105 +299,104 @@ def sparse_lloyd(
     cache_matrix: bool = True,
 ) -> tuple[DataFrame, DataFrame, list[float]]:
     """Full iterative Lloyd on the SPARSE matrix — task 2.2 end-to-end
-    without ever materializing a dense vector or driver-side centroids.
+    without ever materializing a dense vector. Returns (assignments,
+    centroids, per-iter WCSS).
 
-    Per iteration: join-based sparse assignment (see ``sparse_assign``) +
-    sparse centroid recompute. Centroids live as a (cluster, term, w)
-    DataFrame, cached and broadcast into the next assignment — at 100 TB
-    the centroid relation is k x avg-doc-nnz rows (KBs), while dense
-    k x V would be GBs. Returns (assignments, centroids, per-iter WCSS).
+    The seeded centroids are collected once; from then on the driver
+    holds them (k x centroid-nnz values — at 100 TB that is KBs, while
+    dense k x V would be GBs). Each iteration is ONE query: the per-doc
+    kernel (``sparse_assign``'s groupBy(doc_id), which also collects each
+    doc's (term, w) list) assigns every doc; its members' terms are
+    exploded into ONE groupBy(cluster, term) giving the new means and
+    the WCSS partials; one collect brings both back. Clusters left empty
+    drop out of the next iteration.
 
     ``round_centroids`` enables the cross-engine float discipline (6dp
     centroids + decimal WCSS sums) so the whole trace is verifiable
     against the unrolled DuckDB oracle in plans/queries_doc_cluster.py.
+    Every rounding and the decimal sum run in-plan — the driver only
+    holds the values Spark rounded.
 
     ``final_centroids=False`` skips the last iteration's centroid
-    recompute (the result would describe an assignment nobody sees) —
-    one full shuffle+action saved for trace-only callers.
+    recompute (the result would describe an assignment nobody sees): the
+    last iteration runs only the WCSS aggregate.
 
     ``on_iteration(it, assigned, new_cents, wcss)`` is invoked after each
-    iteration's recompute with the iteration's cached assignment frame,
-    the NEW sparse centroid frame (None when the final recompute is
-    skipped) and the iteration WCSS — the hook the reference-layout
-    artifact sinks attach to (sources/artifacts.py; ref per-iteration
-    writes at sources/2.2/source/KMeansReducer.java:25-131).
+    iteration with the iteration's (doc_id, cluster, dist_sq) assignment
+    frame, the NEW (cluster, term, w) centroid frame (None when the final
+    recompute is skipped) and the iteration WCSS — the hook the
+    reference-layout artifact sinks attach to (sources/artifacts.py; ref
+    per-iteration writes at sources/2.2/source/KMeansReducer.java:25-131).
+    Both frames are lazy; neither is cached.
 
     ``centroid_top_t`` enables the sparse-projection scale path: each
-    recomputed centroid keeps only its T strongest terms, capping the
-    per-iteration broadcast at k x T instead of the k x ~V an exact mean
-    densifies to (see ``recompute_sparse_centroids``). Approximate by
-    definition — the oracle-gated trace leaves it None.
+    recomputed centroid keeps only its T strongest terms (weight desc,
+    term asc tie-break), capping the per-iteration broadcast at k x T.
+    After one mean, an exact centroid's support is the UNION of member
+    supports (~vocabulary-sized for big clusters); truncation is the
+    standard sparse-projection step of large-scale spherical k-means.
+    Approximate by definition — the oracle-gated trace leaves it None.
 
-    The matrix feeds three subtrees per iteration (doc norms, dot
-    products, recompute) across SEPARATE jobs — exchange reuse cannot
-    span jobs, so it is cached here for the loop's lifetime (standard
-    iterative-ML practice) unless the caller already cached it.
+    The matrix feeds the seed collect and every iteration's query —
+    separate jobs, so it is cached here for the loop's lifetime unless
+    the caller already cached it; ``cache_matrix=False`` is for callers
+    whose frame is already materialized (e.g. a localCheckpoint-ed
+    tf-idf matrix — is_cached cannot see RDD-level persistence, so
+    without the flag we'd pin a second copy).
     """
-    # cache_matrix=False for callers whose frame is already materialized
-    # (e.g. a localCheckpoint-ed tf-idf matrix — is_cached cannot see
-    # RDD-level persistence, so without the flag we'd pin a THIRD copy)
     we_cached = cache_matrix and not matrix.is_cached
     if we_cached:
         matrix = matrix.cache()
-    cents = seeded_sparse_centroids(matrix, k, weight_col).cache()
-    # per-doc ||d||^2 never changes across iterations — one aggregate,
-    # cached, reused by every assignment
-    doc_ss = matrix.groupBy("doc_id").agg(
-        F.sum(F.col(weight_col) * F.col(weight_col)).alias("doc_ss")
-    ).cache()
+    spark = matrix.sparkSession
+    cents = _collect_held(seeded_sparse_centroids(matrix, k, weight_col))
+    dist = F.col("dist_sq")
+    if round_centroids is not None:
+        dist = dist.cast("decimal(28,6)")
+
+    def total(s):
+        return F.round(s.cast("double"), 6) if round_centroids is not None else s
+
+    terms = F.collect_list(F.struct("term", F.col(weight_col).alias("w"))).alias("terms")
     wcss_trace: list[float] = []
     assigned = None
     for it in range(max_iter):
-        new_assigned = sparse_assign(matrix, cents, weight_col, doc_ss=doc_ss).cache()
-        if round_centroids is not None:
-            wcss_col = F.round(
-                F.sum(F.col("dist_sq").cast("decimal(28,6)")).cast("double"), 6
-            )
-        else:
-            wcss_col = F.sum("dist_sq")
+        per_doc = _argmin(_doc_dists(matrix, cents, weight_col, 6, terms), "terms")
+        assigned = per_doc.select("doc_id", "cluster", "dist_sq")
         new_cents = None
         if final_centroids or it < max_iter - 1:
-            new_cents = recompute_sparse_centroids(
-                matrix, new_assigned, weight_col,
-                round_decimals=round_centroids, top_t=centroid_top_t,
-            ).cache()
-            # ONE action per iteration (round 14, guide §1/§5): the WCSS
-            # scalar and the new-centroid materialization used to be two
-            # sequential jobs (agg collect + count). Unioning the WCSS
-            # aggregate with a 1-row count over new_cents computes BOTH in
-            # one job — in local mode the assignment cache populates once
-            # and feeds both branches (on a multi-executor cluster the two
-            # union branches can compute sparse_assign partitions twice,
-            # before either has cached them); new_cents' cache fills as
-            # its branch evaluates,
-            # and the WCSS value that lands in the trace is produced by
-            # the IDENTICAL aggregate sub-plan as before (bit-equal).
-            rows = (
-                new_assigned.agg(wcss_col.alias("w"))
-                .select(F.lit(0).alias("t"), F.col("w"))
-                .unionAll(
-                    new_cents.agg(
-                        F.count(F.lit(1)).cast("double").alias("w")
-                    ).select(F.lit(1).alias("t"), F.col("w"))
+            # each doc's first term carries the doc once: its member count
+            # and its distance (the WCSS partial)
+            first = F.col("pos") == 0
+            parts = (
+                per_doc.select("cluster", dist.alias("d"), F.posexplode("terms").alias("pos", "t"))
+                .groupBy("cluster", F.col("t.term").alias("term"))
+                .agg(
+                    F.sum("t.w").alias("w_sum"),
+                    F.count(F.when(first, 1)).alias("n"),
+                    F.sum(F.when(first, F.col("d"))).alias("d"),
                 )
+            )
+            mean = F.col("w_sum") / F.sum("n").over(Window.partitionBy("cluster"))
+            if round_centroids is not None:
+                mean = F.round(mean, round_centroids)
+            # the WCSS window goes first: its single partition already
+            # satisfies the per-cluster window, which then needs no shuffle
+            rows = (
+                parts.withColumn("wcss", total(F.sum("d").over(Window.partitionBy())))
+                .select("cluster", "term", mean.alias("w"), "wcss")
                 .collect()
             )
-            wcss = {r["t"]: r["w"] for r in rows}[0]
+            wcss = rows[0]["wcss"]
+            rows = [r[:3] for r in rows]
+            if centroid_top_t is not None:
+                rows = _top_t(rows, centroid_top_t)
+            cents = _hold(spark, rows)
+            new_cents = cents.frame()
         else:
-            wcss = new_assigned.agg(wcss_col.alias("w")).collect()[0]["w"]
+            wcss = per_doc.agg(total(F.sum(dist))).collect()[0][0]
         wcss_trace.append(float(wcss))
-        if assigned is not None:
-            assigned.unpersist()  # stale frame — don't leak cache per round
-        assigned = new_assigned
-        if new_cents is not None:
-            # new_cents is materialized by the fused job above; only now is
-            # the OLD centroid frame (an input to new_assigned's plan) safe
-            # to release
-            cents.unpersist()
-            cents = new_cents
         if on_iteration is not None:
             on_iteration(it, assigned, new_cents, wcss_trace[-1])
-    doc_ss.unpersist()
     if we_cached:
         matrix.unpersist()
-    return assigned, cents, wcss_trace
+    return assigned, cents.frame(), wcss_trace

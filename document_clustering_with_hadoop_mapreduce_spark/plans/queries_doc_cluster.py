@@ -34,8 +34,9 @@ from .registry import _n_docs, register
 K = 5
 
 # sparse centroids = tf-idf rows of the K lowest doc_ids; distance by
-# ||d||^2 + ||c||^2 - 2*dot with a left join for zero-overlap pairs —
-# the exact algebra of operators.doc_cluster.sparse_assign.
+# ||d||^2 + ||c||^2 - 2*dot, a zero-overlap pair's dot being 0 — the
+# algebra of operators.doc_cluster.sparse_assign (which takes all K dots
+# in one per-doc aggregate; the oracle spells out the grid).
 _ASSIGN_CTES = f"""{TFIDF_CTE},
 seed_docs AS (
   SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS cluster
@@ -66,32 +67,23 @@ assign AS (
 
 
 def _tfidf_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Lazily materialize the tf-idf matrix: its consumers (seeded
-    # centroids, doc_ss, dots, top-terms ranking) each reference it
-    # several times and Catalyst does NOT unify the subtrees (the
-    # tokenize-lambda canonicalization failure — see operators/dedup.py),
-    # so without this the corpus is re-tokenized up to 12x per query
-    # (plan-audited at sf0.01). One nnz-sized executor-storage
-    # materialization replaces those repeat scans at any scale.
+    # Lazily materialize the tf-idf matrix: its consumers (the seed
+    # collect, every Lloyd iteration's per-doc kernel, the top-terms
+    # ranking) each reference it and Catalyst does NOT unify the subtrees
+    # (the tokenize-lambda canonicalization failure — see
+    # operators/dedup.py), so without this the corpus is re-tokenized per
+    # consumer. One nnz-sized executor-storage materialization replaces
+    # those repeat scans at any scale.
     # ONE materialization: with a driver-known n_docs (parquet footer
     # count, mirrors the reference's totalDocs side-channel) the count
     # matrix inside tfidf is single-consumer and needs no checkpoint of
-    # its own; only the tf-idf output is pinned here for the 4+
-    # downstream consumers.
-    # Explicit repartition BEFORE the checkpoint: AQE coalesces the small
-    # tf-idf shuffle output to ONE partition, and the checkpoint then
-    # pins that layout — every downstream map-side pass (the Lloyd loop's
-    # per-iteration assignment joins especially) would run on one core.
-    # An explicit partition count is exempt from AQE coalescing; the
-    # extra nnz-row exchange is paid once at materialization.
-    # HASH on doc_id, not round-robin: every downstream aggregate here
-    # groups by doc_id or (doc_id, cluster) — doc_ss, the dots rollup
-    # after the broadcast centroid join, and the argmin — and
-    # HashPartitioning(doc_id) satisfies all three ClusteredDistributions,
-    # so Catalyst drops those exchanges instead of re-shuffling nnz rows
-    # per consumer per iteration (measured sf0.1/local[32]: single
-    # assignment 0.85 -> 0.35 s, 3-iteration sparse trace 12.0 -> 7.7 s
-    # vs the round-robin shape, values identical / hash-green).
+    # its own; only the tf-idf output is pinned here.
+    # Explicit partition count BEFORE the checkpoint: AQE coalesces the
+    # small tf-idf shuffle output to ONE partition, and the checkpoint
+    # then pins that layout — every downstream map-side pass (each Lloyd
+    # iteration's broadcast join and partial per-doc aggregate) would run
+    # on one core. An explicit partition count is exempt from AQE
+    # coalescing; the extra nnz-row exchange is paid once.
     docs = load_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     return (
@@ -296,8 +288,9 @@ def _sparse_lloyd_oracle(k: int, iters: int) -> str:
     "doc_kmeans_sparse_trace",
     _sparse_lloyd_oracle(K, 3),
     "task 2.2 full loop VALUE-GATED, sparse end-to-end: iterative Lloyd "
-    "over tf-idf triples (join-based assignment + sparse centroid "
-    "recompute, centroids never densified, 6dp float discipline) -> "
+    "over tf-idf triples (driver-held sparse centroids, one per-doc "
+    "assignment aggregate + one (cluster, term) recompute aggregate per "
+    "iteration, centroids never densified, 6dp float discipline) -> "
     "per-iteration WCSS, hash-verified against an unrolled DuckDB CTE",
     tags=("cluster", "task2.2"),
 )

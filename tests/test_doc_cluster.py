@@ -89,6 +89,74 @@ def test_sparse_lloyd_centroid_truncation_caps_broadcast(spark, sf_dir):
     assert assigned.count() == n_docs
 
 
+def test_sparse_lloyd_leaves_cache_as_found(spark, sf_dir):
+    """With ``cache_matrix=False`` the loop caches nothing of its own: no
+    Dataset enters the CacheManager and no RDD stays persisted after the
+    call. (The persisted-RDD count may fall meanwhile — the context
+    cleaner drops earlier tests' frames — so only growth is a leak.)"""
+    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import sparse_lloyd
+
+    m = _matrix(spark, sf_dir).localCheckpoint(eager=True)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    was_empty, n_rdds = cache.isEmpty(), rdds.size()
+    sparse_lloyd(m, k=3, max_iter=2, round_centroids=6, cache_matrix=False)
+    assert cache.isEmpty() == was_empty
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= n_rdds
+
+
+# docs 0 and 1 are identical, so seed clusters 0 and 1 are the same
+# centroid: every distance ties between them and the lowest-cluster
+# tie-break leaves cluster 1 empty from the first assignment on
+_TIE_DOCS = [
+    (0, "spark join filter window"),
+    (1, "spark join filter window"),
+    (2, "hash table scan merge"),
+    (3, "spark join hash table"),
+    (4, "window filter merge scan scan"),
+    (5, "stream batch query row"),
+    (6, "stream batch join spark"),
+    (7, "query row row table merge"),
+]
+
+
+def test_sparse_lloyd_empty_cluster_drops_out_like_oracle(spark):
+    """Driver-side centroid bookkeeping: the tie-break empties cluster 1,
+    which drops out while clusters 0 and 2 keep their ids; the WCSS trace
+    equals the unrolled DuckDB oracle over the same documents."""
+    import duckdb
+    import pandas as pd
+
+    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import sparse_lloyd
+    from document_clustering_with_hadoop_mapreduce_spark.plans.queries_doc_cluster import (
+        _sparse_lloyd_oracle,
+    )
+
+    docs = spark.createDataFrame(_TIE_DOCS, "doc_id BIGINT, text STRING")
+    m = tfidf(term_doc_counts(docs), n_docs=len(_TIE_DOCS))
+    first = {}
+
+    def on_iteration(it, assigned, new_cents, wcss):
+        if it == 0:
+            first["assigned"] = {r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in assigned.collect()}
+            first["clusters"] = sorted({r["cluster"] for r in new_cents.collect()})
+
+    assigned, cents, trace = sparse_lloyd(
+        m, k=3, max_iter=3, round_centroids=6, final_centroids=False,
+        on_iteration=on_iteration,
+    )
+    assert first["assigned"][1] == (0, 0.0)
+    assert first["clusters"] == [0, 2]
+    assert {r["cluster"] for r in assigned.collect()} <= {0, 2}
+    assert sorted({r["cluster"] for r in cents.collect()}) == [0, 2]
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(_TIE_DOCS, columns=["doc_id", "text"]))
+    want = con.execute(_sparse_lloyd_oracle(3, 3)).fetchall()
+    con.close()
+    assert [f"{w:.6f}" for w in trace] == [f"{w:.6f}" for _, w in want]
+
+
 def test_pandas_udf_matches_jvm_normalize(spark, sf_dir):
     """The Arrow pandas-UDF escape hatch computes exactly what the JVM
     higher-order-function path computes (so the slow path can never

@@ -89,11 +89,13 @@ def test_asof_join_single_user_exchange(spark, sf_dir):
 
 
 def test_doc_kmeans_assign_broadcasts_centroids(spark, sf_dir):
-    """Sparse assignment: centroid side (k docs' tf-idf rows) broadcasts;
-    the corpus-side matrix is never replicated."""
+    """Sparse assignment: the term-keyed centroid relation broadcasts into
+    an equi-join on term; the corpus-side matrix is never replicated, and
+    no doc x centroid grid is built by a nested-loop join."""
     df = all_queries()["doc_kmeans_assign"].spark(spark, sf_dir)
     plan = _plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
@@ -313,13 +315,14 @@ def test_all_registered_plans_have_no_scale_hazards(spark, sf_dir):
     """Blanket invariant over ALL registered queries: no CartesianProduct
     (an unbounded all-pairs plan is never acceptable) and no
     BatchEvalPython (row-at-a-time Python) anywhere; BroadcastNestedLoopJoin
-    only where the broadcast side is bounded by construction (k-row
-    centroid frames, ≤25-row probe sets) — listed explicitly so any new
+    only where the broadcast side is bounded by construction (≤25-row
+    probe sets, 1-row scalars) — listed explicitly so any new
     query that falls back to a nested-loop join fails this test until the
     bound is justified here."""
     bnlj_bounded = {
-        # broadcast side is the k-row sparse-centroid frame (k=5)
-        "doc_kmeans_assign",
+        # broadcast side is clustering_metrics' 1-ROW corpus-size scalar
+        # and its other 1-row metric aggregates (cluster_eval.py
+        # crossJoins); the centroid side is an equi-join on term
         "doc_cluster_top_terms",
         # broadcast side is the 25-row probe set of the brute-force baseline
         "knn_bruteforce",
