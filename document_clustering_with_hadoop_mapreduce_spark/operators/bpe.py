@@ -135,8 +135,8 @@ def bpe_train(
     (count desc, pair asc — deterministic), one lazy map-side array
     rewrite. Stops early when the best pair's mass drops below
     ``min_frequency``. The k-row-at-a-time driver loop is the same
-    iterate-on-a-bounded-frame pattern as ``lloyd_kmeans`` — the state
-    crossing the driver is ONE pair per iteration.
+    iterate-on-a-bounded-frame pattern as ``lloyd_trace_deterministic`` —
+    the state crossing the driver is ONE pair per iteration.
     """
     syms = words.select(
         F.col("cnt").cast("long").alias("cnt"),

@@ -317,9 +317,11 @@ def sparse_lloyd(
     Every rounding and the decimal sum run in-plan — the driver only
     holds the values Spark rounded.
 
+    The returned assignments are made against the returned centroids.
     ``final_centroids=False`` skips the last iteration's centroid
-    recompute (the result would describe an assignment nobody sees): the
-    last iteration runs only the WCSS aggregate.
+    recompute: the last iteration runs only the WCSS aggregate, and both
+    returned frames are that iteration's (its assignment and the
+    centroids it was made against).
 
     ``on_iteration(it, assigned, new_cents, wcss)`` is invoked after each
     iteration with the iteration's (doc_id, cluster, dist_sq) assignment
@@ -397,6 +399,11 @@ def sparse_lloyd(
         wcss_trace.append(float(wcss))
         if on_iteration is not None:
             on_iteration(it, assigned, new_cents, wcss_trace[-1])
+    if final_centroids and max_iter > 0:
+        # the loop's last assignment was made against the centroids BEFORE
+        # the final recompute; the returned pair must agree, so re-assign
+        # against the returned centroids (lazy: no job unless it is read)
+        assigned = _argmin(_doc_dists(matrix, cents, weight_col, 6))
     if we_cached:
         matrix.unpersist()
     return assigned, cents.frame(), wcss_trace

@@ -6,9 +6,10 @@ Reference parity (SURVEY.md §2.6 M1-M9):
   (ref sources/2.2/source/KMeans.java:167-195). Here the scale path is
   ``pyspark.ml.clustering.KMeans`` (seeded, cached features, centroids
   broadcast internally; k-means|| init is M3's Bahmani et al. algorithm,
-  built in). A DataFrame-native Lloyd loop is also provided for traced
-  per-iteration artifacts (M9: losses, WCSS) and for oracle-checkable
-  single-step semantics.
+  built in). ``lloyd_trace_deterministic`` is the dense Lloyd loop with a
+  fixed iteration count and the cross-engine float discipline, so its
+  per-iteration WCSS trace (M9) is value-gated by a DuckDB oracle; the
+  sparse loop of the document slots is ``doc_cluster.sparse_lloyd``.
 
 Scale notes: assignment is a broadcast nearest-neighbor "join" (ref J5) —
 k×d floats to every executor, argmin via an array-of-struct min, no
@@ -17,8 +18,6 @@ aggregate (map-side partial). Features are cached once.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -158,139 +157,6 @@ def assign_nearest_arrow(
     return df.mapInPandas(assign, schema)
 
 
-def recompute_centroids(
-    assigned: DataFrame,
-    features_col: str = "embedding",
-    round_decimals: int | None = None,
-) -> DataFrame:
-    """M6: element-wise mean per cluster via posexplode + group-avg.
-
-    Two narrow shuffles on (cluster, dim) then (cluster) — no whole-group
-    buffering (the reference's reducer held every member vector in RAM,
-    ref sources/2.2/source/KMeansReducer.java:153-192).
-
-    ``round_decimals`` rounds each mean coordinate in-plan (engine-side
-    round, same semantics as the DuckDB oracle's) so iterated centroids
-    stay bit-comparable across engines.
-    """
-    exploded = assigned.select(
-        "cluster", F.posexplode(_as_double_array(F.col(features_col))).alias("dim", "x")
-    )
-    m = F.avg("x")
-    if round_decimals is not None:
-        m = F.round(m, round_decimals)
-    means = exploded.groupBy("cluster", "dim").agg(m.alias("m"))
-    return (
-        means.groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-        .select("cluster", F.transform("dm", lambda s: s["m"]).alias("centroid"))
-    )
-
-
-@dataclass
-class LloydTrace:
-    iteration: int
-    wcss: float
-    max_shift: float
-
-
-def random_dense_init(k: int, dim: int, seed: int = 42) -> list[list[float]]:
-    """M2 reference parity (sources/2.2/source/KMeans.java:146-155): a
-    k x dim dense centroid matrix of uniform [0,1) draws, each rounded to
-    3 decimals (the reference formats every draw through a default
-    ``DecimalFormat``).
-
-    The reference's ``new Random()`` is UNSEEDED — irreproducible by
-    construction — so this engine substitutes a salted-md5 uniform draw:
-    the matrix is a pure function of (seed, j, t), identical across runs,
-    engines, and partitionings, and value-gated by a pure-python oracle
-    (tests/test_kmeans.py). Driver footprint is k x dim floats — the same
-    matrix the reference itself builds driver-side and ships via its
-    Configuration string; for vocabulary-sized dims prefer
-    ``seeded_sparse_centroids`` / ``scalable_kmeans_init``."""
-    import hashlib
-
-    two60 = float(1 << 60)
-    return [
-        [
-            round(
-                int(hashlib.md5(f"{seed}:{j}:{t}".encode()).hexdigest()[:15], 16) / two60,
-                3,
-            )
-            for t in range(dim)
-        ]
-        for j in range(k)
-    ]
-
-
-def lloyd_kmeans(
-    df: DataFrame,
-    k: int,
-    features_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_iter: int = 10,
-    tol: float = 1e-5,
-    init_centroids: list[list[float]] | None = None,
-) -> tuple[DataFrame, list[list[float]], list[LloydTrace]]:
-    """Traced Lloyd iterations (reference M7-M9 semantics, sane math).
-
-    Deterministic init: the k rows with smallest ``id_col`` (the reference's
-    unseeded ``Random`` init is irreproducible by design — SURVEY.md §5);
-    pass ``init_centroids`` (e.g. ``random_dense_init`` for M2 parity) to
-    override. Centroids live on the driver (k×d floats — same as MLlib) and
-    enter the plan as literals, i.e. broadcast; the data never leaves the
-    cluster.
-
-    Returns (assignments, final_centroids, per-iteration trace).
-    """
-    feats = df.select(id_col, _as_double_array(F.col(features_col)).alias(features_col)).cache()
-    if init_centroids is not None:
-        centroids = [list(c) for c in init_centroids]
-        if len(centroids) != k:
-            raise ValueError(f"init_centroids has {len(centroids)} rows, expected k={k}")
-        dims = {len(c) for c in centroids}
-        if len(dims) != 1:
-            raise ValueError(f"init_centroids rows have inconsistent dimensions: {sorted(dims)}")
-        # cheap 1-row probe: a wrong-dim init (e.g. a stale random_dense_init)
-        # would otherwise flow into the literal-array distance math and fail
-        # late (or silently compute over mismatched lengths)
-        first = feats.select(F.size(features_col).alias("d")).head()
-        if first is not None and first["d"] != dims.pop():
-            raise ValueError(
-                f"init_centroids dimension {len(centroids[0])} != data "
-                f"dimension {first['d']} in column {features_col!r}"
-            )
-    else:
-        init_rows = feats.orderBy(id_col).limit(k).collect()
-        centroids = [list(r[features_col]) for r in init_rows]
-
-    trace: list[LloydTrace] = []
-    for it in range(max_iter):
-        assigned = assign_nearest(feats, centroids, features_col, round_decimals=None).cache()
-        stats = assigned.agg(F.sum("dist_sq").alias("wcss")).collect()[0]
-        new_rows = recompute_centroids(assigned, features_col).collect()
-        assigned.unpersist()
-        new_centroids = list(centroids)
-        for r in new_rows:
-            new_centroids[r["cluster"]] = list(r["centroid"])
-        max_shift = max(
-            max(abs(a - b) for a, b in zip(old, new)) if old != new else 0.0
-            for old, new in zip(centroids, new_centroids)
-        )
-        trace.append(LloydTrace(it, float(stats["wcss"]), float(max_shift)))
-        centroids = new_centroids
-        if max_shift < tol:
-            break
-    # the in-loop assignment is always one centroid update stale (on the
-    # tol exit too: a point within ~tol of a bisector can flip when judged
-    # against the post-update centroids) — re-assign against the FINAL
-    # centroids on EVERY exit path so the returned (assignments, centroids)
-    # pair is self-consistent by construction.
-    assigned = assign_nearest(feats, centroids, features_col, round_decimals=None)
-    feats.unpersist()
-    return assigned, centroids, trace
-
-
 def lloyd_trace_deterministic(
     df: DataFrame,
     k: int,
@@ -309,7 +175,7 @@ def lloyd_trace_deterministic(
     seeded MLlib fit (non-deterministic across engines) cannot provide.
 
     Returns [(iteration, wcss), ...]; empty clusters keep their previous
-    centroid (same as ``lloyd_kmeans``).
+    centroid.
     """
     feats = df.select(id_col, _as_double_array(F.col(features_col)).alias(features_col)).cache()
     init_rows = feats.orderBy(id_col).limit(k).collect()

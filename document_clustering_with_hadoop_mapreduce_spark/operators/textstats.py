@@ -378,104 +378,6 @@ def sample_to_budget(
     )
 
 
-def temperature_targets(
-    masses: dict[str, int], total_budget: int, alpha: float = 0.7
-) -> dict[str, float]:
-    """Capacity-respecting temperature allocation (pure python, shared by
-    the operator and its tests): split ``total_budget`` tokens across
-    strata proportional to mass_i^alpha (the Llama/XLM-R sampling
-    temperature — alpha = 1 is proportional, alpha -> 0 approaches
-    uniform, lifting low-resource strata), never exceeding a stratum's
-    available mass. Capacity caps are resolved by waterfilling: cap every
-    over-allocated stratum at its mass, redistribute the surplus over the
-    rest by the same alpha-weights, repeat — terminates in <= k rounds
-    (each round permanently caps >= 1 stratum) and delivers exactly
-    min(total_budget, sum of masses) tokens.
-    """
-    if total_budget < 0:
-        raise ValueError(f"total_budget must be >= 0, got {total_budget}")
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    targets = {s: 0.0 for s in masses}
-    active = {s for s, m in masses.items() if m > 0}
-    remaining = float(min(total_budget, sum(masses.values())))
-    while remaining > 1e-9 and active:
-        w = {s: float(masses[s]) ** alpha for s in sorted(active)}
-        tot_w = sum(w.values())
-        alloc = {s: remaining * w[s] / tot_w for s in w}
-        capped = {s for s in active if targets[s] + alloc[s] >= masses[s]}
-        if not capped:
-            for s in alloc:
-                targets[s] += alloc[s]
-            break
-        for s in capped:
-            remaining -= masses[s] - targets[s]
-            targets[s] = float(masses[s])
-        active -= capped
-    return targets
-
-
-def temperature_mixture(
-    documents: DataFrame,
-    total_budget: int,
-    alpha: float = 0.7,
-    stratum_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """The temperature-based mixing planner: (stratum, available_tokens,
-    target_tokens, rate) allocating one TOTAL token budget across strata
-    by mass^alpha instead of per-stratum budget dicts (``mixture_rates``'
-    explicit-recipe form). rate = target / available, 6dp, feeds
-    ``stratified_sample`` exactly like ``mixture_rates``.
-
-    One stratum-key aggregate; the allocation itself runs driver-side on
-    the k-row stats (the k-means-centroid size class) via
-    ``temperature_targets``.
-    """
-    stats = documents.groupBy(F.col(stratum_col).alias("stratum")).agg(
-        F.sum(token_count(F.col(text_col))).cast("long").alias("available_tokens")
-    )
-    rows = stats.collect()
-    masses = {r["stratum"]: int(r["available_tokens"]) for r in rows}
-    targets = temperature_targets(masses, total_budget, alpha)
-    spark = documents.sparkSession
-    out = [
-        (
-            s,
-            masses[s],
-            int(round(targets[s])),
-            round(min(1.0, targets[s] / masses[s]), 6) if masses[s] > 0 else 1.0,
-        )
-        for s in sorted(masses)
-    ]
-    return spark.createDataFrame(
-        out, "stratum string, available_tokens long, target_tokens long, rate double"
-    )
-
-
-def sample_to_temperature_budget(
-    documents: DataFrame,
-    total_budget: int,
-    alpha: float = 0.7,
-    stratum_col: str = "lang",
-    text_col: str = "text",
-    salt: str = "sample-v1",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """``temperature_mixture`` composed with ``stratified_sample`` — the
-    one-knob mixing recipe ("B tokens at temperature alpha") as a pure
-    map-side hash filter, deterministic like ``sample_to_budget``."""
-    rates = {
-        r["stratum"]: r["rate"]
-        for r in temperature_mixture(
-            documents, total_budget, alpha, stratum_col, text_col
-        ).collect()
-    }
-    return stratified_sample(
-        documents, rates, stratum_col=stratum_col, default_rate=1.0, salt=salt, id_col=id_col
-    )
-
-
 def _seq_overflow_guard(max_tokens: int):
     """``seq``, unless it exceeds the 2^32-per-stream encoding capacity —
     then raise in-plan (one comparison per row) instead of letting
@@ -576,47 +478,6 @@ def sequence_pack(
     )
 
 
-# PII patterns: explicit ASCII classes only (cross-engine: Java regex and
-# RE2 agree on these constructs; no \s, no lookaround — RE2 has neither).
-PII_PATTERNS: dict[str, str] = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "url": r"https?://[^ \t\n\r]+",
-    "phone": r"\+?[0-9][0-9()\-. ]{7,}[0-9]",
-}
-
-
-def pii_scrub(
-    documents: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    replacement: str = "",
-) -> DataFrame:
-    """Training-data hygiene: strip emails, URLs and phone-number shapes
-    from the text, and count what was removed per category.
-
-    Map-side only (three regexp_replace + three regexp counts in one
-    projection — no shuffle, no Python). Patterns are deliberately
-    conservative ASCII shapes shared verbatim with the RE2/DuckDB test
-    oracle; a production pipeline would layer locale-specific patterns the
-    same way. Emits (doc_id, clean_text, n_emails, n_urls, n_phones).
-    """
-    text = F.col(text_col)
-    counts = {
-        name: F.size(F.regexp_extract_all(text, F.lit(pat), 0))
-        for name, pat in PII_PATTERNS.items()
-    }
-    cleaned = text
-    for pat in PII_PATTERNS.values():
-        cleaned = F.regexp_replace(cleaned, pat, replacement)
-    return documents.select(
-        F.col(id_col).alias("doc_id"),
-        cleaned.alias("clean_text"),
-        counts["email"].alias("n_emails"),
-        counts["url"].alias("n_urls"),
-        counts["phone"].alias("n_phones"),
-    )
-
-
 def doc_fingerprints(documents: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Deterministic content fingerprint: md5-60bit of the cleaned,
     whitespace-normalized text (portable to the oracle)."""
@@ -627,66 +488,6 @@ def doc_fingerprints(documents: DataFrame, text_col: str = "text", id_col: str =
         F.col(id_col).alias("doc_id"),
         md5_int60(normalized).alias("fingerprint"),
         F.length(normalized).alias("norm_len"),
-    )
-
-
-# C4-style boilerplate cleaning (Raffel et al., "Exploring the Limits of
-# Transfer Learning with a Unified Text-to-Text Transformer", JMLR 2020,
-# §2.2): keep only lines that read like prose sentences, then drop pages
-# that have too little left. Shared verbatim with the DuckDB test oracle —
-# explicit ASCII whitespace classes, no \s (Java vs RE2 drift).
-C4_TERMINAL_RE = "[.!?\"'][ \\t\\r]*$"  # line ends in terminal punctuation
-C4_LINE_WS_RE = "[ \\t\\r]+"
-
-
-def c4_line_filter(
-    documents: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words_per_line: int = 5,
-    min_kept_lines: int = 3,
-) -> DataFrame:
-    """C4 page cleaning as ONE map-side projection (no shuffle, no Python):
-
-    line level — keep a line iff it ends in terminal punctuation
-    (``. ! ? " '``), has >= ``min_words_per_line`` whitespace words, and
-    does not contain the word "javascript" (case-insensitive);
-    page level — drop the page when fewer than ``min_kept_lines`` lines
-    survive, or the ORIGINAL page contains "lorem ipsum" (any case) or a
-    curly brace (code, not prose).
-
-    Emits (doc_id, clean_text, n_lines, n_kept_lines) for survivors;
-    ``clean_text`` is the kept lines re-joined with newlines. At 100 TB
-    this is the same shape as every other filter here: a narrow projection
-    + predicate that Catalyst pushes wherever the page stream already
-    flows — nothing moves.
-    """
-    text = F.col(text_col)
-    lines = F.split(text, "\n")
-    kept = F.filter(
-        lines,
-        lambda l: l.rlike(C4_TERMINAL_RE)
-        & (F.size(F.split(F.trim(l), C4_LINE_WS_RE)) >= min_words_per_line)
-        & ~F.lower(l).contains("javascript"),
-    )
-    return (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            text.alias("__text"),
-            F.size(lines).alias("n_lines"),
-            kept.alias("__kept"),
-        )
-        .filter(
-            (F.size("__kept") >= min_kept_lines)
-            & ~F.lower("__text").contains("lorem ipsum")
-            & ~F.col("__text").contains("{")
-        )
-        .select(
-            "doc_id",
-            F.array_join("__kept", "\n").alias("clean_text"),
-            "n_lines",
-            F.size("__kept").alias("n_kept_lines"),
-        )
     )
 
 
@@ -729,58 +530,6 @@ def unigram_cross_entropy(matrix: DataFrame, materialize: bool = True) -> DataFr
                 -F.sum(F.col("cnt") * F.log(F.col("__tc") / F.col("__m"))) / F.sum("cnt"), 6
             ).alias("cross_entropy"),
             F.sum("cnt").alias("n_tokens"),
-        )
-    )
-
-
-def perplexity_buckets(
-    matrix: DataFrame,
-    cuts: tuple[float, float] = (1 / 3, 2 / 3),
-    exact: bool = True,
-) -> DataFrame:
-    """CCNet's head/middle/tail split (Wenzek et al. 2020 §4.3): bucket
-    every document by where its ``unigram_cross_entropy`` score falls
-    against the corpus-wide ``cuts`` quantiles — ``head`` (lowest
-    cross-entropy, most LM-like text) through ``tail`` (highest, the
-    garbled/unusual end). CCNet trains on head+middle and drops or
-    down-weights tail; the bucket label is the mixing key.
-
-    Output: (doc_id, cross_entropy, n_tokens, bucket). Thresholds are
-    ROUNDED to 6 decimals before the comparison in both engines, so the
-    boundary predicate is deterministic cross-engine even when scores tie
-    at a cut.
-
-    Scale shape: the quantile input is ONE double per document (corpus-count
-    rows, not token rows). ``exact=True`` uses ``percentile`` (==DuckDB
-    ``quantile_cont``, the oracle-parity path) whose final merge holds the
-    score column of one aggregation partition; at the 100 TB corpus scale
-    pass ``exact=False`` for ``approx_percentile`` (t-digest, map-side
-    merges, bounded memory) — the bucket EDGES shift within the sketch
-    error but the mechanism is identical. The 2-value threshold row rides a
-    broadcast crossJoin; everything else stays on the score frame.
-    """
-    lo, hi = cuts
-    if not (0.0 < lo < hi < 1.0):
-        raise ValueError(f"cuts must satisfy 0 < lo < hi < 1, got {cuts}")
-    # two consumers of the score frame (threshold agg + the labeling pass)
-    # and its lineage re-runs the whole LM join — materialize the
-    # one-row-per-doc frame once
-    scored = unigram_cross_entropy(matrix).localCheckpoint(eager=False)
-    fn = "percentile" if exact else "approx_percentile"
-    th = scored.agg(
-        F.round(F.expr(f"{fn}(cross_entropy, {lo!r})"), 6).alias("__t_lo"),
-        F.round(F.expr(f"{fn}(cross_entropy, {hi!r})"), 6).alias("__t_hi"),
-    )
-    return (
-        scored.crossJoin(F.broadcast(th))
-        .select(
-            "doc_id",
-            "cross_entropy",
-            "n_tokens",
-            F.when(F.col("cross_entropy") <= F.col("__t_lo"), F.lit("head"))
-            .when(F.col("cross_entropy") <= F.col("__t_hi"), F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
         )
     )
 
@@ -945,131 +694,6 @@ def bigram_cross_entropy(
     )
 
 
-def _aes_key(weight: Column, salt: str, id_col: str) -> Column:
-    """The Efraimidis-Spirakis selection key ln(u)/w with u in (0,1] drawn
-    deterministically from the salted id hash — ONE definition shared by
-    the global and per-stratum samplers (their determinism contract is
-    that keys are identical)."""
-    from ..functions.hashing import md5_int60
-
-    u = (
-        md5_int60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))) + F.lit(1)
-    ) / F.lit(float(1 << 60))
-    return F.log(u) / weight
-
-
-def weighted_sample(
-    documents: DataFrame,
-    n: int,
-    weight: Column,
-    salt: str = "sample-v1",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """EXACT-size weighted sampling without replacement (Efraimidis &
-    Spirakis 2006, algorithm A-ES): each row draws a deterministic
-    uniform u in (0,1] from its salted id hash and scores
-
-        key = ln(u) / weight
-
-    the top ``n`` keys ARE a weight-proportional sample without
-    replacement. Complements ``stratified_sample``/``sample_to_budget``
-    (Bernoulli, size-in-expectation): this one returns exactly
-    min(n, rows-with-positive-weight) rows, at the cost of a top-n
-    instead of a pure filter.
-
-    ``weight`` is any numeric Column expression (e.g.
-    ``token_count(F.col("text"))`` to sample proportional to token mass);
-    rows with weight <= 0 or null are excluded (selection probability 0).
-    Deterministic and replacement-free by construction: re-running with
-    the same salt returns the identical row set; changing the salt redraws.
-
-    Scale shape: one map-side projection + a global top-n
-    (TakeOrderedAndProject — per-partition heaps of n rows merged on the
-    driver, NO global sort, no shuffle of the corpus). Keep ``n`` in the
-    "fits on the driver" class (samples, not partitions of the corpus);
-    for corpus-sized weighted draws use per-stratum Bernoulli instead.
-    ``ln(u)/w`` (not ``u^(1/w)``) keeps keys well-separated for tiny
-    weights instead of underflowing toward 1.
-    """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    return (
-        documents.withColumn("__w", weight.cast("double"))
-        .where(F.col("__w") > 0)
-        .withColumn("__key", _aes_key(F.col("__w"), salt, id_col))
-        .orderBy(F.desc("__key"), F.asc(id_col))
-        .limit(n)
-        .drop("__w", "__key")
-    )
-
-
-def length_bucket_batches(
-    documents: DataFrame,
-    batch_size: int = 32,
-    num_streams: int = 1024,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: str = "batch-v1",
-) -> DataFrame:
-    """Padding-efficient batch assignment for inference/eval: group
-    documents into fixed-count batches of length-similar members, so each
-    batch pads to ITS max length instead of the corpus max (the dynamic
-    batching / "bucketing by length" trick every serving and eval harness
-    uses; padding waste is what it minimizes).
-
-    Output per doc: ``stream``, ``batch`` (index within the stream),
-    ``batch_id`` (globally unique ``stream * 2^32 + batch``),
-    ``pos_in_batch`` (0-based), ``n_tokens`` and ``batch_max_tokens`` (the
-    batch's padded length — ``sum(batch_max_tokens * batch_size)`` vs
-    ``sum(n_tokens)`` IS the padding-waste accounting).
-
-    Scale shape: a global length sort would serialize the corpus, so the
-    same salted-stream discipline as ``sequence_pack``: docs hash into
-    ``num_streams`` independent streams, each stream sorts its members by
-    (n_tokens, doc_id) in one window pass and chunks consecutive runs of
-    ``batch_size`` — ONE hash exchange, per-stream task sorts, and within
-    a stream the batching is optimal for consecutive-chunk batching. The
-    final short batch of each stream (< batch_size docs) is retained with
-    its true member count. Deterministic: pure function of (salt, member
-    ids, token counts).
-    """
-    if batch_size < 1:
-        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    if num_streams < 1:
-        raise ValueError(f"num_streams must be >= 1, got {num_streams}")
-    from ..functions.hashing import md5_int60
-
-    staged = documents.select(
-        F.col(id_col).alias("doc_id"),
-        # null text counts 0 tokens (token_count(NULL) is NULL, which would
-        # sort nulls-first AND silently drop out of the padding-waste sums)
-        F.coalesce(token_count(F.col(text_col)), F.lit(0)).alias("n_tokens"),
-        F.pmod(
-            md5_int60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
-            F.lit(num_streams),
-        ).cast("int").alias("stream"),
-    )
-    w = Window.partitionBy("stream").orderBy(F.asc("n_tokens"), F.asc("doc_id"))
-    ranked = staged.withColumn("__rn", F.row_number().over(w) - 1)
-    batched = ranked.select(
-        "doc_id",
-        "n_tokens",
-        "stream",
-        F.expr(f"__rn div {batch_size}").cast("int").alias("batch"),
-        (F.col("__rn") % batch_size).alias("pos_in_batch"),
-    )
-    wb = Window.partitionBy("stream", "batch")
-    return batched.select(
-        "doc_id",
-        "n_tokens",
-        "stream",
-        "batch",
-        (F.col("stream").cast("long") * F.lit(1 << 32) + F.col("batch")).alias("batch_id"),
-        "pos_in_batch",
-        F.max("n_tokens").over(wb).alias("batch_max_tokens"),
-    )
-
-
 def chunk_documents(
     documents: DataFrame,
     chunk_tokens: int = 512,
@@ -1133,100 +757,6 @@ def chunk_documents(
             F.size("__c.toks").alias("n_tokens"),
             F.array_join("__c.toks", " ").alias("chunk_text"),
         )
-    )
-
-
-def weighted_sample_per_stratum(
-    documents: DataFrame,
-    n_per_stratum: int,
-    weight: Column,
-    stratum_col: str = "lang",
-    salt: str = "sample-v1",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """``weighted_sample`` per group: exactly min(n, positive-weight rows)
-    A-ES draws FROM EACH stratum — the "N exemplars per language/source"
-    shape (few-shot pools, per-slice eval sets, stratified gold data)
-    that a global top-n cannot express and Bernoulli sampling only hits
-    in expectation.
-
-    Same deterministic ln(u)/w keys; selection is a per-stratum window
-    top-n (ONE hash exchange on the stratum key + per-group task sorts —
-    never a global sort; the weighted_sample TakeOrdered trick does not
-    apply because every group keeps its own n). Group sizes bound the
-    sort, not the corpus.
-    """
-    if n_per_stratum < 1:
-        raise ValueError(f"n_per_stratum must be >= 1, got {n_per_stratum}")
-    w = Window.partitionBy(stratum_col).orderBy(
-        F.desc("__key"), F.asc(id_col)
-    )
-    return (
-        documents.withColumn("__w", weight.cast("double"))
-        .where(F.col("__w") > 0)
-        .withColumn("__key", _aes_key(F.col("__w"), salt, id_col))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n_per_stratum)
-        .drop("__w", "__key", "__rn")
-    )
-
-
-def fim_split(
-    documents: DataFrame,
-    middle_frac: float = 0.25,
-    salt: str = "fim-v1",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Fill-in-the-middle example generation (Bavarian et al. 2022,
-    "Efficient Training of Language Models to Fill in the Middle"; same
-    shape as T5 span corruption with one span): deterministically cut
-    each document's token stream into (prefix, middle, suffix) so the
-    trainer can emit ``prefix + suffix -> middle`` infilling examples.
-
-    The middle spans ``max(1, round(middle_frac * n))`` tokens; its start
-    is drawn uniformly from the valid range by the salted id hash (the
-    ``hash_split`` discipline — RNG-free, reproducible, and re-salting
-    yields a fresh independent cut for another epoch). Documents with
-    fewer than 3 tokens have no non-degenerate cut and are excluded.
-    Output: (doc_id, n_tokens, mid_start 1-based, mid_len, prefix,
-    middle, suffix) with texts re-joined single-spaced.
-
-    Scale shape: one map-side projection (tokenize, ONE hash draw for
-    the start — the length is deterministic from n and middle_frac —
-    and three slices); zero shuffle, the augmentation fuses into the
-    export scan.
-    """
-    from ..functions.hashing import md5_int60
-
-    if not 0.0 < middle_frac < 1.0:
-        raise ValueError(f"middle_frac must be in (0, 1), got {middle_frac}")
-    toks = F.split(F.trim(F.col(text_col)), SPLIT_RE)
-    staged = (
-        documents.where(F.col(text_col).isNotNull())
-        .where(F.trim(F.col(text_col)) != "")
-        .select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
-        .where(F.size("__toks") >= 3)
-    )
-    n = F.size("__toks")
-    # middle length capped so prefix and suffix are both non-empty
-    m = F.least(
-        n - F.lit(2), F.greatest(F.lit(1), F.round(n * F.lit(middle_frac)).cast("int"))
-    )
-    # start uniform in [2, n - m] (1-based; leaves >= 1 prefix + suffix tok)
-    span = n - m - F.lit(1)  # number of valid starts
-    h = md5_int60(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
-    start = F.lit(2) + F.pmod(h, span.cast("long")).cast("int")
-    return staged.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        start.alias("mid_start"),
-        m.alias("mid_len"),
-        F.array_join(F.slice("__toks", F.lit(1), start - 1), " ").alias("prefix"),
-        F.array_join(F.slice("__toks", start, m), " ").alias("middle"),
-        F.array_join(
-            F.slice("__toks", start + m, n - (start + m) + F.lit(1)), " "
-        ).alias("suffix"),
     )
 
 

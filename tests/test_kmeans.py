@@ -1,6 +1,6 @@
 """Clustering invariants (SURVEY.md §5 item 4) — randomness-proof checks
-the reference never had: nearest-assignment consistency, WCSS monotonicity,
-seeded reproducibility, label agreement."""
+the reference never had: nearest-assignment consistency, seeded
+reproducibility, label agreement."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
     assign_nearest,
-    lloyd_kmeans,
     mllib_kmeans,
 )
 from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
@@ -28,31 +27,6 @@ def test_assign_nearest_is_argmin(spark, sf_dir):
         dists = [sum((a - b) ** 2 for a, b in zip(v, c)) for c in centroids]
         assert r["cluster"] == dists.index(min(dists))
         assert abs(r["dist_sq"] - min(dists)) < 1e-9
-
-
-def test_lloyd_wcss_non_increasing(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, _, trace = lloyd_kmeans(emb, k=4, max_iter=6)
-    wcss = [t.wcss for t in trace]
-    assert len(wcss) >= 2
-    for a, b in zip(wcss, wcss[1:]):
-        assert b <= a + 1e-6, f"WCSS increased: {wcss}"
-
-
-def test_lloyd_assignments_match_final_centroids(spark, sf_dir):
-    """On a max_iter exit the returned assignments must be re-derived from
-    the FINAL centroids (not one update stale) — MLlib's contract."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import assign_nearest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids, _ = lloyd_kmeans(emb, k=3, max_iter=3)
-    got = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
-    feats = emb.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding"))
-    want = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_nearest(feats, centroids, round_decimals=None).collect()
-    }
-    assert got == want
 
 
 def test_mllib_kmeans_seeded_reproducible(spark, sf_dir):
@@ -155,54 +129,6 @@ def test_n3_similarity_compat(spark):
                       F.array(*[F.lit(2 * x) for x in a])).alias("s")
     ).collect()[0]["s"]
     assert abs(sim1 - sim2) > 1e-6
-
-
-def test_random_dense_init_matches_pure_python_oracle():
-    """M2 parity: the deterministic dense init is a pure function of
-    (seed, j, t) — reproduce it independently with hashlib and compare
-    every cell; draws are uniform [0,1) rounded to 3dp like the
-    reference's DecimalFormat output."""
-    import hashlib
-
-    from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import random_dense_init
-
-    got = random_dense_init(k=4, dim=7, seed=11)
-    assert len(got) == 4 and all(len(r) == 7 for r in got)
-    for j in range(4):
-        for t in range(7):
-            h = int(hashlib.md5(f"11:{j}:{t}".encode()).hexdigest()[:15], 16)
-            assert got[j][t] == round(h / float(1 << 60), 3)
-            assert 0.0 <= got[j][t] < 1.0
-    # deterministic across calls, sensitive to the seed
-    assert got == random_dense_init(k=4, dim=7, seed=11)
-    assert got != random_dense_init(k=4, dim=7, seed=12)
-
-
-def test_lloyd_accepts_dense_random_init(spark, sf_dir):
-    """lloyd_kmeans(init_centroids=random_dense_init(...)) runs the full
-    traced loop from the M2-style matrix: WCSS non-increasing, k clusters
-    labeled from the given matrix's row indices."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
-        lloyd_kmeans,
-        random_dense_init,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()[0])
-    init = random_dense_init(k=3, dim=dim, seed=42)
-    assigned, cents, trace = lloyd_kmeans(emb, k=3, max_iter=4, init_centroids=init)
-    assert len(cents) == 3
-    wcss = [t.wcss for t in trace]
-    assert all(b <= a * (1 + 1e-9) for a, b in zip(wcss, wcss[1:]))
-    assert assigned.select("cluster").distinct().count() <= 3
-    # wrong-dim init (stale dim) fails loudly at entry, not mid-plan
-    import pytest
-
-    with pytest.raises(ValueError, match="dimension"):
-        lloyd_kmeans(emb, k=3, init_centroids=random_dense_init(k=3, dim=dim + 1, seed=42))
-    with pytest.raises(ValueError, match="inconsistent"):
-        lloyd_kmeans(emb, k=2, init_centroids=[[0.0] * dim, [0.0] * (dim - 1)])
 
 
 def test_assign_nearest_arrow_magnitude_guard(spark):

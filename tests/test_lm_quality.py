@@ -58,65 +58,3 @@ def test_unigram_cross_entropy_plan(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     # map-side partial aggregation on both aggregates
     assert plan.count("HashAggregate") >= 4
-
-
-# CCNet head/middle/tail: mirror perplexity_buckets exactly — thresholds
-# rounded to 6dp in both engines before the boundary compare.
-_LO, _HI = 1 / 3, 2 / 3
-_BUCKETS_ORACLE = f"""{MATRIX_CTE},
-totals AS (SELECT term, sum(cnt)::BIGINT AS tc FROM matrix GROUP BY term),
-mass AS (SELECT sum(tc)::DOUBLE AS m FROM totals),
-xent AS (
-  SELECT doc_id,
-         round(-sum(cnt * ln(t.tc / mass.m)) / sum(cnt), 6) AS cross_entropy,
-         sum(cnt)::BIGINT AS n_tokens
-  FROM matrix JOIN totals t USING (term), mass
-  GROUP BY doc_id
-),
-th AS (
-  SELECT round(quantile_cont(cross_entropy, {_LO!r}), 6) AS t_lo,
-         round(quantile_cont(cross_entropy, {_HI!r}), 6) AS t_hi
-  FROM xent
-)
-SELECT doc_id, cross_entropy, n_tokens,
-       CASE WHEN cross_entropy <= t_lo THEN 'head'
-            WHEN cross_entropy <= t_hi THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM xent, th"""
-
-
-def test_perplexity_buckets_match_oracle(spark, sf_dir, duck):
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-        perplexity_buckets,
-    )
-
-    m = term_doc_counts(load_table(spark, sf_dir, "documents"))
-    assert_matches_oracle(perplexity_buckets(m, cuts=(_LO, _HI)), duck, _BUCKETS_ORACLE)
-
-
-def test_perplexity_buckets_semantics(spark, sf_dir):
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-        perplexity_buckets,
-    )
-    import pytest
-    from pyspark.sql import functions as F
-
-    m = term_doc_counts(load_table(spark, sf_dir, "documents"))
-    df = perplexity_buckets(m).cache()
-    n = df.count()
-    counts = {r["bucket"]: r["n"] for r in df.groupBy("bucket").agg(F.count("*").alias("n")).collect()}
-    # terciles: each bucket holds roughly a third (ties can skew boundaries)
-    assert set(counts) == {"head", "middle", "tail"}
-    assert all(v >= n // 6 for v in counts.values())
-    # ordering invariant: max(head) <= min(middle) <= ... via scores
-    agg = df.groupBy("bucket").agg(F.min("cross_entropy").alias("lo"), F.max("cross_entropy").alias("hi"))
-    b = {r["bucket"]: r for r in agg.collect()}
-    assert b["head"]["hi"] <= b["middle"]["lo"] and b["middle"]["hi"] <= b["tail"]["lo"]
-    df.unpersist()
-    with pytest.raises(ValueError, match="cuts"):
-        perplexity_buckets(m, cuts=(0.7, 0.3))
-    # the approx path labels with the same mechanism (values may differ
-    # inside t-digest error; shape must hold)
-    approx = perplexity_buckets(m, exact=False)
-    assert approx.columns == ["doc_id", "cross_entropy", "n_tokens", "bucket"]
-    assert approx.count() == n

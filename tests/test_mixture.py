@@ -74,91 +74,3 @@ def test_sample_to_budget_hits_budget_in_expectation(spark, sf_dir):
     # deterministic: same salt, same sample
     again = sample_to_budget(docs, BUDGETS)
     assert kept.exceptAll(again).count() == 0 and again.exceptAll(kept).count() == 0
-
-
-class TestTemperatureMixture:
-    def test_exact_delivery_and_caps(self):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            temperature_targets,
-        )
-
-        masses = {"en": 1_000_000, "fr": 100_000, "sw": 1_000}
-        t = temperature_targets(masses, 500_000, alpha=0.7)
-        assert abs(sum(t.values()) - 500_000) < 1e-6
-        for s, m in masses.items():
-            assert t[s] <= m + 1e-9
-
-    def test_alpha_one_is_proportional(self):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            temperature_targets,
-        )
-
-        masses = {"a": 300, "b": 100}
-        t = temperature_targets(masses, 200, alpha=1.0)
-        assert abs(t["a"] / t["b"] - 3.0) < 1e-9
-
-    def test_lower_alpha_lifts_rare_strata(self):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            temperature_targets,
-        )
-
-        masses = {"big": 1_000_000, "small": 10_000}
-        flat = temperature_targets(masses, 100_000, alpha=0.3)
-        prop = temperature_targets(masses, 100_000, alpha=1.0)
-        assert flat["small"] > prop["small"]
-
-    def test_waterfilling_redistributes_capped_surplus(self):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            temperature_targets,
-        )
-
-        # uniform (alpha=0) split of 300 over capacities (50, 1000, 1000):
-        # the 100-per-stratum ask caps the first at 50; the 50 surplus
-        # splits over the remaining two -> 125 each
-        t = temperature_targets({"x": 50, "y": 1000, "z": 1000}, 300, alpha=0.0)
-        assert t["x"] == 50 and abs(t["y"] - 125) < 1e-9 and abs(t["z"] - 125) < 1e-9
-
-    def test_budget_above_total_keeps_everything(self):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            temperature_targets,
-        )
-
-        masses = {"a": 10, "b": 20}
-        t = temperature_targets(masses, 1_000, alpha=0.7)
-        assert t == {"a": 10.0, "b": 20.0}
-
-    def test_operator_frame_and_expected_delivery(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from document_clustering_with_hadoop_mapreduce_spark.functions.text import (
-            token_count,
-        )
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            sample_to_temperature_budget,
-            temperature_mixture,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        total = docs.select(F.sum(token_count(F.col("text")))).collect()[0][0]
-        budget = int(total * 0.4)
-        plan = temperature_mixture(docs, budget, alpha=0.7)
-        rows = plan.collect()
-        assert abs(sum(r["target_tokens"] for r in rows) - budget) <= len(rows)
-        assert all(0.0 <= r["rate"] <= 1.0 for r in rows)
-
-        kept = sample_to_temperature_budget(docs, budget, alpha=0.7)
-        kept_tokens = kept.select(F.sum(token_count(F.col("text")))).collect()[0][0]
-        # expectation-level delivery: hash sampling is per-document
-        assert 0.25 * total < kept_tokens < 0.55 * total
-
-    def test_validation(self):
-        import pytest as pt
-
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            temperature_targets,
-        )
-
-        with pt.raises(ValueError, match="total_budget"):
-            temperature_targets({"a": 1}, -1)
-        with pt.raises(ValueError, match="alpha"):
-            temperature_targets({"a": 1}, 1, alpha=-0.1)

@@ -31,6 +31,8 @@ FAST_SMOKE = {
     "dedup_components",
     "top_terms_global",
     "kmeans_assign_seeded",
+    # the only value gate on the dense Lloyd loop (lloyd_trace_deterministic)
+    "kmeans_lloyd_trace",
     "term_filter_min3",
     "tfidf_standard",
     # the paper's task 2.2 loop and the two slots on its per-doc kernel

@@ -250,42 +250,6 @@ def test_contamination_matches_python_ngram_overlap(spark, docs, n_eval):
     assert kept == {i for i, _ in rows} - set(want)
 
 
-@pytest.mark.slow
-@SETTINGS
-@given(
-    lines=st.lists(
-        st.tuples(st.lists(_WORDS, min_size=0, max_size=7), st.sampled_from([".", "!", "?", '"', "", " x"])),
-        min_size=0,
-        max_size=8,
-    )
-)
-def test_c4_filter_matches_python_rules(spark, lines):
-    """c4_line_filter == the same rules applied in pure Python, any page."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import c4_line_filter
-
-    text = "\n".join(" ".join(ws) + end for ws, end in lines)
-    frame = spark.createDataFrame([(1, text)], "doc_id long, text string")
-
-    def keep_line(l):
-        import re
-
-        return (
-            re.search(r'[.!?"\'][ \t\r]*$', l) is not None
-            and len(re.split(r"[ \t\r]+", l.strip())) >= 5
-            and "javascript" not in l.lower()
-        )
-
-    kept = [l for l in text.split("\n") if keep_line(l)]
-    page_ok = len(kept) >= 3 and "lorem ipsum" not in text.lower() and "{" not in text
-    out = c4_line_filter(frame).collect()
-    if not page_ok:
-        assert out == []
-    else:
-        assert len(out) == 1
-        assert out[0]["clean_text"] == "\n".join(kept)
-        assert out[0]["n_kept_lines"] == len(kept)
-
-
 word = st.text(alphabet="abcde", min_size=1, max_size=4)
 
 
@@ -392,56 +356,6 @@ def test_quantize_matches_python_formula(spark, vecs, bits):
             else:
                 expect = min(levels, max(0, int(math.floor((float(x) - mins[d]) / scales[d] + 0.5))))
             assert got[i][d] == expect, (i, d, got[i][d], expect)
-
-
-@given(
-    masses=st.dictionaries(
-        st.text(alphabet="abcdefgh", min_size=1, max_size=3),
-        st.integers(min_value=0, max_value=10**9),
-        min_size=1,
-        max_size=10,
-    ),
-    budget=st.integers(min_value=0, max_value=2 * 10**9),
-    alpha=st.floats(min_value=0.0, max_value=2.0, allow_nan=False),
-)
-def test_temperature_targets_waterfilling_invariants(masses, budget, alpha):
-    """For ANY masses/budget/alpha: exact delivery of min(budget, total),
-    no stratum over its capacity, nothing negative — the closed-form
-    waterfilling contract, independent of capping order."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-        temperature_targets,
-    )
-
-    t = temperature_targets(masses, budget, alpha)
-    assert set(t) == set(masses)
-    total = sum(masses.values())
-    assert abs(sum(t.values()) - min(budget, total)) < 1e-4
-    for s, m in masses.items():
-        assert -1e-9 <= t[s] <= m + 1e-6
-
-
-@given(
-    masses=st.dictionaries(
-        st.text(alphabet="xyz", min_size=1, max_size=2),
-        st.integers(min_value=1, max_value=10**6),
-        min_size=2,
-        max_size=6,
-    ),
-    budget=st.integers(min_value=1, max_value=10**5),
-)
-def test_temperature_alpha_one_proportional_when_uncapped(masses, budget):
-    """alpha=1 with budget under every stratum's fair share scaled by the
-    smallest mass is exactly proportional allocation."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-        temperature_targets,
-    )
-
-    total = sum(masses.values())
-    if budget >= min(masses.values()) * len(masses):
-        return  # a cap may trigger; proportionality only claimed uncapped
-    t = temperature_targets(masses, budget, alpha=1.0)
-    for s, m in masses.items():
-        assert abs(t[s] - budget * m / total) < 1e-6
 
 
 @pytest.mark.slow

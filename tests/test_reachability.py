@@ -44,6 +44,15 @@ KEEP = {
         "test fixture: loads every fixture table at once",
     f"{PKG}.sources.tables.register_views":
         "test fixture: registers the fixture tables as SQL views",
+    f"{PKG}.operators.textstats.hash_split":
+        "reference the fused hash_split slot and leakage_safe_split are checked against "
+        "(test_fused_slots, test_leakage_split::test_singletons_match_hash_split_exactly)",
+    f"{PKG}.operators.textstats.doc_repetition":
+        "reference the fused doc_features projection is checked against "
+        "(test_properties::test_doc_features_matches_standalone_operators)",
+    f"{PKG}.operators.textstats.bpe_ish_token_counts":
+        "reference the fused doc_features projection is checked against "
+        "(test_properties::test_doc_features_matches_standalone_operators)",
 }
 
 # Unreachable definitions that are open items of ROADMAP direction 3: the
@@ -60,16 +69,10 @@ OPEN = {
     f"{PKG}.operators.bpe._adjacent_pairs": "helper of bpe_train",
     f"{PKG}.operators.bpe._merge_pair": "helper of bpe_train",
     f"{PKG}.operators.bpe.word_counts": "corpus-wide form of the live doc_word_counts",
-    f"{PKG}.operators.kmeans.lloyd_kmeans": "dense driver-loop Lloyd beside mllib_kmeans",
-    f"{PKG}.operators.kmeans.LloydTrace": "helper of lloyd_kmeans",
-    f"{PKG}.operators.kmeans.recompute_centroids": "helper of lloyd_kmeans",
-    f"{PKG}.operators.kmeans.random_dense_init": "helper of lloyd_kmeans",
     f"{PKG}.operators.category.category_top_terms": "operator form of the category_top_terms slot",
     f"{PKG}.operators.decontam.decontaminate": "filter form of the live contamination_stats",
     f"{PKG}.operators.graph.hits": "test-only operator",
     f"{PKG}.operators.snapshot.embedding_drift": "test-only operator",
-    f"{PKG}.operators.textstats.doc_repetition": "test-only operator",
-    f"{PKG}.operators.textstats.hash_split": "test-only operator",
     f"{PKG}.caches.clear_caches": "escape hatch for interactive sessions",
     # operators only tests call; each goes with its tests in a later slice
     f"{PKG}.functions.vector.l2_normalize": "test-only operator (test_doc_cluster)",
@@ -93,19 +96,7 @@ OPEN = {
     f"{PKG}.operators.similarity.mmr_select": "test-only operator (test_sampling_mmr)",
     f"{PKG}.operators.similarity.embedding_outliers": "test-only operator (test_similarity)",
     f"{PKG}.operators.snapshot.corpus_diff": "test-only operator (test_snapshot)",
-    f"{PKG}.operators.textstats.bpe_ish_token_counts": "test-only operator (test_properties)",
-    f"{PKG}.operators.textstats.temperature_targets": "test-only operator (test_mixture, test_properties)",
-    f"{PKG}.operators.textstats.temperature_mixture": "test-only operator (test_mixture)",
-    f"{PKG}.operators.textstats.sample_to_temperature_budget": "test-only operator (test_mixture)",
-    f"{PKG}.operators.textstats.pii_scrub": "test-only operator (test_pii)",
-    f"{PKG}.operators.textstats.c4_line_filter": "test-only operator (test_c4_filter)",
-    f"{PKG}.operators.textstats.perplexity_buckets": "test-only operator (test_lm_quality)",
-    f"{PKG}.operators.textstats.weighted_sample": "test-only operator (test_sampling_mmr)",
-    f"{PKG}.operators.textstats._aes_key": "helper of the weighted samplers",
-    f"{PKG}.operators.textstats.length_bucket_batches": "test-only operator (test_length_batching)",
     f"{PKG}.operators.textstats.chunk_documents": "test-only operator (test_chunking, test_streaming)",
-    f"{PKG}.operators.textstats.weighted_sample_per_stratum": "test-only operator (test_sampling_mmr)",
-    f"{PKG}.operators.textstats.fim_split": "test-only operator (test_fim)",
     f"{PKG}.sources.bucketing.table_df": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.write_date_partitioned": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.compact_to_target_bytes": "test-only operator (test_bucketing)",

@@ -1,93 +1,16 @@
-"""weighted_sample (A-ES) and mmr_select: DuckDB/pure-python oracle parity,
-statistical proportionality, greedy-MMR exactness, determinism."""
+"""mmr_select and hard-negative mining: pure-python oracle parity,
+greedy-MMR exactness, determinism and argument validation."""
 
 from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from document_clustering_with_hadoop_mapreduce_spark.functions.text import token_count
 from document_clustering_with_hadoop_mapreduce_spark.operators.similarity import (
     mmr_select,
 )
-from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-    weighted_sample,
-)
-
-
-class TestWeightedSample:
-    def test_matches_duckdb_oracle(self, spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        got = sorted(
-            r.doc_id
-            for r in weighted_sample(
-                docs, 50, token_count(F.col("text")), salt="t1"
-            ).collect()
-        )
-        con = duckdb.connect()
-        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-        # token_count == whitespace token count of trimmed text (0 for blank)
-        want = sorted(
-            r[0]
-            for r in con.execute(
-                """
-WITH w AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' OR text IS NULL THEN 0
-              ELSE len(string_split_regex(trim(text), '[ \t\n\r]+')) END AS w
-  FROM documents
-),
-keyed AS (
-  SELECT doc_id,
-         ln((CAST(('0x' || substr(md5('t1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) + 1)
-            / 1152921504606846976.0) / w AS key
-  FROM w WHERE w > 0
-)
-SELECT doc_id FROM keyed ORDER BY key DESC, doc_id ASC LIMIT 50
-"""
-            ).fetchall()
-        )
-        assert got == want
-
-    def test_exact_size_and_deterministic(self, spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        s1 = weighted_sample(docs, 40, token_count(F.col("text")), salt="s")
-        s2 = weighted_sample(docs, 40, token_count(F.col("text")), salt="s")
-        assert s1.count() == 40
-        assert s1.select("doc_id").exceptAll(s2.select("doc_id")).count() == 0
-
-    @pytest.mark.slow
-    def test_weight_proportionality(self, spark):
-        # one heavy row (w=200) among 200 light rows (w=1): its inclusion
-        # frequency across salts must approach 1 (p ~= 1-(1/201)*... ~ .99+),
-        # far above a light row's
-        rows = [(i, 200 if i == 0 else 1) for i in range(201)]
-        df = spark.createDataFrame(rows, "doc_id int, w int")
-        heavy_hits = light_hits = 0
-        for t in range(30):
-            ids = {
-                r.doc_id
-                for r in weighted_sample(df, 1, F.col("w"), salt=f"p{t}").collect()
-            }
-            heavy_hits += 0 in ids
-            light_hits += 1 in ids
-        assert heavy_hits >= 12  # E ~= 30 * 200/400 = 15
-        assert light_hits <= 3  # E ~= 30 * 1/400 = 0.075
-
-    def test_nonpositive_weights_excluded(self, spark):
-        df = spark.createDataFrame(
-            [(1, 0), (2, -5), (3, 10)], "doc_id int, w int"
-        )
-        ids = {r.doc_id for r in weighted_sample(df, 3, F.col("w")).collect()}
-        assert ids == {3}
-
-    def test_validation(self, spark):
-        df = spark.createDataFrame([(1, 1)], "doc_id int, w int")
-        with pytest.raises(ValueError, match="n must"):
-            weighted_sample(df, 0, F.col("w"))
 
 
 def _mmr_py(pool, k, lam):
@@ -162,76 +85,6 @@ class TestMMR:
             mmr_select(df, k=0)
         with pytest.raises(ValueError, match="lam"):
             mmr_select(df, lam=1.5)
-
-
-class TestWeightedSamplePerStratum:
-    def test_matches_duckdb_oracle(self, spark, sf_dir):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            weighted_sample_per_stratum,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        got = sorted(
-            r.doc_id
-            for r in weighted_sample_per_stratum(
-                docs, 5, token_count(F.col("text")), stratum_col="lang", salt="ps"
-            ).collect()
-        )
-        con = duckdb.connect()
-        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-        want = sorted(
-            r[0]
-            for r in con.execute(
-                """
-WITH w AS (
-  SELECT doc_id, lang,
-         CASE WHEN trim(text) = '' OR text IS NULL THEN 0
-              ELSE len(string_split_regex(trim(text), '[ \t\n\r]+')) END AS w
-  FROM documents
-),
-keyed AS (
-  SELECT doc_id, lang,
-         ln((CAST(('0x' || substr(md5('ps:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) + 1)
-            / 1152921504606846976.0) / w AS key
-  FROM w WHERE w > 0
-),
-ranked AS (
-  SELECT doc_id, row_number() OVER (PARTITION BY lang ORDER BY key DESC, doc_id) AS rn
-  FROM keyed
-)
-SELECT doc_id FROM ranked WHERE rn <= 5
-"""
-            ).fetchall()
-        )
-        assert got == want
-
-    def test_exact_count_per_stratum(self, spark, sf_dir):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            weighted_sample_per_stratum,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        out = weighted_sample_per_stratum(docs, 3, F.lit(1.0), stratum_col="lang")
-        counts = {
-            r.lang: r.n
-            for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        avail = {
-            r.lang: r.n
-            for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        assert set(counts) == set(avail)
-        for lang, n in counts.items():
-            assert n == min(3, avail[lang])
-
-    def test_validation(self, spark):
-        from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-            weighted_sample_per_stratum,
-        )
-
-        df = spark.createDataFrame([(1, "x", "en")], "doc_id int, text string, lang string")
-        with pytest.raises(ValueError):
-            weighted_sample_per_stratum(df, 0, F.lit(1.0))
 
 
 class TestHardNegatives:
