@@ -105,21 +105,6 @@ def test_sparse_lloyd_leaves_cache_as_found(spark, sf_dir):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() <= n_rdds
 
 
-def test_sparse_lloyd_assignments_match_final_centroids(spark, sf_dir):
-    """The returned assignments are the nearest-centroid assignment against
-    the RETURNED centroids, not the last iteration's (made before its
-    recompute) — MLlib's contract for a fitted model."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import sparse_lloyd
-
-    m = _matrix(spark, sf_dir).localCheckpoint(eager=True)
-    assigned, cents, _ = sparse_lloyd(m, k=4, max_iter=3, cache_matrix=False)
-    got = {r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in assigned.collect()}
-    want = {
-        r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in sparse_assign(m, cents).collect()
-    }
-    assert got == want
-
-
 # docs 0 and 1 are identical, so seed clusters 0 and 1 are the same
 # centroid: every distance ties between them and the lowest-cluster
 # tie-break leaves cluster 1 empty from the first assignment on

@@ -1,6 +1,6 @@
 """Clustering invariants (SURVEY.md §5 item 4) — randomness-proof checks
-the reference never had: nearest-assignment consistency, seeded
-reproducibility, label agreement."""
+the reference never had: nearest-assignment consistency, WCSS monotonicity,
+seeded reproducibility, label agreement."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
     assign_nearest,
+    lloyd_trace_deterministic,
     mllib_kmeans,
 )
 from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
@@ -27,6 +28,35 @@ def test_assign_nearest_is_argmin(spark, sf_dir):
         dists = [sum((a - b) ** 2 for a, b in zip(v, c)) for c in centroids]
         assert r["cluster"] == dists.index(min(dists))
         assert abs(r["dist_sq"] - min(dists)) < 1e-9
+
+
+def test_lloyd_wcss_non_increasing(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    wcss = [w for _, w in lloyd_trace_deterministic(emb, k=4, iters=6)]
+    assert len(wcss) >= 2
+    for a, b in zip(wcss, wcss[1:]):
+        assert b <= a + 1e-6, f"WCSS increased: {wcss}"
+
+
+def test_lloyd_assignments_match_final_centroids(spark, sf_dir):
+    """On a max_iter exit the returned assignments are the nearest-centroid
+    assignment against the RETURNED centroids, not the last iteration's
+    (made before its recompute) — MLlib's contract for a fitted model.
+    Checked on the sparse Lloyd loop of the document slots."""
+    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
+        sparse_assign,
+        sparse_lloyd,
+    )
+    from document_clustering_with_hadoop_mapreduce_spark.operators.term_matrix import term_doc_counts
+    from document_clustering_with_hadoop_mapreduce_spark.operators.tfidf import tfidf
+
+    m = tfidf(term_doc_counts(load_table(spark, sf_dir, "documents"))).localCheckpoint(eager=True)
+    assigned, cents, _ = sparse_lloyd(m, k=4, max_iter=3, cache_matrix=False)
+    got = {r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in assigned.collect()}
+    want = {
+        r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in sparse_assign(m, cents).collect()
+    }
+    assert got == want
 
 
 def test_mllib_kmeans_seeded_reproducible(spark, sf_dir):

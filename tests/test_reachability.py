@@ -96,6 +96,7 @@ OPEN = {
     f"{PKG}.operators.similarity.mmr_select": "test-only operator (test_sampling_mmr)",
     f"{PKG}.operators.similarity.embedding_outliers": "test-only operator (test_similarity)",
     f"{PKG}.operators.snapshot.corpus_diff": "test-only operator (test_snapshot)",
+    f"{PKG}.operators.textstats.c4_line_filter": "test-only operator (test_c4_filter)",
     f"{PKG}.operators.textstats.chunk_documents": "test-only operator (test_chunking, test_streaming)",
     f"{PKG}.sources.bucketing.table_df": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.write_date_partitioned": "test-only operator (test_bucketing)",
