@@ -23,10 +23,10 @@ reference's one MapReduce job per iteration (``KMeansMapper`` assigns,
 ``KMeansReducer`` averages).
 
 Every step is a DataFrame op, so the WHOLE assignment is SQL-expressible
-and DuckDB-oracle-checked (plans/queries_doc_cluster.py) — unlike the dense
-MLlib path, which is rows-only checked.
+and DuckDB-oracle-checked (plans/queries_doc_cluster.py).
 
-``pivot_to_sparse_vectors`` (A11) is still provided for MLlib interop.
+The k-means|| init (``scalable_kmeans_init``, task 2.3) runs on the same
+kernel, with the held candidates labelled by their doc ids.
 """
 
 from __future__ import annotations
@@ -42,8 +42,8 @@ from pyspark.sql import functions as F
 def seeded_sparse_centroids(matrix: DataFrame, k: int, weight_col: str = "tfidf") -> DataFrame:
     """Deterministic init: the k lowest doc_ids' tf-idf rows become sparse
     centroids (cluster = dense rank of doc_id). The reference's unseeded
-    ``Random`` init is irreproducible by design (SURVEY.md §5); k-means||
-    for real fits lives in ``operators.kmeans.mllib_kmeans``."""
+    ``Random`` init is irreproducible by design (SURVEY.md §5); the
+    deterministic k-means|| init is ``scalable_kmeans_init`` below."""
     w = Window.orderBy("doc_id")
     seed_docs = (
         matrix.select("doc_id").distinct().orderBy("doc_id").limit(k)
@@ -199,6 +199,101 @@ def sparse_assign(
     )
 
 
+def scalable_kmeans_init(
+    matrix: DataFrame,
+    k: int,
+    l: float = 10.0,
+    rounds: int = 5,
+    weight_col: str = "tfidf",
+) -> tuple[DataFrame, dict[int, int]]:
+    """M3/A15/M1: deterministic k-means|| init (Bahmani et al., VLDB'12).
+
+    The reference hand-rolls this per reducer group with an UNSEEDED
+    ``Random`` (ref sources/2.2/source/ScalableKMeans.java:86-156:
+    oversample with p = l*d/psi per round, weight each candidate by its
+    nearest-point count, keep the top-k by weight) — irreproducible by
+    design. This version replaces the RNG with a HASH-BASED Bernoulli
+    draw so the init is deterministic, partition-independent, and
+    SQL-expressible (hence oracle-checkable):
+
+        select x in round r  iff  u(x, r) < min(1, l * d(x) / psi)
+
+    where u(x, r) is the top 60 bits of md5(``"<doc_id>_<r>"``) read as a
+    uniform draw in [0, 1). The comparison happens in HEX-STRING space —
+    ``substr(md5, 1, 15) < lpad(hex(floor(p * 2^60)), 15, '0')`` — which
+    equals the numeric comparison (fixed-width lowercase hex is
+    order-isomorphic to the integers) and both engines produce identical
+    md5/hex strings, so Spark and DuckDB select byte-identical candidate
+    sets. psi is the decimal(28,6) sum of the distances, cast to double.
+
+    Candidates are documents: the driver holds their (doc_id, term, w)
+    rows (the seed is the lowest doc_id; ~l more per round). Each round
+    runs the per-doc kernel against them, every candidate's doc_id as its
+    cluster label, twice over the cached matrix: once for psi (Catalyst
+    prunes the terms away), once for the filtered collect that brings the
+    picked docs' terms along. The pass is not cached: a cached aggregate
+    keeps all its shuffle partitions (AQE cannot coalesce them), which
+    cost more than the second pass at sf0.001 on 4 cores.
+    Distances are the kernel's 6dp-rounded ||d||² + ||c||² - 2·d·c, and
+    its argmin's lowest-label tie-break gives each doc to the lowest-id
+    candidate when the final pass counts the weights.
+
+    Returns (init, weights): ``init`` holds the top-k by (weight desc,
+    doc_id asc) as (cluster, term, w) centroid rows, cluster i being the
+    i-th lowest chosen doc_id — ``sparse_lloyd``'s ``init``; ``weights``
+    maps each chosen doc_id to its nearest-doc count, in ascending doc_id
+    order.
+    """
+    two60 = 1152921504606846976.0  # 2^60
+    we_cached = not matrix.is_cached
+    if we_cached:
+        matrix = matrix.cache()
+    spark = matrix.sparkSession
+    first = matrix.agg(F.min("doc_id")).collect()[0][0]
+    cands = [
+        (first, r["term"], r[weight_col])
+        for r in matrix.where(F.col("doc_id") == first).select("term", weight_col).collect()
+    ]
+    terms = F.collect_list(F.struct("term", F.col(weight_col).alias("w"))).alias("terms")
+    dist = F.col("dist_sq")
+    for r in range(rounds):
+        per_doc = _argmin(
+            _doc_dists(matrix, _hold(spark, cands), weight_col, 6, terms), "terms"
+        )
+        psi = per_doc.agg(F.sum(dist.cast("decimal(28,6)")).cast("double")).collect()[0][0]
+        if not psi:  # every doc sits on a candidate: nothing is left to draw
+            continue
+        p = (F.lit(float(l)) * dist) / F.lit(psi)
+        draw = F.substring(
+            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f"_{r}"))), 1, 15
+        )
+        # The hex threshold only exists for p < 1 (floor(p * 2^60) with
+        # p > 8 overflows BIGINT, and ANSI mode would raise rather than
+        # wrap) — the p >= 1 arm admits those rows anyway, and NULL from
+        # the WHEN falls out of `draw < thresh` as NULL, which OR(true,
+        # NULL) absorbs. d == 0 rows are existing candidates and are never
+        # drawn.
+        thresh = F.when(
+            p < 1.0,
+            F.lower(F.lpad(F.hex(F.floor(p * F.lit(two60)).cast("long")), 15, "0")),
+        )
+        picked = per_doc.where((dist > 0) & ((p >= 1.0) | (draw < thresh)))
+        cands += [
+            (row["doc_id"], t["term"], t["w"])
+            for row in picked.select("doc_id", "terms").collect()
+            for t in row["terms"]
+        ]
+    nearest = _argmin(_doc_dists(matrix, _hold(spark, cands), weight_col, 6))
+    weights = dict(nearest.groupBy("cluster").count().collect())
+    if we_cached:
+        matrix.unpersist()
+    ids = sorted({c for c, _, _ in cands})
+    chosen = sorted(sorted(ids, key=lambda i: (-weights.get(i, 0), i))[:k])
+    rank = {c: i for i, c in enumerate(chosen)}
+    init = _hold(spark, [(rank[c], t, w) for c, t, w in cands if c in rank]).frame()
+    return init, {c: weights.get(c, 0) for c in chosen}
+
+
 def cluster_top_terms(
     matrix: DataFrame,
     assignments: DataFrame,
@@ -232,54 +327,6 @@ def cluster_top_terms(
     )
 
 
-def pivot_to_sparse_vectors(matrix: DataFrame, weight_col: str = "tfidf") -> DataFrame:
-    """A11: triples -> one ml.linalg SparseVector row per doc, indexed by a
-    deterministic term dictionary (fixes the reference's N5 defect where
-    vector slots were reducer-arrival-ordered, not term-aligned).
-
-    Returns (doc_id, features). The term index is dense-rank over sorted
-    terms; vocabulary size is the vector dimension. MLlib interop path —
-    the relational ops above never need it.
-
-    The UDT construction is an Arrow-batched pandas UDF (whole batches
-    cross the Python boundary as columnar buffers, ~10-100x a row-at-a-time
-    UDF); everything upstream — the vocab join, the per-doc sorted
-    (term_idx, w) struct array — is JVM-side. The UDF emits the VectorUDT
-    sqlType struct (type=0 sparse, size, indices, values) per batch, which
-    Spark reassembles into ml.linalg SparseVectors."""
-    vocab = (
-        matrix.select("term").distinct()
-        .withColumn("term_idx", F.row_number().over(Window.orderBy("term")) - 1)
-    )
-    v = vocab.count()
-    pairs = (
-        matrix.join(F.broadcast(vocab), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("term_idx"), F.col(weight_col).alias("w")))
-            ).alias("pairs")
-        )
-    )
-    import pandas as pd
-    from pyspark.ml.linalg import VectorUDT
-
-    def to_vec(batch):
-        n = len(batch)
-        return pd.DataFrame({
-            "type": [0] * n,  # 0 = sparse in VectorUDT's struct encoding
-            "size": [v] * n,
-            "indices": [[int(p["term_idx"]) for p in row] for row in batch],
-            "values": [[float(p["w"]) for p in row] for row in batch],
-        })
-
-    # module stringifies annotations (future import); pandas_udf needs real
-    # type objects to infer the scalar eval type — attach them directly
-    to_vec.__annotations__ = {"batch": pd.Series, "return": pd.DataFrame}
-    to_vec_udf = F.pandas_udf(to_vec, VectorUDT())
-    return pairs.select("doc_id", to_vec_udf("pairs").alias("features"))
-
-
 def _top_t(rows, t: int) -> list:
     """Each cluster's T strongest (cluster, term, w) rows: weight desc,
     term asc tie-break."""
@@ -297,12 +344,16 @@ def sparse_lloyd(
     on_iteration=None,
     centroid_top_t: int | None = None,
     cache_matrix: bool = True,
+    init: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, list[float]]:
     """Full iterative Lloyd on the SPARSE matrix — task 2.2 end-to-end
     without ever materializing a dense vector. Returns (assignments,
     centroids, per-iter WCSS).
 
-    The seeded centroids are collected once; from then on the driver
+    The starting centroids are ``init`` (cluster, term, w) — e.g. the
+    k-means|| pick of ``scalable_kmeans_init`` — or, when it is None,
+    ``seeded_sparse_centroids(matrix, k)``. They are collected once; from
+    then on the driver
     holds them (k x centroid-nnz values — at 100 TB that is KBs, while
     dense k x V would be GBs). Each iteration is ONE query: the per-doc
     kernel (``sparse_assign``'s groupBy(doc_id), which also collects each
@@ -350,7 +401,9 @@ def sparse_lloyd(
     if we_cached:
         matrix = matrix.cache()
     spark = matrix.sparkSession
-    cents = _collect_held(seeded_sparse_centroids(matrix, k, weight_col))
+    if init is None:
+        init = seeded_sparse_centroids(matrix, k, weight_col)
+    cents = _collect_held(init)
     dist = F.col("dist_sq")
     if round_centroids is not None:
         dist = dist.cast("decimal(28,6)")

@@ -3,13 +3,14 @@
 Reference parity (SURVEY.md §2.6 M1-M9):
 - tasks 2.1/2.2/2.3 run hand-rolled MR Lloyd iterations with centroids
   shipped as config strings and re-read from HDFS each iteration
-  (ref sources/2.2/source/KMeans.java:167-195). Here the scale path is
-  ``pyspark.ml.clustering.KMeans`` (seeded, cached features, centroids
-  broadcast internally; k-means|| init is M3's Bahmani et al. algorithm,
-  built in). ``lloyd_trace_deterministic`` is the dense Lloyd loop with a
-  fixed iteration count and the cross-engine float discipline, so its
-  per-iteration WCSS trace (M9) is value-gated by a DuckDB oracle; the
-  sparse loop of the document slots is ``doc_cluster.sparse_lloyd``.
+  (ref sources/2.2/source/KMeans.java:167-195). Here task 2.1's 2-D fit is
+  ``mllib_kmeans`` (``pyspark.ml.clustering.KMeans``, seeded, k-means||
+  init built in). ``lloyd_trace_deterministic`` is the dense Lloyd loop
+  with a fixed iteration count and the cross-engine float discipline, so
+  its per-iteration WCSS trace (M9) is value-gated by a DuckDB oracle.
+  Tasks 2.2/2.3 and their deterministic k-means|| init run on the sparse
+  per-doc kernel of ``doc_cluster`` (``sparse_lloyd``,
+  ``scalable_kmeans_init``).
 
 Scale notes: assignment is a broadcast nearest-neighbor "join" (ref J5) —
 k×d floats to every executor, argmin via an array-of-struct min, no
@@ -68,7 +69,7 @@ def assign_nearest(
 
 # The HOF assignment above is O(k*d) INTERPRETED work per row (~1 us per
 # element) — the right shape for a handful of centroids, a scale-killer
-# once k grows with the corpus (SemDeDup's k, k-means||'s candidate set).
+# once k grows with the corpus (SemDeDup's k).
 # Callers switch to the Arrow twin below past this k.
 ARROW_ASSIGN_MIN_K = 16
 
@@ -231,141 +232,19 @@ def lloyd_trace_deterministic(
     return trace
 
 
-def scalable_kmeans_init(
-    df: DataFrame,
-    k: int,
-    l: float = 10.0,
-    rounds: int = 5,
-    features_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[list[tuple[int, list[float]]], dict[int, int]]:
-    """M3/A15/M1: deterministic k-means|| init (Bahmani et al., VLDB'12).
-
-    The reference hand-rolls this per reducer group with an UNSEEDED
-    ``Random`` (ref sources/2.2/source/ScalableKMeans.java:86-156:
-    oversample with p = l*d/psi per round, weight each candidate by its
-    nearest-point count, keep the top-k by weight) — irreproducible by
-    design. This version replaces the RNG with a HASH-BASED Bernoulli
-    draw so the init is deterministic, partition-independent, and
-    SQL-expressible (hence oracle-checkable, unlike a seeded MLlib fit):
-
-        select x in round r  iff  u(x, r) < min(1, l * d(x) / psi)
-
-    where u(x, r) is the top 60 bits of md5(``"<id>_<r>"``) read as a
-    uniform draw in [0, 1). The comparison happens in HEX-STRING space —
-    ``substr(md5, 1, 15) < lpad(hex(floor(p * 2^60)), 15, '0')`` — which
-    equals the numeric comparison (fixed-width lowercase hex is
-    order-isomorphic to the integers) and both engines produce identical
-    md5/hex strings, so Spark and DuckDB select byte-identical candidate
-    sets.
-
-    Scale shape: candidates live on the driver (expected l per round +
-    seed ≈ l*rounds k×d floats — same driver footprint as MLlib's own
-    k-means||) and enter each pass as one nested-array literal; each
-    round is ONE cached distance pass over the data (psi aggregate +
-    filtered collect read the same cache), so the whole init is
-    O(rounds) scans with no shuffle beyond the scalar aggregate.
-    Distances use the engine-wide 6dp round-before-compare discipline.
-
-    Returns (final_centroids, weights): ``final_centroids`` is the top-k
-    as [(seed_id, vector), ...] ordered by seed_id (cluster i = i-th
-    lowest surviving seed id), ``weights`` maps seed_id -> nearest-point
-    count.
-    """
-    two60 = 1152921504606846976.0  # 2^60
-    feats = df.select(
-        F.col(id_col).alias("id"), _as_double_array(F.col(features_col)).alias("v")
-    )
-    # The init runs ~rounds+2 distance passes of per-row HOF math over the
-    # CACHED frame: on an under-split local scan (the sf fixtures are one
-    # row group) every pass serializes onto one core. Fan out once before
-    # caching when the scan arrived with fewer splits than cores — the
-    # shuffle is paid once, every pass reuses the layout (measured at
-    # sf0.1/local[32], current fixture generation: 11.9 s -> 8.6 s warm;
-    # an EARLIER generation measured fan-out as a loss for the
-    # per-iteration-job shape, so this stays conditional and cache-scoped,
-    # not a blanket force_fan_out). On a real cluster the input arrives
-    # already split and this branch is a no-op.
-    par = feats.sparkSession.sparkContext.defaultParallelism
-    if feats.rdd.getNumPartitions() < par:
-        feats = feats.repartition(par)
-    feats = feats.cache()
-    first = feats.orderBy("id").limit(1).collect()[0]
-    cands: dict[int, list[float]] = {first["id"]: list(first["v"])}
-
-    # the candidate set GROWS ~l per round (that is k-means||'s whole
-    # point), so later distance passes pay O(|cands| * d) per row — the
-    # interpreted HOF form past ARROW_ASSIGN_MIN_K candidates is exactly
-    # the cost the round-8 similarity audit removed; same switch here
-    def nearest(cents: list[list[float]]) -> DataFrame:
-        if len(cents) > ARROW_ASSIGN_MIN_K:
-            return assign_nearest_arrow(feats, cents, "v", round_decimals=6)
-        return assign_nearest(feats, cents, "v", round_decimals=6)
-
-    for r in range(rounds):
-        ordered = sorted(cands)
-        dists = nearest(
-            [cands[i] for i in ordered]
-        ).select("id", "v", "dist_sq").cache()
-        psi_df = dists.agg(
-            F.sum(F.col("dist_sq").cast("decimal(28,6)")).cast("double").alias("psi")
-        )
-        p = (F.lit(float(l)) * F.col("dist_sq")) / F.col("psi")
-        draw = F.substring(
-            F.md5(F.concat(F.col("id").cast("string"), F.lit(f"_{r}"))), 1, 15
-        )
-        # The hex threshold only exists for p < 1 (floor(p * 2^60) with
-        # p > 8 overflows BIGINT, and ANSI mode would raise rather than
-        # wrap) — the p >= 1 arm of the filter admits those rows anyway,
-        # and NULL from the WHEN falls out of `draw < thresh` as NULL,
-        # which OR(true, NULL) absorbs. d == 0 rows are existing
-        # candidates and can never be drawn (threshold is all-zeros).
-        thresh = F.when(
-            p < 1.0,
-            F.lower(F.lpad(F.hex(F.floor(p * F.lit(two60)).cast("long")), 15, "0")),
-        )
-        selected = (
-            dists.crossJoin(F.broadcast(psi_df))
-            .filter(
-                (F.col("dist_sq") > 0)
-                & (F.col("psi") > 0)
-                & ((p >= 1.0) | (draw < thresh))
-            )
-            .select("id", "v")
-            .collect()
-        )
-        dists.unpersist()
-        for row in selected:
-            cands[row["id"]] = list(row["v"])
-    # weight = nearest-point count over ALL candidates (6dp-rounded dist,
-    # lowest-candidate-id tie-break — assign_nearest's struct-min order)
-    ordered = sorted(cands)
-    assigned = nearest([cands[i] for i in ordered])
-    wrows = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("w")).collect()
-    feats.unpersist()
-    weights = {ordered[row["cluster"]]: int(row["w"]) for row in wrows}
-    top = sorted(((weights.get(i, 0), i) for i in ordered), key=lambda t: (-t[0], t[1]))[:k]
-    chosen = sorted(i for _, i in top)
-    return [(i, cands[i]) for i in chosen], {i: weights.get(i, 0) for i in chosen}
-
-
 def mllib_kmeans(
     df: DataFrame,
     k: int,
     features_col: str = "embedding",
-    distance: str = "euclidean",
-    init_mode: str = "k-means||",
     seed: int = 42,
     max_iter: int = 20,
     tol: float = 1e-5,
 ):
-    """M1-M7 scale path: pyspark.ml KMeans over an array column.
-
-    ``distance='cosine'`` gives task 2.2/2.3 semantics with CORRECT cosine
-    (the reference's N3 dot/(|a|+|b|) variant is in ``compat``);
-    ``init_mode='k-means||'`` is M3 (same Bahmani et al. paper the
-    reference hand-rolls at sources/2.2/source/ScalableKMeans.java).
-    Returns (model, assignments DataFrame).
+    """M1-M7 for task 2.1: pyspark.ml KMeans over an array column, with
+    MLlib's defaults of euclidean distance and k-means|| init (M3, the
+    Bahmani et al. algorithm the reference hand-rolls at
+    sources/2.2/source/ScalableKMeans.java). Returns (model, assignments
+    DataFrame).
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -374,7 +253,6 @@ def mllib_kmeans(
     km = KMeans(
         k=k, seed=seed, maxIter=max_iter, tol=tol,
         featuresCol="__features", predictionCol="cluster",
-        initMode=init_mode, distanceMeasure=distance,
     )
     model = km.fit(feats)
     out = model.transform(feats).drop("__features")

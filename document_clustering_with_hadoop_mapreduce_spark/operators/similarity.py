@@ -989,8 +989,7 @@ def quantized_ivf_topk(
 # for the handful-of-centroids queries, a scale-killer once k grows with
 # the corpus the way SemDeDup prescribes (10k-100k clusters at web scale).
 # Above kmeans.ARROW_ASSIGN_MIN_K, semdedup switches to the shared Arrow
-# batch assignment (kmeans.assign_nearest_arrow — also used by the
-# k-means|| distance passes, whose candidate set grows ~l per round).
+# batch assignment (kmeans.assign_nearest_arrow).
 
 
 def semdedup(

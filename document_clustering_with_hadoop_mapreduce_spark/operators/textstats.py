@@ -491,66 +491,6 @@ def doc_fingerprints(documents: DataFrame, text_col: str = "text", id_col: str =
     )
 
 
-# C4-style boilerplate cleaning (Raffel et al., "Exploring the Limits of
-# Transfer Learning with a Unified Text-to-Text Transformer", JMLR 2020,
-# §2.2): keep only lines that read like prose sentences, then drop pages
-# that have too little left. Shared verbatim with the DuckDB test oracle —
-# explicit ASCII whitespace classes, no \s (Java vs RE2 drift).
-C4_TERMINAL_RE = "[.!?\"'][ \\t\\r]*$"  # line ends in terminal punctuation
-C4_LINE_WS_RE = "[ \\t\\r]+"
-
-
-def c4_line_filter(
-    documents: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words_per_line: int = 5,
-    min_kept_lines: int = 3,
-) -> DataFrame:
-    """C4 page cleaning as ONE map-side projection (no shuffle, no Python):
-
-    line level — keep a line iff it ends in terminal punctuation
-    (``. ! ? " '``), has >= ``min_words_per_line`` whitespace words, and
-    does not contain the word "javascript" (case-insensitive);
-    page level — drop the page when fewer than ``min_kept_lines`` lines
-    survive, or the ORIGINAL page contains "lorem ipsum" (any case) or a
-    curly brace (code, not prose).
-
-    Emits (doc_id, clean_text, n_lines, n_kept_lines) for survivors;
-    ``clean_text`` is the kept lines re-joined with newlines. At 100 TB
-    this is the same shape as every other filter here: a narrow projection
-    + predicate that Catalyst pushes wherever the page stream already
-    flows — nothing moves.
-    """
-    text = F.col(text_col)
-    lines = F.split(text, "\n")
-    kept = F.filter(
-        lines,
-        lambda l: l.rlike(C4_TERMINAL_RE)
-        & (F.size(F.split(F.trim(l), C4_LINE_WS_RE)) >= min_words_per_line)
-        & ~F.lower(l).contains("javascript"),
-    )
-    return (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            text.alias("__text"),
-            F.size(lines).alias("n_lines"),
-            kept.alias("__kept"),
-        )
-        .filter(
-            (F.size("__kept") >= min_kept_lines)
-            & ~F.lower("__text").contains("lorem ipsum")
-            & ~F.col("__text").contains("{")
-        )
-        .select(
-            "doc_id",
-            F.array_join("__kept", "\n").alias("clean_text"),
-            "n_lines",
-            F.size("__kept").alias("n_kept_lines"),
-        )
-    )
-
-
 def unigram_cross_entropy(matrix: DataFrame, materialize: bool = True) -> DataFrame:
     """Perplexity-proxy quality score (CCNet-style, Wenzek et al. 2020):
     each document's cross-entropy against the CORPUS'S OWN unigram LM.

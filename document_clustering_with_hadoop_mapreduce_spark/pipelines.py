@@ -21,10 +21,11 @@ tests/test_golden_parity.py; these facades add the I/O shell.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .compat import clean_text_ref
+from .operators.doc_cluster import scalable_kmeans_init, sparse_lloyd
 from .operators.kmeans import mllib_kmeans
 from .operators.term_matrix import filter_min_corpus_freq, term_totals
 from .operators.tfidf import tfidf
@@ -180,8 +181,7 @@ def task_2_1_kmeans_2d(
     best = None
     for seed in (1, 2, 3):
         model, assigned = mllib_kmeans(
-            feats, k=k, features_col="p", distance="euclidean",
-            init_mode="k-means||", seed=seed, max_iter=max_iter, tol=tol,
+            feats, k=k, features_col="p", seed=seed, max_iter=max_iter, tol=tol,
         )
         cost = float(model.summary.trainingCost)
         if best is None or cost < best[0]:
@@ -191,27 +191,36 @@ def task_2_1_kmeans_2d(
     return assigned.select("x1", "x2", "cluster"), centroids
 
 
-def task_2_2_doc_kmeans(
-    spark: SparkSession, tfidf_mtx: str, k: int = 5, seed: int = 42,
-    init_mode: str = "random", max_iter: int = 10,
-):
-    """Document K-Means over a TF-IDF matrix with correct cosine distance
-    (the reference's N3 'cosine' lives in compat). Returns (model,
-    assignments with term-aligned sparse features)."""
-    from .operators.doc_cluster import pivot_to_sparse_vectors
-
+def read_unit_tfidf(spark: SparkSession, tfidf_mtx: str) -> DataFrame:
+    """Task 1.4's headerless doc-first tf-idf triples as (doc_id, term,
+    tfidf), each document's row L2-normalised in-plan (one window over
+    doc_id). ``term`` is the term id as a string, the kernel's term key.
+    A row whose norm is 0 keeps weight 0: the division only runs where the
+    norm is positive (ANSI mode raises on a zero divisor)."""
     m = read_mtx(spark, tfidf_mtx, col_order=("doc_id", "term_id"), header=False)
-    vecs = pivot_to_sparse_vectors(
-        m.select("doc_id", F.col("term_id").alias("term"), F.col("value").alias("tfidf"))
+    norm = F.sqrt(F.sum(F.col("value") * F.col("value")).over(Window.partitionBy("doc_id")))
+    return m.select(
+        "doc_id",
+        F.col("term_id").cast("string").alias("term"),
+        F.when(norm > 0, F.col("value") / norm).otherwise(F.lit(0.0)).alias("tfidf"),
     )
-    from pyspark.ml.clustering import KMeans
 
-    km = KMeans(
-        k=k, seed=seed, maxIter=max_iter, initMode=init_mode,
-        distanceMeasure="cosine", featuresCol="features", predictionCol="cluster",
-    )
-    model = km.fit(vecs)
-    return model, model.transform(vecs)
+
+def task_2_2_doc_kmeans(
+    spark: SparkSession, tfidf_mtx: str, k: int = 5, max_iter: int = 10,
+) -> tuple[DataFrame, DataFrame, list[float]]:
+    """Document K-Means for task 2.2 on the sparse Lloyd engine
+    (``sparse_lloyd``), from the deterministic seeded init (the k lowest
+    doc_ids). Returns (assignments, centroids, per-iteration WCSS).
+
+    The reference's cosine distance (correct cosine here; its N3 variant
+    lives in compat) enters as unit rows (``read_unit_tfidf``). The
+    objective is then exactly the squared euclidean distance of each unit
+    row to its cluster's MEAN of unit rows. That is 2 - 2·cos only against
+    a unit centroid, and the loop does not renormalise its centroids — so
+    this is not MLlib's cosine K-Means, which renormalises every centroid.
+    """
+    return sparse_lloyd(read_unit_tfidf(spark, tfidf_mtx), k, max_iter)
 
 
 def task_2_2_doc_kmeans_with_artifacts(
@@ -239,9 +248,6 @@ def task_2_2_doc_kmeans_with_artifacts(
 
     Returns the per-iteration WCSS trace.
     """
-    from pyspark.sql import Window
-
-    from .operators.doc_cluster import sparse_lloyd
     from .sources.artifacts import (
         clean_artifact_folder,
         doc_kmeans_cluster_lines,
@@ -304,11 +310,14 @@ def task_2_2_doc_kmeans_with_artifacts(
 
 
 def task_2_3_doc_kmeans_scalable(
-    spark: SparkSession, tfidf_mtx: str, k: int = 5, seed: int = 42,
-    max_iter: int = 10,
-):
-    """Task 2.3 = task 2.2 with k-means|| init (the Bahmani et al.
-    algorithm the reference hand-rolls; built into MLlib)."""
-    return task_2_2_doc_kmeans(
-        spark, tfidf_mtx, k=k, seed=seed, init_mode="k-means||", max_iter=max_iter
-    )
+    spark: SparkSession, tfidf_mtx: str, k: int = 5, max_iter: int = 10,
+) -> tuple[DataFrame, DataFrame, list[float]]:
+    """Task 2.3 = task 2.2 started from the deterministic k-means|| init
+    (``scalable_kmeans_init``, the Bahmani et al. algorithm the reference
+    hand-rolls) on the same unit rows. The rows are cached for the init's
+    passes and the Lloyd loop; the returned frames are lazy."""
+    m = read_unit_tfidf(spark, tfidf_mtx).cache()
+    init, _ = scalable_kmeans_init(m, k)
+    out = sparse_lloyd(m, k, max_iter, init=init)
+    m.unpersist()
+    return out

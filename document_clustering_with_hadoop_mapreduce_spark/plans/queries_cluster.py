@@ -12,10 +12,12 @@ centroid recompute, loss accounting) is hash-gated, not just rows-only.
 deterministic Bahmani oversampling (hash-based Bernoulli draws instead
 of the reference's unseeded ``Random``) whose candidate selection,
 weights, top-k and one-pass sizes all hash-match an unrolled DuckDB CTE.
-The seeded MLlib fit (``mllib_kmeans``) remains the production scale
-path; being non-deterministic across engines it is pytest-gated instead
-(tests/test_kmeans.py): WCSS non-increasing, assignment = nearest
-centroid, k clusters, seeded reproducibility.
+It runs ``doc_cluster.scalable_kmeans_init`` — the init task 2.3 starts
+its sparse Lloyd loop from — on the embeddings as (vec_id, dim, x)
+triples. Task 2.1's seeded MLlib fit (``mllib_kmeans``) is
+non-deterministic across engines, so it is pytest-gated instead
+(tests/test_kmeans.py): assignment = nearest centroid, k clusters, seeded
+reproducibility.
 """
 
 from __future__ import annotations
@@ -23,11 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.kmeans import (
-    assign_nearest,
-    lloyd_trace_deterministic,
-    scalable_kmeans_init,
-)
+from ..operators.doc_cluster import scalable_kmeans_init, sparse_assign
+from ..operators.kmeans import assign_nearest, lloyd_trace_deterministic
 from ..sources.tables import load_table
 from .registry import register
 
@@ -157,7 +156,7 @@ def _scalable_init_oracle(k: int, l: float, rounds: int) -> str:
     each round computes 6dp-rounded min distance to the candidate set,
     psi as an exact decimal sum cast back to double, and selects points
     whose 60-bit md5 draw (hex-string compare, see
-    operators.kmeans.scalable_kmeans_init) clears p = l*d/psi. Then
+    operators.doc_cluster.scalable_kmeans_init) clears p = l*d/psi. Then
     weight-by-nearest-count over the full candidate set, top-k by
     (weight DESC, vec_id ASC), and one assignment pass for sizes."""
     lrepr = repr(float(l))
@@ -248,19 +247,27 @@ ORDER BY cluster"""
     "oversampling with hash-based Bernoulli draws, weight-by-nearest-"
     "count, top-k by weight — ref sources/2.2/source/ScalableKMeans.java:"
     "86-156 with the unseeded Random made reproducible) -> chosen seeds, "
-    "weights, and one-pass cluster sizes. The seeded MLlib fit path "
-    "(mllib_kmeans) stays pytest-gated in tests/test_kmeans.py",
+    "weights, and one-pass cluster sizes. The init task 2.3 runs, on the "
+    "sparse per-doc kernel over the embeddings as (vec_id, dim, x) triples",
     tags=("cluster", "task2.3"),
 )
 def q_kmeans_parallel_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents, weights = scalable_kmeans_init(
-        emb, k=K, l=_KMEANS_PARALLEL_L, rounds=_KMEANS_PARALLEL_ROUNDS
+    # a dense vector is a sparse row holding every dimension
+    triples = emb.select(
+        F.col("vec_id").alias("doc_id"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "w"),
+    ).select("doc_id", F.col("dim").cast("string").alias("term"), "w")
+    init, weights = scalable_kmeans_init(
+        triples, k=K, l=_KMEANS_PARALLEL_L, rounds=_KMEANS_PARALLEL_ROUNDS, weight_col="w"
     )
-    assigned = assign_nearest(emb, [v for _, v in cents], "embedding", round_decimals=6)
-    sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
+    sizes = (
+        sparse_assign(triples, init, weight_col="w")
+        .groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     meta = spark.createDataFrame(
-        [(i, sid, weights[sid]) for i, (sid, _) in enumerate(cents)],
+        [(i, sid, w) for i, (sid, w) in enumerate(weights.items())],
         "cluster INT, seed_vec_id LONG, weight LONG",
     )
     return (

@@ -7,9 +7,10 @@ The reference's golden assignments (sources/2.2/ouput/task_2_2.classes,
 sources/2.3/output/task_2_3.classes) score ARI ~0.013 / ~0.009 against
 the true categories — near-random, because the N3 "similarity"
 (dot/(|a|+|b|)) defect plus unseeded init wreck the clustering. The bar
-is recomputed live from those files, not hard-coded. Measured: the
-seeded correct-cosine pipeline below scores ARI ~0.773 on the same
-committed matrix (~57x the reference's best run).
+is recomputed live from those files, not hard-coded. The seeded MLlib
+cosine fit this gate first ran scored ARI ~0.773 on the same committed
+matrix (~57x the reference's best run); task 2.3's sparse pipeline below
+must clear the same bar.
 """
 
 from __future__ import annotations
@@ -21,11 +22,9 @@ from math import comb
 import pytest
 from pyspark.sql import functions as F
 
-from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
-    pivot_to_sparse_vectors,
-)
+from document_clustering_with_hadoop_mapreduce_spark import pipelines as P
 from document_clustering_with_hadoop_mapreduce_spark.operators.tfidf import tfidf
-from document_clustering_with_hadoop_mapreduce_spark.sources.mtx import read_mtx
+from document_clustering_with_hadoop_mapreduce_spark.sources.mtx import read_mtx, write_mtx_single
 
 REF = "/root/reference/sources"
 
@@ -68,10 +67,11 @@ def _golden_ari(classes_path: str, truth: dict[int, str]) -> float:
 
 
 @pytest.mark.slow
-def test_seeded_doc_kmeans_beats_reference_ari(spark):
-    """tf-idf + seeded MLlib cosine KMeans over the reference's OWN
-    committed term-doc matrix recovers the 5 BBC categories far better
-    than either reference run — and reproducibly (fixed seed)."""
+def test_seeded_doc_kmeans_beats_reference_ari(spark, tmp_path):
+    """tf-idf + task 2.3 (deterministic k-means|| init, sparse Lloyd on
+    unit rows) over the reference's OWN committed term-doc matrix recovers
+    the 5 BBC categories far better than either reference run — and
+    reproducibly (no RNG anywhere)."""
     truth = _true_categories()
     ref_bar = max(
         _golden_ari(_ref("2.2/ouput/task_2_2.classes"), truth),
@@ -80,22 +80,20 @@ def test_seeded_doc_kmeans_beats_reference_ari(spark):
     m = read_mtx(spark, _ref("1.2/input/OutputTask1_1.mtx"))
     counts = m.select("doc_id", F.col("term_id").alias("term"), F.col("value").alias("cnt"))
     weighted = tfidf(counts, n_docs=2225).select(
-        "doc_id", "term", F.col("tfidf").alias("tfidf")
+        "doc_id", F.col("term").alias("term_id"), F.col("tfidf").alias("value")
     )
-    vecs = pivot_to_sparse_vectors(weighted)
-    from pyspark.ml.clustering import KMeans
-
-    km = KMeans(
-        k=5, seed=42, maxIter=20, initMode="k-means||", distanceMeasure="cosine",
-        featuresCol="features", predictionCol="cluster",
+    path = str(tmp_path / "task_1_4.mtx")
+    write_mtx_single(
+        weighted, path, 0, 0, row_col="doc_id", col_col="term_id",
+        int_values=False, banner=False,
     )
-    assigned = km.fit(vecs).transform(vecs)
-    ours = {r["doc_id"]: r["cluster"] for r in assigned.select("doc_id", "cluster").collect()}
+    assigned, _, _ = P.task_2_3_doc_kmeans_scalable(spark, path, k=5, max_iter=20)
+    ours = {r["doc_id"]: r["cluster"] for r in assigned.collect()}
     ids = sorted(ours)
     assert len(ids) == 2225
     our_ari = adjusted_rand_index([truth[i] for i in ids], [ours[i] for i in ids])
-    # the reference bar is ~0.013; a seeded correct-cosine run should land
-    # far above it — require a 10x margin so this never passes on noise
+    # the reference bar is ~0.013; a correct-cosine run should land far
+    # above it — require a 10x margin so this never passes on noise
     assert our_ari >= max(10 * ref_bar, 0.1), (our_ari, ref_bar)
     assert our_ari > ref_bar
 

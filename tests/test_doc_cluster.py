@@ -1,4 +1,4 @@
-"""Sparse doc-clustering invariants + the A11 pivot (term-aligned vectors)."""
+"""Sparse doc-clustering invariants."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
-    pivot_to_sparse_vectors,
     seeded_sparse_centroids,
     sparse_assign,
 )
@@ -39,21 +38,6 @@ def test_every_doc_assigned_once(spark, sf_dir):
     assert assigned.count() == n_docs
     assert assigned.select("doc_id").distinct().count() == n_docs
     assert assigned.filter(F.col("dist_sq") < 0).count() == 0
-
-
-def test_pivot_vectors_term_aligned(spark, sf_dir):
-    """A11 + N5 fix: vector slots are term-dictionary positions, so two docs
-    sharing a term share the index; norms match the matrix."""
-    m = _matrix(spark, sf_dir).filter(F.col("doc_id") < 100)
-    vecs = pivot_to_sparse_vectors(m)
-    row = vecs.first()
-    dim = row["features"].size
-    vocab = m.select("term").distinct().count()
-    assert dim == vocab
-    # per-doc nnz in the vector == rows in the matrix
-    nnz = {r["doc_id"]: r["n"] for r in m.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    for r in vecs.limit(20).collect():
-        assert len(r["features"].indices) == nnz[r["doc_id"]]
 
 
 @pytest.mark.slow

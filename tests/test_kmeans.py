@@ -86,35 +86,45 @@ def test_mllib_assignment_is_nearest_final_centroid(spark, sf_dir):
 
 @pytest.mark.slow
 def test_scalable_init_deterministic_and_bahmani_shaped(spark, sf_dir):
-    """Deterministic k-means|| (M3/A15/M1): two runs select byte-identical
-    candidate sets (hash-Bernoulli draws, no RNG), the top-k come back
-    ordered by seed id with positive nearest-point weights, and the
-    oversampling actually oversamples (more candidates than k see the
-    weight step — the property the reference's l*d/psi loop exists for,
-    ref sources/2.2/source/ScalableKMeans.java:86-156)."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
+    """Deterministic k-means|| (M3/A15/M1) on the sparse per-doc kernel,
+    fed the embeddings as (vec_id, dim, x) triples: two runs select
+    byte-identical candidate sets (hash-Bernoulli draws, no RNG), the top-k
+    come back ordered by seed id with positive nearest-point weights, each
+    chosen centroid is its seed's own vector, and the oversampling actually
+    oversamples (more candidates than k see the weight step — the property
+    the reference's l*d/psi loop exists for, ref
+    sources/2.2/source/ScalableKMeans.java:86-156)."""
+    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
         scalable_kmeans_init,
+        sparse_assign,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    cents1, w1 = scalable_kmeans_init(emb, k=5, l=10.0, rounds=3)
-    cents2, w2 = scalable_kmeans_init(emb, k=5, l=10.0, rounds=3)
-    assert [(i, v) for i, v in cents1] == [(i, v) for i, v in cents2]
+    triples = emb.select(
+        F.col("vec_id").alias("doc_id"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "w"),
+    ).select("doc_id", F.col("dim").cast("string").alias("term"), "w")
+    init1, w1 = scalable_kmeans_init(triples, k=5, l=10.0, rounds=3, weight_col="w")
+    init2, w2 = scalable_kmeans_init(triples, k=5, l=10.0, rounds=3, weight_col="w")
+    rows1 = sorted(tuple(r) for r in init1.collect())
+    assert rows1 == sorted(tuple(r) for r in init2.collect())
     assert w1 == w2
-    assert len(cents1) == 5
-    ids = [i for i, _ in cents1]
-    assert ids == sorted(ids)
-    assert set(w1) == set(ids)
+    ids = list(w1)
+    assert len(ids) == 5 and ids == sorted(ids)
+    want = sorted(
+        (ids.index(r["doc_id"]), r["term"], r["w"])
+        for r in triples.where(F.col("doc_id").isin(ids)).collect()
+    )
+    assert rows1 == want
     # weights are nearest-point counts over ALL candidates -> each chosen
     # seed holds at least itself, and the total is at most n
     assert all(w >= 1 for w in w1.values())
     assert sum(w1.values()) <= n
     # one assignment pass under the chosen centroids covers every point
-    assigned = assign_nearest(emb, [v for _, v in cents1], "embedding", round_decimals=6)
-    sizes = {r["cluster"]: r["n"] for r in
-             assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert sum(sizes.values()) == n
+    assigned = sparse_assign(triples, init1, weight_col="w")
+    assert assigned.count() == n
+    assert {r["cluster"] for r in assigned.select("cluster").distinct().collect()} <= set(range(5))
 
 
 def test_n3_similarity_compat(spark):

@@ -1,4 +1,5 @@
-"""Task-facade pipelines over the reference's own fixtures.
+"""Task-facade pipelines over the reference's own fixtures, and tasks
+2.2/2.3 over the fixture corpus's tf-idf written as task 1.4's output.
 
 The operator cores are golden-verified in test_golden_parity.py; these
 check the end-to-end shells (file in -> file out, reference formats).
@@ -7,12 +8,21 @@ check the end-to-end shells (file in -> file out, reference formats).
 from __future__ import annotations
 
 import os
-import zipfile
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark import pipelines as P
+from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
+    scalable_kmeans_init,
+    sparse_assign,
+    sparse_lloyd,
+)
+from document_clustering_with_hadoop_mapreduce_spark.operators.term_matrix import term_doc_counts
+from document_clustering_with_hadoop_mapreduce_spark.operators.tfidf import tfidf
+from document_clustering_with_hadoop_mapreduce_spark.sources.mtx import write_mtx_single
+from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
 
 REF = "/root/reference/sources"
 
@@ -74,16 +84,95 @@ def test_task_2_1_converges(spark):
 
 @pytest.mark.slow
 def test_task_2_2_and_2_3_doc_kmeans(spark):
-    model, assigned = P.task_2_2_doc_kmeans(
+    assigned, _, trace = P.task_2_2_doc_kmeans(
         spark, _ref("2.2/input/task_1_4.mtx"), k=5, max_iter=3
     )
     n = assigned.count()
     assert n > 2000  # 2,225 docs
     assert assigned.select("cluster").distinct().count() <= 5
-    m3, a3 = P.task_2_3_doc_kmeans_scalable(
+    assert len(trace) == 3
+    a3, _, _ = P.task_2_3_doc_kmeans_scalable(
         spark, _ref("2.3/input/task_1_4.mtx"), k=5, max_iter=3
     )
     assert a3.count() == n
+
+
+@pytest.fixture(scope="module")
+def sf_tfidf_mtx(spark, sf_dir, tmp_path_factory):
+    """The fixture corpus's tf-idf as task 1.4's headerless doc-first
+    triples (term ids = rank of the term string)."""
+    m = tfidf(term_doc_counts(load_table(spark, sf_dir, "documents")))
+    ids = m.select("term").distinct().withColumn(
+        "term_id", F.row_number().over(Window.orderBy("term"))
+    )
+    path = str(tmp_path_factory.mktemp("tfidf") / "task_1_4.mtx")
+    write_mtx_single(
+        m.join(ids, "term").select("doc_id", "term_id", F.col("tfidf").alias("value")),
+        path, 0, 0, row_col="doc_id", col_col="term_id", int_values=False, banner=False,
+    )
+    return path
+
+
+def _result(run):
+    assigned, cents, trace = run
+    rows = assigned.collect()
+    got = {r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in rows}
+    assert len(got) == len(rows), "a doc is assigned more than once"
+    return got, sorted(tuple(r) for r in cents.collect()), trace
+
+
+@pytest.mark.parametrize("task", ["task_2_2_doc_kmeans", "task_2_3_doc_kmeans_scalable"])
+def test_doc_kmeans_on_unit_rows(spark, sf_tfidf_mtx, task):
+    """Tasks 2.2/2.3 on the sparse Lloyd engine: every doc assigned once to
+    one of k clusters, WCSS non-increasing, the assignment is the nearest
+    returned centroid on the unit rows, and a rerun agrees exactly."""
+    run = getattr(P, task)
+    out = run(spark, sf_tfidf_mtx, k=5, max_iter=3)
+    got, cents, trace = _result(out)
+    m = P.read_unit_tfidf(spark, sf_tfidf_mtx)
+    docs = [r["doc_id"] for r in m.select("doc_id").distinct().collect()]
+    assert sorted(got) == sorted(docs)
+    assert {c for c, _ in got.values()} <= set(range(5))
+    assert len(trace) == 3
+    for a, b in zip(trace, trace[1:]):
+        assert b <= a + 1e-9, f"WCSS increased: {trace}"
+    want = {r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in sparse_assign(m, out[1]).collect()}
+    assert got == want
+    assert _result(run(spark, sf_tfidf_mtx, k=5, max_iter=3)) == (got, cents, trace)
+
+
+def test_task_2_3_starts_from_kmeans_parallel_seeds(spark, sf_tfidf_mtx):
+    """Task 2.3 is the sparse Lloyd loop started from the k-means|| pick
+    on the same unit rows — not from the k lowest doc_ids task 2.2 uses."""
+    m = P.read_unit_tfidf(spark, sf_tfidf_mtx)
+    init, weights = scalable_kmeans_init(m, 5)
+    lowest = [r["doc_id"] for r in m.select("doc_id").distinct().orderBy("doc_id").limit(5).collect()]
+    assert list(weights) != lowest
+    want = _result(sparse_lloyd(m, 5, 3, init=init))
+    assert _result(P.task_2_3_doc_kmeans_scalable(spark, sf_tfidf_mtx, k=5, max_iter=3)) == want
+
+
+def test_doc_kmeans_zero_norm_document(spark, tmp_path):
+    """A document whose tf-idf row is all zeros keeps weight 0 (no division
+    by zero under ANSI mode) and is still assigned; other rows are unit."""
+    path = str(tmp_path / "task_1_4.mtx")
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write(
+            "1 1 0.500000\n1 2 0.500000\n2 1 0.000000\n2 3 0.000000\n"
+            "3 2 1.000000\n3 3 2.000000\n4 1 3.000000\n"
+        )
+    ss = {
+        r["doc_id"]: r["ss"]
+        for r in P.read_unit_tfidf(spark, path)
+        .groupBy("doc_id").agg(F.sum(F.col("tfidf") * F.col("tfidf")).alias("ss")).collect()
+    }
+    assert ss[2] == 0.0
+    assert all(abs(ss[d] - 1.0) < 1e-12 for d in (1, 3, 4))
+    for run in (P.task_2_2_doc_kmeans, P.task_2_3_doc_kmeans_scalable):
+        assigned, _, _ = run(spark, path, k=2, max_iter=2)
+        rows = assigned.collect()
+        assert sorted(r["doc_id"] for r in rows) == [1, 2, 3, 4]
+        assert {r["cluster"] for r in rows} <= {0, 1}
 
 
 def test_task_2_1_recovers_true_classes(spark):

@@ -220,25 +220,6 @@ def test_embedding_top_pairs_no_nested_loop(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_pivot_to_vectors_is_arrow_not_row_udf(spark, sf_dir):
-    """The A11 pivot (task 2.2 MLlib-interop path) crosses the Python
-    boundary exactly once, Arrow-batched — never a row-at-a-time
-    BatchEvalPython stage. Everything upstream (vocab join, sorted struct
-    array) stays JVM-side."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
-        pivot_to_sparse_vectors,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.operators.term_matrix import (
-        term_doc_counts,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.operators.tfidf import tfidf
-
-    m = tfidf(term_doc_counts(load_table(spark, sf_dir, "documents")))
-    plan = _plan(pivot_to_sparse_vectors(m))
-    assert "BatchEvalPython" not in plan
-    assert plan.count("ArrowEvalPython") == 1
-
-
 def test_hash_split_is_shuffle_free(spark, sf_dir):
     """Deterministic split assignment is a pure map-side projection over the
     scan: no shuffle, no RNG expression."""

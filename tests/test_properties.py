@@ -250,42 +250,6 @@ def test_contamination_matches_python_ngram_overlap(spark, docs, n_eval):
     assert kept == {i for i, _ in rows} - set(want)
 
 
-@pytest.mark.slow
-@SETTINGS
-@given(
-    lines=st.lists(
-        st.tuples(st.lists(_WORDS, min_size=0, max_size=7), st.sampled_from([".", "!", "?", '"', "", " x"])),
-        min_size=0,
-        max_size=8,
-    )
-)
-def test_c4_filter_matches_python_rules(spark, lines):
-    """c4_line_filter == the same rules applied in pure Python, any page."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import c4_line_filter
-
-    text = "\n".join(" ".join(ws) + end for ws, end in lines)
-    frame = spark.createDataFrame([(1, text)], "doc_id long, text string")
-
-    def keep_line(l):
-        import re
-
-        return (
-            re.search(r'[.!?"\'][ \t\r]*$', l) is not None
-            and len(re.split(r"[ \t\r]+", l.strip())) >= 5
-            and "javascript" not in l.lower()
-        )
-
-    kept = [l for l in text.split("\n") if keep_line(l)]
-    page_ok = len(kept) >= 3 and "lorem ipsum" not in text.lower() and "{" not in text
-    out = c4_line_filter(frame).collect()
-    if not page_ok:
-        assert out == []
-    else:
-        assert len(out) == 1
-        assert out[0]["clean_text"] == "\n".join(kept)
-        assert out[0]["n_kept_lines"] == len(kept)
-
-
 word = st.text(alphabet="abcde", min_size=1, max_size=4)
 
 
