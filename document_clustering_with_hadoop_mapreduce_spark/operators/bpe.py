@@ -134,8 +134,8 @@ def bpe_train(
     one vocab-bounded aggregate for pair counts, one driver-side top-1
     (count desc, pair asc — deterministic), one lazy map-side array
     rewrite. Stops early when the best pair's mass drops below
-    ``min_frequency``. The k-row-at-a-time driver loop is the same
-    iterate-on-a-bounded-frame pattern as ``lloyd_trace_deterministic`` —
+    ``min_frequency``. The driver loop is the same
+    iterate-on-a-bounded-frame pattern as ``doc_cluster.sparse_lloyd`` —
     the state crossing the driver is ONE pair per iteration.
     """
     syms = words.select(

@@ -26,7 +26,9 @@ Every step is a DataFrame op, so the WHOLE assignment is SQL-expressible
 and DuckDB-oracle-checked (plans/queries_doc_cluster.py).
 
 The k-means|| init (``scalable_kmeans_init``, task 2.3) runs on the same
-kernel, with the held candidates labelled by their doc ids.
+kernel, with the held candidates labelled by their doc ids. The embedding
+slots (plans/queries_cluster.py) run on it too, a dense vector fed as the
+(doc_id, term, w) triples of its dimensions.
 """
 
 from __future__ import annotations
@@ -364,7 +366,8 @@ def sparse_lloyd(
 
     ``round_centroids`` enables the cross-engine float discipline (6dp
     centroids + decimal WCSS sums) so the whole trace is verifiable
-    against the unrolled DuckDB oracle in plans/queries_doc_cluster.py.
+    against the unrolled DuckDB oracles in plans/queries_doc_cluster.py
+    (tf-idf documents) and plans/queries_cluster.py (embeddings).
     Every rounding and the decimal sum run in-plan — the driver only
     holds the values Spark rounded.
 

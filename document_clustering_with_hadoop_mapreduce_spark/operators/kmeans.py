@@ -5,17 +5,15 @@ Reference parity (SURVEY.md §2.6 M1-M9):
   shipped as config strings and re-read from HDFS each iteration
   (ref sources/2.2/source/KMeans.java:167-195). Here task 2.1's 2-D fit is
   ``mllib_kmeans`` (``pyspark.ml.clustering.KMeans``, seeded, k-means||
-  init built in). ``lloyd_trace_deterministic`` is the dense Lloyd loop
-  with a fixed iteration count and the cross-engine float discipline, so
-  its per-iteration WCSS trace (M9) is value-gated by a DuckDB oracle.
-  Tasks 2.2/2.3 and their deterministic k-means|| init run on the sparse
-  per-doc kernel of ``doc_cluster`` (``sparse_lloyd``,
-  ``scalable_kmeans_init``).
+  init built in). Every other Lloyd loop — tasks 2.2/2.3, the embedding
+  slots' value-gated WCSS trace (M9) and the deterministic k-means|| init
+  — runs on the sparse per-doc kernel of ``doc_cluster``
+  (``sparse_assign``, ``sparse_lloyd``, ``scalable_kmeans_init``).
 
-Scale notes: assignment is a broadcast nearest-neighbor "join" (ref J5) —
-k×d floats to every executor, argmin via an array-of-struct min, no
-shuffle. The only exchange per Lloyd iteration is the k-group mean
-aggregate (map-side partial). Features are cached once.
+What stays here is dense nearest-centroid assignment against centroids
+the caller already holds (semdedup, the IVF and quantized indexes): a
+broadcast nearest-neighbor "join" (ref J5) — k×d floats to every
+executor, argmin via an array-of-struct min, no shuffle.
 """
 
 from __future__ import annotations
@@ -156,80 +154,6 @@ def assign_nearest_arrow(
             yield pdf
 
     return df.mapInPandas(assign, schema)
-
-
-def lloyd_trace_deterministic(
-    df: DataFrame,
-    k: int,
-    iters: int = 3,
-    features_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[tuple[int, float]]:
-    """Oracle-checkable Lloyd: deterministic init (k lowest ``id_col``),
-    a FIXED iteration count, and the cross-engine float discipline —
-    distances rounded to 6dp before the argmin, centroid means rounded to
-    6dp in-plan, WCSS summed as decimal(28,6) (exact, order-independent).
-
-    Every step is SQL-expressible, so the whole per-iteration WCSS trace
-    is verified against an unrolled DuckDB CTE (plans/queries_cluster.py)
-    — this is the hard value gate for the iterative path M6-M9 that the
-    seeded MLlib fit (non-deterministic across engines) cannot provide.
-
-    Returns [(iteration, wcss), ...]; empty clusters keep their previous
-    centroid.
-    """
-    feats = df.select(id_col, _as_double_array(F.col(features_col)).alias(features_col)).cache()
-    init_rows = feats.orderBy(id_col).limit(k).collect()
-    centroids = [list(r[features_col]) for r in init_rows]
-
-    from decimal import ROUND_HALF_UP, Decimal
-
-    trace: list[tuple[int, float]] = []
-    for it in range(iters):
-        assigned = assign_nearest(feats, centroids, features_col, round_decimals=6)
-        if it == iters - 1:
-            # final iteration: the recompute would be discarded — WCSS only
-            agg = assigned.agg(
-                F.round(
-                    F.sum(F.col("dist_sq").cast("decimal(28,6)")).cast("double"), 6
-                ).alias("wcss")
-            ).collect()[0]
-            trace.append((it, float(agg["wcss"])))
-            break
-        # ONE job per iteration: the posexplode aggregate yields both the
-        # 6dp-rounded per-(cluster,dim) means AND a per-cluster decimal
-        # WCSS partial (each row carries dist_sq exactly once, on dim 0)
-        exploded = assigned.select(
-            "cluster", "dist_sq",
-            F.posexplode(_as_double_array(F.col(features_col))).alias("dim", "x"),
-        )
-        rows = (
-            exploded.groupBy("cluster", "dim")
-            .agg(
-                F.round(F.avg("x"), 6).alias("m"),
-                F.sum(
-                    F.when(F.col("dim") == 0, F.col("dist_sq")).cast("decimal(28,6)")
-                ).alias("w_part"),
-            )
-            .collect()
-        )
-        # decimal partials sum exactly; float() then HALF_UP-quantize on the
-        # shortest repr replicates Spark's round(cast(sum AS DOUBLE), 6)
-        # (BigDecimal.valueOf + setScale(6, HALF_UP)) bit-for-bit
-        total = sum(r["w_part"] for r in rows if r["dim"] == 0)
-        wcss = float(
-            Decimal(repr(float(total))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
-        trace.append((it, wcss))
-        new_centroids = [list(c) for c in centroids]
-        dims: dict[int, list[tuple[int, float]]] = {}
-        for r in rows:
-            dims.setdefault(r["cluster"], []).append((r["dim"], r["m"]))
-        for cluster, dm in dims.items():
-            new_centroids[cluster] = [m for _, m in sorted(dm)]
-        centroids = new_centroids
-    feats.unpersist()
-    return trace
 
 
 def mllib_kmeans(

@@ -1,23 +1,28 @@
 """Clustering query surface (reference tasks 2.1-2.3, Spark-first).
 
+All three slots run on the sparse per-doc kernel of
+``operators/doc_cluster.py`` — the engine of the document slots — with
+the embeddings fed as (doc_id, term, w) triples (``_embedding_triples``:
+a dense vector is a sparse row holding every dimension).
+
 ``kmeans_assign_seeded`` is the oracle-checked single Lloyd step
-(ref sources/2.2/source/KMeansMapper.java:77-105); ``kmeans_lloyd_trace``
-extends that to the ITERATED loop — deterministic init, fixed 3
-iterations, 6dp-rounded centroids/distances and decimal WCSS sums —
-so DuckDB verifies the per-iteration WCSS trace (M6-M9) value-for-value
-via an unrolled CTE. Between them the full Lloyd algebra (assignment,
-centroid recompute, loss accounting) is hash-gated, not just rows-only.
+(``sparse_assign``; ref sources/2.2/source/KMeansMapper.java:77-105);
+``kmeans_lloyd_trace`` extends that to the ITERATED loop
+(``sparse_lloyd``) — deterministic init, fixed 3 iterations,
+6dp-rounded centroids/distances and decimal WCSS sums — so DuckDB
+verifies the per-iteration WCSS trace (M6-M9) value-for-value via an
+unrolled CTE. Between them the full Lloyd algebra (assignment, centroid
+recompute, loss accounting) is hash-gated, not just rows-only.
 
 ``kmeans_parallel_sizes`` value-gates M3 (k-means|| init) end-to-end: a
 deterministic Bahmani oversampling (hash-based Bernoulli draws instead
 of the reference's unseeded ``Random``) whose candidate selection,
 weights, top-k and one-pass sizes all hash-match an unrolled DuckDB CTE.
-It runs ``doc_cluster.scalable_kmeans_init`` — the init task 2.3 starts
-its sparse Lloyd loop from — on the embeddings as (vec_id, dim, x)
-triples. Task 2.1's seeded MLlib fit (``mllib_kmeans``) is
-non-deterministic across engines, so it is pytest-gated instead
-(tests/test_kmeans.py): assignment = nearest centroid, k clusters, seeded
-reproducibility.
+It runs ``doc_cluster.scalable_kmeans_init``, the init task 2.3 starts
+its sparse Lloyd loop from. Task 2.1's seeded MLlib fit
+(``mllib_kmeans``) is non-deterministic across engines, so it is
+pytest-gated instead (tests/test_kmeans.py): assignment = nearest
+centroid, k clusters, seeded reproducibility.
 """
 
 from __future__ import annotations
@@ -25,13 +30,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.doc_cluster import scalable_kmeans_init, sparse_assign
-from ..operators.kmeans import assign_nearest, lloyd_trace_deterministic
+from ..operators.doc_cluster import (
+    scalable_kmeans_init,
+    seeded_sparse_centroids,
+    sparse_assign,
+    sparse_lloyd,
+)
 from ..sources.tables import load_table
 from .registry import register
 
 K = 5
 LLOYD_ITERS = 3
+
+
+def _embedding_triples(emb: DataFrame) -> DataFrame:
+    """The embeddings as the sparse kernel's (doc_id, term, w) triples: a
+    dense vector is a sparse row holding every dimension, the dimension
+    index (as a string) being the term."""
+    return emb.select(
+        F.col("vec_id").alias("doc_id"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "w"),
+    ).select("doc_id", F.col("dim").cast("string").alias("term"), "w")
+
 
 _ASSIGN_ORACLE = f"""
 WITH c AS (
@@ -56,16 +76,11 @@ SELECT vec_id, cid::INT AS cluster, dist_sq FROM r WHERE rn = 1
     "M4/J5: one nearest-centroid pass (euclidean, deterministic init = "
     "lowest vec_ids) — the oracle-checkable Lloyd step "
     "(ref sources/2.2/source/KMeansMapper.java:77-105)",
-    tags=("cluster", "task2.1", "task2.2"),
 )
 def q_kmeans_assign_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    # k LOWEST ids (not `id < k`): same init semantics as the oracle and
-    # lloyd_trace_deterministic even when the id space is non-contiguous
-    init = emb.orderBy("vec_id").limit(K).collect()
-    centroids = [[float(x) for x in r["embedding"]] for r in init]
-    out = assign_nearest(emb, centroids, "embedding", round_decimals=6)
-    return out.select("vec_id", "cluster", "dist_sq")
+    tri = _embedding_triples(load_table(spark, sf_dir, "embeddings"))
+    out = sparse_assign(tri, seeded_sparse_centroids(tri, K, "w"), weight_col="w")
+    return out.withColumnRenamed("doc_id", "vec_id")
 
 
 def _lloyd_trace_oracle(k: int, iters: int) -> str:
@@ -74,9 +89,13 @@ def _lloyd_trace_oracle(k: int, iters: int) -> str:
     6dp-rounded per-dim means. Seeds via ORDER BY vec_id LIMIT k with
     row_number-derived cluster ids (the engine's exact init semantics —
     no contiguous-id assumption), and a cluster that empties at iteration
-    i keeps its iteration-i centroid (c{i+1} chains from c{i}, NOT from
-    c0) — the exact float discipline and empty-cluster rule of
-    operators.kmeans.lloyd_trace_deterministic."""
+    i drops out of iteration i+1 (c{i+1} is m{i}) — the float discipline
+    and empty-cluster rule of
+    operators.doc_cluster.sparse_lloyd(round_centroids=6)."""
+    # AS MATERIALIZED: DuckDB inlines a CTE at every reference; a{i}
+    # feeds both iteration i's WCSS and its recompute m{i}, which the next
+    # assignment reads, so un-materialised every iteration replays the
+    # whole chain before it.
     ctes = [
         """e AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS dim, unnest(embedding)::DOUBLE AS x
@@ -91,7 +110,7 @@ def _lloyd_trace_oracle(k: int, iters: int) -> str:
     wcss_parts = []
     for i in range(iters):
         c, a, m, nc = f"c{i}", f"a{i}", f"m{i}", f"c{i + 1}"
-        ctes.append(f"""{a} AS (
+        ctes.append(f"""{a} AS MATERIALIZED (
   SELECT vec_id, cluster, dist_sq,
          row_number() OVER (PARTITION BY vec_id ORDER BY dist_sq ASC, cluster ASC) AS rn
   FROM (
@@ -106,15 +125,12 @@ def _lloyd_trace_oracle(k: int, iters: int) -> str:
             f"FROM {a} WHERE rn = 1"
         )
         if i < iters - 1:
-            ctes.append(f"""{m} AS (
+            ctes.append(f"""{m} AS MATERIALIZED (
   SELECT a.cluster, e.dim, round(avg(e.x), 6) AS m
   FROM e JOIN (SELECT vec_id, cluster FROM {a} WHERE rn = 1) a USING (vec_id)
   GROUP BY a.cluster, e.dim
 )""")
-            ctes.append(f"""{nc} AS (
-  SELECT {c}.cluster, {c}.dim, coalesce({m}.m, {c}.m) AS m
-  FROM {c} LEFT JOIN {m} USING (cluster, dim)
-)""")
+            ctes.append(f"{nc} AS (SELECT cluster, dim, m FROM {m})")
     union = " UNION ALL ".join(wcss_parts)
     return "WITH " + ",\n".join(ctes) + f"\nSELECT iteration, wcss FROM ({union}) ORDER BY iteration"
 
@@ -126,18 +142,15 @@ def _lloyd_trace_oracle(k: int, iters: int) -> str:
     "3 iterations, 6dp centroid/distance rounding, decimal WCSS) -> "
     "per-iteration WCSS trace, hash-verified against an unrolled DuckDB "
     "CTE (the reference's .losses artifact, ref KMeansReducer.java:108-128)",
-    tags=("cluster", "task2.2", "bench"),
 )
 def q_kmeans_lloyd_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO fan-out: at bench scale the per-iteration jobs are task-overhead
-    # bound, so 32-way fanning the tiny cached frame costs more than the
-    # parallel distance math saves (re-measured each round on regenerated
-    # testdata: currently ~1.6 s un-fanned vs ~2.3 s fanned at sf0.1; an
-    # earlier generation measured the opposite). At cluster scale the scan
-    # has thousands of natural splits and fan-out is a no-op either way.
-    emb = load_table(spark, sf_dir, "embeddings")
-    trace = lloyd_trace_deterministic(emb, k=K, iters=LLOYD_ITERS)
-    return spark.createDataFrame(trace, "iteration INT, wcss DOUBLE").orderBy("iteration")
+    tri = _embedding_triples(load_table(spark, sf_dir, "embeddings"))
+    _, _, trace = sparse_lloyd(
+        tri, K, LLOYD_ITERS, weight_col="w", round_centroids=6, final_centroids=False
+    )
+    return spark.createDataFrame(
+        list(enumerate(trace)), "iteration INT, wcss DOUBLE"
+    ).orderBy("iteration")
 
 
 _KMEANS_PARALLEL_L = 10.0
@@ -160,23 +173,30 @@ def _scalable_init_oracle(k: int, l: float, rounds: int) -> str:
     weight-by-nearest-count over the full candidate set, top-k by
     (weight DESC, vec_id ASC), and one assignment pass for sizes."""
     lrepr = repr(float(l))
+    # AS MATERIALIZED: DuckDB inlines a CTE at every reference. c{r+1} is
+    # c{r} plus s{r}, and s{r} reads d{r} (a scan against c{r}) twice,
+    # directly and through psi{r} — un-materialised, each round expands
+    # the previous candidate set three times over, 3^rounds in all (40 s
+    # against 0.3 s materialised at sf0.001's 500 points, DuckDB 1.0 on 4
+    # cores).
     ctes = [
         "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        "c0 AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1)",
+        "c0 AS MATERIALIZED (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1)",
     ]
     for r in range(rounds):
         d = _dist_expr("e.v", "c.v")
         ctes.append(
-            f"""d{r} AS (
+            f"""d{r} AS MATERIALIZED (
   SELECT e.vec_id, min({d}) AS d
   FROM e CROSS JOIN c{r} c GROUP BY e.vec_id
 )"""
         )
         ctes.append(
-            f"psi{r} AS (SELECT CAST(sum(CAST(d AS DECIMAL(28,6))) AS DOUBLE) AS psi FROM d{r})"
+            f"psi{r} AS MATERIALIZED "
+            f"(SELECT CAST(sum(CAST(d AS DECIMAL(28,6))) AS DOUBLE) AS psi FROM d{r})"
         )
         ctes.append(
-            f"""s{r} AS (
+            f"""s{r} AS MATERIALIZED (
   SELECT e.vec_id, e.v
   FROM e JOIN d{r} USING (vec_id) CROSS JOIN psi{r}
   WHERE d > 0 AND psi > 0 AND (
@@ -188,10 +208,12 @@ def _scalable_init_oracle(k: int, l: float, rounds: int) -> str:
   )
 )"""
         )
-        ctes.append(f"c{r + 1} AS (SELECT * FROM c{r} UNION ALL SELECT * FROM s{r})")
+        ctes.append(
+            f"c{r + 1} AS MATERIALIZED (SELECT * FROM c{r} UNION ALL SELECT * FROM s{r})"
+        )
     cfin = f"c{rounds}"
     ctes.append(
-        f"""nn AS (
+        f"""nn AS MATERIALIZED (
   SELECT vec_id, cand_id FROM (
     SELECT vec_id, cand_id,
            row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cand_id ASC) AS rn
@@ -203,7 +225,7 @@ def _scalable_init_oracle(k: int, l: float, rounds: int) -> str:
 )"""
     )
     ctes.append(
-        f"""w AS (
+        f"""w AS MATERIALIZED (
   SELECT c.vec_id AS cand_id, count(nn.vec_id) AS weight
   FROM {cfin} c LEFT JOIN nn ON nn.cand_id = c.vec_id GROUP BY c.vec_id
 )"""
@@ -212,14 +234,14 @@ def _scalable_init_oracle(k: int, l: float, rounds: int) -> str:
         f"topk AS (SELECT cand_id, weight FROM w ORDER BY weight DESC, cand_id ASC LIMIT {k})"
     )
     ctes.append(
-        """cent AS (
+        """cent AS MATERIALIZED (
   SELECT row_number() OVER (ORDER BY cand_id) - 1 AS cluster, cand_id AS seed_vec_id,
          weight, e.v AS v
   FROM topk JOIN e ON e.vec_id = topk.cand_id
 )"""
     )
     ctes.append(
-        f"""fa AS (
+        f"""fa AS MATERIALIZED (
   SELECT vec_id, cluster FROM (
     SELECT vec_id, cluster,
            row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cluster ASC) AS rn
@@ -249,15 +271,9 @@ ORDER BY cluster"""
     "86-156 with the unseeded Random made reproducible) -> chosen seeds, "
     "weights, and one-pass cluster sizes. The init task 2.3 runs, on the "
     "sparse per-doc kernel over the embeddings as (vec_id, dim, x) triples",
-    tags=("cluster", "task2.3"),
 )
 def q_kmeans_parallel_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    # a dense vector is a sparse row holding every dimension
-    triples = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "w"),
-    ).select("doc_id", F.col("dim").cast("string").alias("term"), "w")
+    triples = _embedding_triples(load_table(spark, sf_dir, "embeddings"))
     init, weights = scalable_kmeans_init(
         triples, k=K, l=_KMEANS_PARALLEL_L, rounds=_KMEANS_PARALLEL_ROUNDS, weight_col="w"
     )

@@ -51,7 +51,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT dup_key, min(doc_id) AS keep_doc_id, count(*) AS group_size
     FROM keyed GROUP BY dup_key""",
     "exact dedup: hash-groupBy on a 5-token prefix key, min-id representative",
-    tags=("dedup",),
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.md5(F.concat_ws(" ", F.slice(tokens(F.col("text")), 1, 5)))
@@ -62,7 +61,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_shingles",
     _ORACLES["doc_shingles"],
     "3-word shingle sets per doc (dedup substrate), stopwords kept",
-    tags=("dedup",),
 )
 def q_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shingles(_docs(spark, sf_dir), n=3)
@@ -73,7 +71,6 @@ def q_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ORACLES["minhash_signatures"],
     "MinHash signature matrix (16 seeded universal hashes over md5-60bit "
     "shingle hashes) — bit-exact against the oracle",
-    tags=("dedup", "bench"),
 )
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures(shingle_hashes(_docs(spark, sf_dir), n=3), num_hashes=16, seed=42)
@@ -138,7 +135,6 @@ FROM r{_PR_ITERS}"""
     "candidate graph (keep-representative signal; one co-partitioned join "
     "+ one agg exchange per step, DuckDB mirror is the unrolled power "
     "iteration)",
-    tags=("dedup",),
 )
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
@@ -185,7 +181,6 @@ def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ORACLES["ngram_jaccard_pairs"],
     "exact 3-gram Jaccard >= 0.2 via shared-shingle join (small-scale "
     "baseline; at scale run only on LSH candidates)",
-    tags=("dedup",),
 )
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(shingles(_docs(spark, sf_dir), n=3), min_jaccard=0.2)
@@ -237,7 +232,6 @@ FROM safe"""
     "drawn from the salted hash of the COMPONENT key, so near-duplicate "
     "documents always land in the same split — zero extra shuffle, the "
     "split is a map-side projection of the component table",
-    tags=("dedup", "bench"),
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textstats import leakage_safe_split
@@ -293,11 +287,14 @@ def _verified_cc_oracle() -> str:
     """Mirror of lsh_candidate_pairs -> jaccard_verify_pairs ->
     duplicate_components: candidates verified against the distinct 60-bit
     shingle-hash sets (the same sets the Spark side uses), then min-label
-    components over the verified edges only."""
+    components over the verified edges only. ``sh`` (read three times)
+    and ``verified`` (read twice by v_edges, which the recursion reads
+    every step) are MATERIALIZED: DuckDB inlines a CTE at every
+    reference."""
     hash_expr = "CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)"
     return f"""
 cand AS ({_ORACLES["lsh_candidate_pairs"]}),
-sh AS (SELECT DISTINCT doc_id, {hash_expr} AS h FROM ({_ORACLES["doc_shingles"]})),
+sh AS MATERIALIZED (SELECT DISTINCT doc_id, {hash_expr} AS h FROM ({_ORACLES["doc_shingles"]})),
 szs AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
 common AS (
   SELECT c.doc_a, c.doc_b, count(*) AS n_common
@@ -306,7 +303,7 @@ common AS (
   JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
   GROUP BY c.doc_a, c.doc_b
 ),
-verified AS (
+verified AS MATERIALIZED (
   SELECT m.doc_a, m.doc_b
   FROM common m
   JOIN szs x ON x.doc_id = m.doc_a
@@ -339,6 +336,9 @@ def _curation_oracle() -> str:
     # matrix CTEs for the unigram-LM score (strip the leading WITH so they
     # splice into the recursive CTE list)
     matrix_ctes = MATRIX_CTE.strip().removeprefix("WITH")
+    # AS MATERIALIZED: DuckDB inlines a CTE at every reference — fun is
+    # read six times and flags twice, each replaying every join below
+    # (the CC recursion included); decon_h feeds eval_set and its join
     return f"""
 WITH RECURSIVE {_verified_cc_oracle()},
 {dsir_oracle_cte(_DSIR_TGT_SQL, n_buckets=_DSIR_B)},
@@ -357,7 +357,7 @@ decon_t AS (
                      t -> t <> '') AS toks
   FROM documents
 ),
-decon_h AS (
+decon_h AS MATERIALIZED (
   SELECT doc_id,
          CAST(('0x' || substr(md5(array_to_string(toks[i:i+{_DECONTAM_N - 1}], ' ')), 1, 15)) AS BIGINT) AS h
   FROM decon_t, UNNEST(generate_series(1, len(toks) - {_DECONTAM_N - 1})) AS t(i)
@@ -377,7 +377,7 @@ q AS (
                / nullif({n_tokens}, 0), 6) AS stopword_ratio
   FROM documents
 ),
-flags AS (
+flags AS MATERIALIZED (
   SELECT q.doc_id, q.lang, q.n_tokens::BIGINT AS n_tokens, q.n_chars::BIGINT AS n_chars,
          q.stopword_ratio, q.punct_ratio,
          x.cross_entropy, w.log_weight AS dsir_logw,
@@ -391,7 +391,7 @@ flags AS (
   LEFT JOIN ds_w w ON w.doc_id = q.doc_id
   LEFT JOIN contaminated k ON k.doc_id = q.doc_id
 ),
-fun AS (
+fun AS MATERIALIZED (
   SELECT count(*)::BIGINT AS n0,
          count_if(g1)::BIGINT AS n1,
          count_if(g1 AND g2)::BIGINT AS n2,
@@ -442,7 +442,6 @@ SELECT 'funnel', NULL::BIGINT, NULL::VARCHAR, NULL::BIGINT, NULL::BIGINT,
     "pipeline a training-data build runs; all stages map-side except the "
     "LSH join, the pair-bounded verify joins, the vocab-sized LM join and "
     "the CC flood",
-    tags=("dedup", "textstats"),
 )
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.decontam import contamination_stats
@@ -654,7 +653,6 @@ UNION ALL SELECT 'm_ndcg', query_id, NULL::BIGINT, ndcg_at_k, NULL::INT FROM met
     "top-10 for data-derived per-lang queries (kind='bm25'), RRF hybrid of "
     "BM25 + term-frequency rankings (kind='rrf'), and per-query "
     "recall@k/MRR/nDCG@k of the fused list (kind='m_*')",
-    tags=("dedup", "retrieval"),
 )
 def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -802,7 +800,6 @@ SELECT 'pair' AS kind, a AS id_a, b AS id_b, hamming::BIGINT AS value FROM pairs
     "near-dup pairs (pigeonhole recall-1, hot-bucket star guard), fused into "
     "one value-gated result: kind='fp' rows carry (doc_id, simhash), "
     "kind='pair' rows carry (doc_a, doc_b, hamming)",
-    tags=("dedup",),
 )
 def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers (direct fp rows + the banding) and no subtree reuse

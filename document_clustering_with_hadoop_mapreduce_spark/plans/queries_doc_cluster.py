@@ -37,12 +37,16 @@ K = 5
 # ||d||^2 + ||c||^2 - 2*dot, a zero-overlap pair's dot being 0 — the
 # algebra of operators.doc_cluster.sparse_assign (which takes all K dots
 # in one per-doc aggregate; the oracle spells out the grid).
+# AS MATERIALIZED: DuckDB inlines a CTE at every reference; cents feeds
+# cent_ss and dots, and doc_cluster_top_terms reads assign in its
+# silhouette CTE and through members, which its label-metric CTEs read
+# about ten times — un-materialised, each reference replays the grid.
 _ASSIGN_CTES = f"""{TFIDF_CTE},
 seed_docs AS (
   SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS cluster
   FROM (SELECT DISTINCT doc_id FROM tfidf) ORDER BY doc_id LIMIT {K}
 ),
-cents AS (
+cents AS MATERIALIZED (
   SELECT s.cluster, t.term, t.tfidf AS w
   FROM tfidf t JOIN seed_docs s USING (doc_id)
 ),
@@ -59,7 +63,7 @@ dists AS (
   FROM doc_ss d CROSS JOIN cent_ss s
   LEFT JOIN dots o ON o.doc_id = d.doc_id AND o.cluster = s.cluster
 ),
-assign AS (
+assign AS MATERIALIZED (
   SELECT doc_id, cluster, dist_sq,
          row_number() OVER (PARTITION BY doc_id ORDER BY dist_sq ASC, cluster ASC) AS rn
   FROM dists
@@ -100,7 +104,6 @@ def _tfidf_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "task 2.2 Spark-first: nearest-centroid assignment of tf-idf documents "
     "on SPARSE vectors via relational algebra (||d||^2+||c||^2-2 dot; no "
     "dense pivot — ref dense pipeline sources/2.2/source/ConvertInput.java)",
-    tags=("cluster", "task2.2", "bench"),
 )
 def q_doc_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _tfidf_matrix(spark, sf_dir)
@@ -135,7 +138,6 @@ def q_doc_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "evaluation (ARI / NMI / purity vs documents.lang) plus the internal "
     "simplified silhouette, which the reference never computed; hash-gated "
     "against the same pair-counting / distance algebra in DuckDB",
-    tags=("cluster", "task2.2", "eval"),
 )
 def q_doc_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _tfidf_matrix(spark, sf_dir)
@@ -185,7 +187,6 @@ def q_doc_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "P9/P10: the task 1.5 report lines — 'Business: term:0.12, ...' with "
     "initcap label and 2-decimal values "
     "(ref sources/1.5/source/task_1_5.java:127-140)",
-    tags=("text", "task1.5"),
 )
 def q_category_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.category import category_avg_tfidf
@@ -228,16 +229,21 @@ def _sparse_lloyd_oracle(k: int, iters: int) -> str:
     per iteration, ||d||^2+||c||^2-2·dot assignment on 6dp-rounded
     distances, decimal WCSS, then 6dp-rounded sparse centroid recompute
     (empty clusters drop out, same as the Spark side)."""
+    # AS MATERIALIZED: DuckDB inlines a CTE at every reference; cents{i+1}
+    # reads members{i} twice (directly and via nm{i}), and each of those
+    # reaches cents{i} twice (cent_ss{i}, dots{i}) — un-materialised the
+    # chain re-expands exponentially in the iterations.
     ctes = [
         f"""seed_docs AS (
   SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS cluster
   FROM (SELECT DISTINCT doc_id FROM tfidf) ORDER BY doc_id LIMIT {k}
 )""",
-        """cents0 AS (
+        """cents0 AS MATERIALIZED (
   SELECT s.cluster, t.term, t.tfidf AS w
   FROM tfidf t JOIN seed_docs s USING (doc_id)
 )""",
-        "doc_ss AS (SELECT doc_id, sum(tfidf * tfidf) AS doc_ss FROM tfidf GROUP BY doc_id)",
+        "doc_ss AS MATERIALIZED "
+        "(SELECT doc_id, sum(tfidf * tfidf) AS doc_ss FROM tfidf GROUP BY doc_id)",
     ]
     wcss_parts = []
     for i in range(iters):
@@ -250,7 +256,7 @@ def _sparse_lloyd_oracle(k: int, iters: int) -> str:
   FROM tfidf t JOIN {c} c USING (term)
   GROUP BY t.doc_id, c.cluster
 )""")
-        ctes.append(f"""assign{i} AS (
+        ctes.append(f"""assign{i} AS MATERIALIZED (
   SELECT doc_id, cluster, dist_sq,
          row_number() OVER (PARTITION BY doc_id ORDER BY dist_sq ASC, cluster ASC) AS rn
   FROM (
@@ -267,12 +273,12 @@ def _sparse_lloyd_oracle(k: int, iters: int) -> str:
         )
         if i < iters - 1:
             ctes.append(
-                f"members{i} AS (SELECT doc_id, cluster FROM assign{i} WHERE rn = 1)"
+                f"members{i} AS MATERIALIZED (SELECT doc_id, cluster FROM assign{i} WHERE rn = 1)"
             )
             ctes.append(
                 f"nm{i} AS (SELECT cluster, count(*) AS n FROM members{i} GROUP BY cluster)"
             )
-            ctes.append(f"""cents{i + 1} AS (
+            ctes.append(f"""cents{i + 1} AS MATERIALIZED (
   SELECT m.cluster, t.term, round(sum(t.tfidf) / any_value(n.n), 6) AS w
   FROM tfidf t JOIN members{i} m USING (doc_id) JOIN nm{i} n ON n.cluster = m.cluster
   GROUP BY m.cluster, t.term
@@ -292,7 +298,6 @@ def _sparse_lloyd_oracle(k: int, iters: int) -> str:
     "assignment aggregate + one (cluster, term) recompute aggregate per "
     "iteration, centroids never densified, 6dp float discipline) -> "
     "per-iteration WCSS, hash-verified against an unrolled DuckDB CTE",
-    tags=("cluster", "task2.2"),
 )
 def q_doc_kmeans_sparse_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.doc_cluster import sparse_lloyd

@@ -31,7 +31,6 @@ _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
            count(*) AS n_events, {_DSUM} AS sum_value
     FROM events GROUP BY 1, 2""",
     "tumbling 1h window x event_type rollup (streaming twin in streaming/)",
-    tags=("events", "bench"),
 )
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_hourly(load_table(spark, sf_dir, "events"))
@@ -57,7 +56,6 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_DSUM} AS sum_value
     FROM s GROUP BY user_id, session_idx""",
     "gaps-and-islands sessionization (30-min gap) + per-session stats",
-    tags=("events", "window"),
 )
 def q_events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load_table(spark, sf_dir, "events"))
@@ -91,7 +89,6 @@ def _user_activity_fused_oracle() -> str:
     "(kind='retention': users grouped by first-seen ISO week, share of the "
     "cohort still active in each later week — one corpus-sized distinct on "
     "(user, week), then calendar-bounded frames only)",
-    tags=("events",),
 )
 def q_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -293,7 +290,6 @@ def _bpe_ctes(n_merges: int, min_freq: int) -> str:
     "vocab-bounded agg + top-1 per merge, never a corpus re-scan) and "
     "each doc's learned-tokenizer token count (n_bpe_learned; distinct "
     "words encode once via an Arrow batch UDF)",
-    tags=("textstats",),
 )
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -435,7 +431,6 @@ def _lang_oracle() -> str:
     "interpolated bigram-LM quality score (kind='lm': CCNet-style "
     "cross-entropy per doc, Jelinek-Mercer lam=0.75, order-independent "
     "decimal ln sums — the order-SENSITIVE twin of the unigram score)",
-    tags=("textstats",),
 )
 def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -550,7 +545,6 @@ def _winnow_fused_oracle() -> str:
     f"{_WINNOW_MIN_SHARED} df-capped winnow fingerprints, kind='span' rows "
     "add the aligned min/max k-gram offset hull on each side — the "
     "partial-overlap primitive whole-doc hashing cannot express",
-    tags=("textstats", "dedup"),
 )
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -648,7 +642,6 @@ _PACK_STREAMS = 32
     f"{_PACK_MAX_TOKENS}-token training sequence via {_PACK_STREAMS} "
     "salted independent packing streams — one corpus scan, one "
     "stream-partitioned window, split stamped map-side on top",
-    tags=("textstats",),
 )
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textstats import sequence_pack, split_assignment
@@ -688,7 +681,6 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hypertable-style multi-granularity rollup: CUBE(day, event_type) in "
     "one pass (Expand is map-side; fact table read once), grouping_id tags "
     "each aggregation level",
-    tags=("events",),
 )
 def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.events import events_rollup
@@ -708,7 +700,6 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact interpolated percentiles per event type (Spark percentile() == "
     "DuckDB quantile_cont, verified to 6dp); at 100 TB swap in "
     "approx_percentile whose t-digest merges map-side",
-    tags=("events",),
 )
 def q_events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -776,7 +767,6 @@ def _stratified_fused_oracle() -> str:
     "kind='budget_doc' rows are sample_to_budget's kept documents under "
     "those rates — the Pile/Doremi-style 'N tokens of lang X' recipe, "
     "driver-gated end to end",
-    tags=("textstats",),
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F

@@ -50,7 +50,6 @@ def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM media""",  # ASCII fixture => VARCHAR hash == blob hash (see _MEDIA_CTE)
     "multimodal: typed metadata + content hash per binary payload "
     "(dedup/bucketing key); plumbing for opaque image/audio/video columns",
-    tags=("multimodal",),
 )
 def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_metadata(_media(spark, sf_dir))
@@ -79,7 +78,6 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal: exact blob-level dedup groups by content hash "
     "(keeper = lowest media_id); payloads derived modulo-100 so duplicate "
     "groups are non-empty by construction",
-    tags=("multimodal", "dedup"),
 )
 def q_media_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = load_table(spark, sf_dir, "documents").select(
@@ -114,7 +112,6 @@ def q_media_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM frames""",
     "multimodal: every 4th 64-byte slice as a sampled 'frame' row "
     "(video frame-sampling shape; decoder stubbed, plumbing real)",
-    tags=("multimodal",),
 )
 def q_media_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_samples(_media(spark, sf_dir), frame_bytes=64, stride=4, max_frames=8)
@@ -143,7 +140,6 @@ _HIST_ZERO = ", ".join(f"CAST(coalesce(h.h{b}, 0) AS BIGINT) AS h{b}" for b in r
     FROM media m LEFT JOIN hist h USING (media_id)""",
     "multimodal: Arrow-batched mapInPandas byte-histogram featurizer "
     "(the drop-in slot for real image/audio feature extraction)",
-    tags=("multimodal",),
 )
 def q_media_byte_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return byte_histograms(_media(spark, sf_dir))

@@ -41,7 +41,6 @@ def _davg(expr: str, scale: int = 6) -> str:
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus""",
     "TPC-H Q1 shape: scan-filter-aggregate (pushdown + partial agg)",
-    tags=("relational",),
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.pricing_summary(_t(spark, sf_dir, "lineitem"))
@@ -59,7 +58,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region   ON n_regionkey = r_regionkey
     GROUP BY r_name, n_name""",
     "TPC-H Q5 shape: 5-way join, dims broadcast, one shuffle join",
-    tags=("relational",),
 )
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.revenue_by_nation(
@@ -82,7 +80,6 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_orderkey ASC
     LIMIT 10""",
     "TPC-H Q3 shape: selective join + agg + deterministic global top-k",
-    tags=("relational",),
 )
 def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.top_revenue_orders(
@@ -97,7 +94,6 @@ def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_name FROM customer
     WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)""",
     "anti join (left_anti): customers with no order above 400k",
-    tags=("relational",),
 )
 def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.customers_without_orders(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders"))
@@ -112,7 +108,6 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c_custkey, c_name, n_orders FROM customer JOIN big ON c_custkey = o_custkey""",
     "semi-join shape: customers with >= 5 orders",
-    tags=("relational",),
 )
 def q_repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.repeat_customers(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders"))
@@ -134,7 +129,6 @@ def q_repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w JOIN customer ON o_custkey = c_custkey
     WHERE rn <= 3""",
     "window functions: row_number + ordered cumulative sum",
-    tags=("relational", "window"),
 )
 def q_customer_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.customer_recent_orders(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders"))
@@ -150,7 +144,6 @@ def q_customer_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT c_custkey, 'dormant_neg' AS segment FROM (SELECT * FROM neg EXCEPT ALL SELECT * FROM with_orders)""",
     "set ops: INTERSECT + EXCEPT ALL + UNION ALL (planned as semi/anti hash joins)",
-    tags=("relational",),
 )
 def q_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.customer_set_ops(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders"))
@@ -168,7 +161,6 @@ def q_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(total_spend, 0) AS total_spend
     FROM customer FULL OUTER JOIN totals ON c_custkey = o_custkey""",
     "full outer join with orphans on both sides, null-filled aggregates",
-    tags=("relational",),
 )
 def q_customer_order_totals_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.customer_order_totals_outer(_t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders"))
@@ -187,7 +179,6 @@ def q_customer_order_totals_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     "as-of (point-in-time) join: latest purchase at/before each click — "
     "Spark side is the union + forward-fill window pattern (one exchange "
     "on user_id, no range explosion); oracle is DuckDB's native ASOF JOIN",
-    tags=("relational", "events", "window"),
 )
 def q_events_asof_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -213,7 +204,6 @@ def q_events_asof_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders""",
     "event-time RANGE window: trailing-30-day spend per order (sliding "
     "feature-window shape; one exchange on custkey)",
-    tags=("relational", "window"),
 )
 def q_rolling_30d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.rolling_30d_spend(_t(spark, sf_dir, "orders"))

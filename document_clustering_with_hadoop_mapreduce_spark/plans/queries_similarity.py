@@ -51,7 +51,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, vec_id, cos, rank FROM r WHERE rank <= 5""",
     "exact cosine top-5 neighbors for each of the first 5 query vectors "
     "(broadcast queries, one scan, window top-k)",
-    tags=("similarity", "bench"),
 )
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-pass distance math per row: fan the single-row-group scan out so
@@ -100,7 +99,6 @@ def _planes_values_sql() -> str:
     "10 the sub-block count auto-sizes PER BUCKET from sampled occupancy, "
     "so hot buckets spread to ~target_bucket_rows-per-side tasks and cold "
     "buckets pay zero replication, with no caller-side skew knowledge)",
-    tags=("similarity",),
 )
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_bucketed_topk(_emb(spark, sf_dir), PLANES, k=3)
@@ -219,7 +217,6 @@ def _semdedup_fused_oracle() -> str:
     "its declared positive, removed by the pair-sized anti join, and the "
     "3 hardest surviving candidates re-rank densely — broadcast-probe "
     "scan, positives never corpus-sized",
-    tags=("similarity", "dedup"),
 )
 def q_embedding_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import mine_hard_negatives
@@ -410,7 +407,6 @@ _IVF_INDEX_CACHE: dict[
     "reconstructions — what a code-only store can do; 4x scan/shuffle "
     "bytes cut at 100 TB). direct and indexed slices are row-identical "
     "by contract; the oracle pins every slice.",
-    tags=("similarity",),
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os

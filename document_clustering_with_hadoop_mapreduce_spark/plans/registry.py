@@ -13,7 +13,7 @@ sf0.01 and hash-compares values, so:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,15 +33,14 @@ class Query:
     spark: SparkQuery
     oracle: str | None  # None => non-SQL-expressible, rows-only check
     description: str = ""
-    tags: tuple[str, ...] = field(default=())
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None, description: str = "", tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None, description: str = ""):
     def deco(fn: SparkQuery) -> SparkQuery:
-        _REGISTRY[name] = Query(name, fn, oracle, description, tags)
+        _REGISTRY[name] = Query(name, fn, oracle, description)
         return fn
 
     return deco
@@ -104,7 +103,6 @@ def _n_docs(spark: SparkSession, sf_dir: str) -> int:
     f"{MATRIX_CTE} SELECT doc_id, term, cnt FROM matrix",
     "A1/S1-S5: tokenize+clean+stopword-drop -> sparse (doc,term,cnt) matrix "
     "(ref sources/1.1/source/task1_1.java:40-74)",
-    tags=("text", "task1.1"),
 )
 def q_term_doc_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return term_doc_counts(_docs(spark, sf_dir))
@@ -117,7 +115,6 @@ def q_term_doc_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, term, cnt FROM tot WHERE corpus_freq >= 3""",
     "A2: group-HAVING with member fan-back, corpus freq >= 3 "
     "(ref sources/1.2/source/task1_2.java:45-68)",
-    tags=("text", "task1.2"),
 )
 def q_term_filter_min3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filter_min_corpus_freq(term_doc_counts(_docs(spark, sf_dir)), 3)
@@ -130,7 +127,6 @@ def q_term_filter_min3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY total_freq DESC, term ASC LIMIT 10""",
     "A3+A4: global top-10 terms by corpus frequency "
     "(ref sources/1.3/source/Task1_3.java:34-63)",
-    tags=("text", "task1.3"),
 )
 def q_top_terms_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = term_totals(term_doc_counts(_docs(spark, sf_dir)))
@@ -142,7 +138,6 @@ def q_top_terms_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"{TFIDF_CTE} SELECT doc_id, term, round(tfidf, 6) AS tfidf FROM tfidf",
     "A5+A6: standard tf-idf, tf = cnt/doc_total, idf = ln(N/df_term) "
     "(ref sources/1.4/source/task1_4.java:76-141, corrected semantics)",
-    tags=("text", "task1.4"),
 )
 def q_tfidf_standard(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = tfidf(term_doc_counts(_docs(spark, sf_dir)), n_docs=_n_docs(spark, sf_dir))
@@ -163,7 +158,6 @@ def q_tfidf_standard(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tf, n""",
     "N1 bug-compat tf-idf: 'idf' counts distinct terms per DOCUMENT "
     "(ref sources/1.4/source/task1_4.java:110-128, SURVEY.md §2.7-N1)",
-    tags=("text", "task1.4", "compat"),
 )
 def q_tfidf_compat_n1(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = tfidf(
@@ -194,7 +188,6 @@ def q_tfidf_compat_n1(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT category, term, avg_tfidf, rank FROM ranked WHERE rank <= 5""",
     "A7-A9: top-5 terms per category by average tf-idf "
     "(ref sources/1.5/source/task_1_5.java; category = documents.lang)",
-    tags=("text", "task1.5"),
 )
 def q_category_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.category import category_avg_tfidf

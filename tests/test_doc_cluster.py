@@ -102,22 +102,47 @@ _TIE_DOCS = [
     (6, "stream batch join spark"),
     (7, "query row row table merge"),
 ]
+# the same tie on dense input: vectors 0 and 1 coincide
+_TIE_VECS = [
+    (0, [1.0, 0.0]),
+    (1, [1.0, 0.0]),
+    (2, [0.0, 3.0]),
+    (3, [0.9, 0.2]),
+    (4, [0.2, 2.5]),
+    (5, [4.0, 4.0]),
+]
 
 
-def test_sparse_lloyd_empty_cluster_drops_out_like_oracle(spark):
+@pytest.mark.parametrize("case", ["tfidf_docs", "embeddings"])
+def test_sparse_lloyd_empty_cluster_drops_out_like_oracle(spark, case):
     """Driver-side centroid bookkeeping: the tie-break empties cluster 1,
     which drops out while clusters 0 and 2 keep their ids; the WCSS trace
-    equals the unrolled DuckDB oracle over the same documents."""
+    equals the unrolled DuckDB oracle over the same input — tf-idf
+    documents against the document slots' oracle, dense embeddings (as
+    triples) against the embedding slots' oracle."""
     import duckdb
     import pandas as pd
 
     from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import sparse_lloyd
+    from document_clustering_with_hadoop_mapreduce_spark.plans.queries_cluster import (
+        _embedding_triples,
+        _lloyd_trace_oracle,
+    )
     from document_clustering_with_hadoop_mapreduce_spark.plans.queries_doc_cluster import (
         _sparse_lloyd_oracle,
     )
 
-    docs = spark.createDataFrame(_TIE_DOCS, "doc_id BIGINT, text STRING")
-    m = tfidf(term_doc_counts(docs), n_docs=len(_TIE_DOCS))
+    con = duckdb.connect()
+    if case == "tfidf_docs":
+        docs = spark.createDataFrame(_TIE_DOCS, "doc_id BIGINT, text STRING")
+        m, weight_col = tfidf(term_doc_counts(docs), n_docs=len(_TIE_DOCS)), "tfidf"
+        con.register("documents", pd.DataFrame(_TIE_DOCS, columns=["doc_id", "text"]))
+        oracle = _sparse_lloyd_oracle(3, 3)
+    else:
+        emb = spark.createDataFrame(_TIE_VECS, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+        m, weight_col = _embedding_triples(emb), "w"
+        con.register("embeddings", pd.DataFrame(_TIE_VECS, columns=["vec_id", "embedding"]))
+        oracle = _lloyd_trace_oracle(3, 3)
     first = {}
 
     def on_iteration(it, assigned, new_cents, wcss):
@@ -126,17 +151,15 @@ def test_sparse_lloyd_empty_cluster_drops_out_like_oracle(spark):
             first["clusters"] = sorted({r["cluster"] for r in new_cents.collect()})
 
     assigned, cents, trace = sparse_lloyd(
-        m, k=3, max_iter=3, round_centroids=6, final_centroids=False,
-        on_iteration=on_iteration,
+        m, k=3, max_iter=3, weight_col=weight_col, round_centroids=6,
+        final_centroids=False, on_iteration=on_iteration,
     )
     assert first["assigned"][1] == (0, 0.0)
     assert first["clusters"] == [0, 2]
     assert {r["cluster"] for r in assigned.collect()} <= {0, 2}
     assert sorted({r["cluster"] for r in cents.collect()}) == [0, 2]
 
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame(_TIE_DOCS, columns=["doc_id", "text"]))
-    want = con.execute(_sparse_lloyd_oracle(3, 3)).fetchall()
+    want = con.execute(oracle).fetchall()
     con.close()
     assert [f"{w:.6f}" for w in trace] == [f"{w:.6f}" for _, w in want]
 

@@ -10,8 +10,10 @@ from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
     assign_nearest,
-    lloyd_trace_deterministic,
     mllib_kmeans,
+)
+from document_clustering_with_hadoop_mapreduce_spark.plans.queries_cluster import (
+    _embedding_triples,
 )
 from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -31,8 +33,12 @@ def test_assign_nearest_is_argmin(spark, sf_dir):
 
 
 def test_lloyd_wcss_non_increasing(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    wcss = [w for _, w in lloyd_trace_deterministic(emb, k=4, iters=6)]
+    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import sparse_lloyd
+
+    tri = _embedding_triples(load_table(spark, sf_dir, "embeddings"))
+    _, _, wcss = sparse_lloyd(
+        tri, k=4, max_iter=6, weight_col="w", round_centroids=6, final_centroids=False
+    )
     assert len(wcss) >= 2
     for a, b in zip(wcss, wcss[1:]):
         assert b <= a + 1e-6, f"WCSS increased: {wcss}"
@@ -101,10 +107,7 @@ def test_scalable_init_deterministic_and_bahmani_shaped(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    triples = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "w"),
-    ).select("doc_id", F.col("dim").cast("string").alias("term"), "w")
+    triples = _embedding_triples(emb)
     init1, w1 = scalable_kmeans_init(triples, k=5, l=10.0, rounds=3, weight_col="w")
     init2, w2 = scalable_kmeans_init(triples, k=5, l=10.0, rounds=3, weight_col="w")
     rows1 = sorted(tuple(r) for r in init1.collect())

@@ -30,8 +30,8 @@ FAST_SMOKE = {
     "minhash_signatures",
     "dedup_components",
     "top_terms_global",
+    # the embedding slots, as triples on the sparse Lloyd engine's kernel
     "kmeans_assign_seeded",
-    # the only value gate on the dense Lloyd loop (lloyd_trace_deterministic)
     "kmeans_lloyd_trace",
     "term_filter_min3",
     "tfidf_standard",
