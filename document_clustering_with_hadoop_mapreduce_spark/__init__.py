@@ -7,7 +7,7 @@ operators a large-scale training-data pipeline needs (dedup, similarity
 search, text analysis, multimodal plumbing).
 
 Design stance (SURVEY.md §7):
-- DataFrame / Catalyst / MLlib native; RDDs never appear.
+- DataFrame / Catalyst native; RDDs never appear.
 - Explicit schemas, seeded determinism, no driver-side materialization.
 - Reference quirks (SURVEY.md §2.7 N1-N7) live behind ``compat`` shims.
 - Every operator is a composable ``DataFrame -> DataFrame`` function.

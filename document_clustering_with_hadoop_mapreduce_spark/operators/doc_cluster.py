@@ -33,7 +33,6 @@ slots (plans/queries_cluster.py) run on it too, a dense vector fed as the
 
 from __future__ import annotations
 
-from itertools import groupby, islice
 from typing import NamedTuple
 
 import pyarrow as pa
@@ -329,13 +328,6 @@ def cluster_top_terms(
     )
 
 
-def _top_t(rows, t: int) -> list:
-    """Each cluster's T strongest (cluster, term, w) rows: weight desc,
-    term asc tie-break."""
-    rows = sorted(rows, key=lambda r: (r[0], -r[2], r[1]))
-    return [r for _, g in groupby(rows, key=lambda r: r[0]) for r in islice(g, t)]
-
-
 def sparse_lloyd(
     matrix: DataFrame,
     k: int,
@@ -344,7 +336,6 @@ def sparse_lloyd(
     round_centroids: int | None = None,
     final_centroids: bool = True,
     on_iteration=None,
-    centroid_top_t: int | None = None,
     cache_matrix: bool = True,
     init: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, list[float]]:
@@ -384,14 +375,6 @@ def sparse_lloyd(
     reference-layout artifact sinks attach to (sources/artifacts.py; ref
     per-iteration writes at sources/2.2/source/KMeansReducer.java:25-131).
     Both frames are lazy; neither is cached.
-
-    ``centroid_top_t`` enables the sparse-projection scale path: each
-    recomputed centroid keeps only its T strongest terms (weight desc,
-    term asc tie-break), capping the per-iteration broadcast at k x T.
-    After one mean, an exact centroid's support is the UNION of member
-    supports (~vocabulary-sized for big clusters); truncation is the
-    standard sparse-projection step of large-scale spherical k-means.
-    Approximate by definition — the oracle-gated trace leaves it None.
 
     The matrix feeds the seed collect and every iteration's query —
     separate jobs, so it is cached here for the loop's lifetime unless
@@ -445,10 +428,7 @@ def sparse_lloyd(
                 .collect()
             )
             wcss = rows[0]["wcss"]
-            rows = [r[:3] for r in rows]
-            if centroid_top_t is not None:
-                rows = _top_t(rows, centroid_top_t)
-            cents = _hold(spark, rows)
+            cents = _hold(spark, [r[:3] for r in rows])
             new_cents = cents.frame()
         else:
             wcss = per_doc.agg(total(F.sum(dist))).collect()[0][0]

@@ -114,9 +114,8 @@ def _round6(c):
     Magnitude contract: exact only while |c|*1e6 < 2^52 — already at odd
     integers in [2^52, 2^53) the +0.5 is unrepresentable (ulp = 1) and
     rounds half-to-even up, landing the floor one past the true value
-    (verified numerically at 2^52 + 1; see the enforced twin guard in
-    kmeans.assign_nearest_arrow). Always true for cosines (|c| <= 1) and
-    any score in [-4.5e9, 4.5e9].
+    (verified numerically at 2^52 + 1). Always true for cosines
+    (|c| <= 1) and any score in [-4.5e9, 4.5e9].
     """
     import numpy as np
 
@@ -985,13 +984,6 @@ def quantized_ivf_topk(
     )
 
 
-# HOF assignment is O(k*d) INTERPRETED work per row (~1 us/element); fine
-# for the handful-of-centroids queries, a scale-killer once k grows with
-# the corpus the way SemDeDup prescribes (10k-100k clusters at web scale).
-# Above kmeans.ARROW_ASSIGN_MIN_K, semdedup switches to the shared Arrow
-# batch assignment (kmeans.assign_nearest_arrow).
-
-
 def semdedup(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -1023,8 +1015,10 @@ def semdedup(
     candidate volume is sum_c |c|^2 — controlled by k, which SemDeDup
     scales with the corpus (n/k vectors per cluster; the paper uses
     ~10k-100k clusters at web scale). Assignment is one map-side pass
-    against a k x d literal (``assign_nearest``); no global pair
-    enumeration, no broadcast of any per-document frame. The drop rule is
+    against a k x d literal (``assign_nearest``): interpreted O(k*d) work
+    per vector, cheap at the slot's k and the cost to watch once k grows
+    with the corpus. No global pair enumeration, no broadcast of any
+    per-document frame. The drop rule is
     a projection over the pair frame plus one distinct + one hash join
     back on vec_id.
 
@@ -1046,20 +1040,10 @@ def semdedup(
     (sources/2.2/source/KMeans.java assignment semantics, re-expressed in
     ``assign_nearest``) with the dedup family in ``operators/dedup.py``.
     """
-    from .kmeans import ARROW_ASSIGN_MIN_K, assign_nearest, assign_nearest_arrow
+    from .kmeans import assign_nearest
 
     cents = F.lit([[float(v) for v in c] for c in centroids])
-    if len(centroids) > ARROW_ASSIGN_MIN_K:
-        # k grows with the corpus per the paper; the interpreted HOF
-        # assignment is O(k*d)/row and dominated the whole pipeline at
-        # k=80 (measured ~16 s for 20k x 80 x 64 — see the quadratic
-        # family bench). Same semantics, BLAS batch (Arrow pass-through,
-        # so select just the two columns semdedup needs).
-        assigned = assign_nearest_arrow(
-            embeddings.select(id_col, vec_col), centroids, features_col=vec_col
-        )
-    else:
-        assigned = assign_nearest(embeddings, centroids, features_col=vec_col)
+    assigned = assign_nearest(embeddings, centroids, features_col=vec_col)
     base = assigned.select(
         F.col(id_col).alias("vec_id"),
         F.col("cluster"),

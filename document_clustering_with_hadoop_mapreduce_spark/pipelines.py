@@ -21,12 +21,13 @@ tests/test_golden_parity.py; these facades add the I/O shell.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .compat import clean_text_ref
 from .operators.doc_cluster import scalable_kmeans_init, sparse_lloyd
-from .operators.kmeans import mllib_kmeans
 from .operators.term_matrix import filter_min_corpus_freq, term_totals
 from .operators.tfidf import tfidf
 from .operators.topk import top_k_global, top_k_per_group
@@ -169,26 +170,49 @@ def task_2_1_kmeans_2d(
     spark: SparkSession, points_csv: str, k: int = 3, tol: float = 1e-5,
     max_iter: int = 20,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Euclidean K-Means on 2-D points with convergence (M7).
+    """Euclidean K-Means on 2-D points with convergence (M7), on the sparse
+    Lloyd engine of tasks 2.2/2.3.
 
-    Deterministic AND robust: best-of-N seeded k-means|| fits by WCSS
-    (k-means has local optima — on this dataset one basin costs 6.18 and
-    recovers the true classes at 0.996 agreement, another costs 14.8 and
-    doesn't; a fixed seed list + argmin(cost) is reproducible, unlike the
-    reference's unseeded shuffle, and immune to a single unlucky init)."""
-    pts = read_points_csv(spark, points_csv)
-    feats = pts.select(F.array("x1", "x2").alias("p"), "x1", "x2").cache()
-    best = None
-    for seed in (1, 2, 3):
-        model, assigned = mllib_kmeans(
-            feats, k=k, features_col="p", seed=seed, max_iter=max_iter, tol=tol,
+    Each point enters as the (doc_id, term, w) triples of its coordinates,
+    terms ``x1`` and ``x2``. ``doc_id`` is the point's rank over (x1, x2,
+    cls), a function of the row values only: the k-means|| init's hash
+    draw reads it, so an id taken from the row's place in the file would
+    make the result depend on how the CSV is split. From the deterministic
+    ``scalable_kmeans_init`` the task runs one ``sparse_lloyd`` step at a
+    time, each from the previous centroids, and stops once no centroid
+    moves by ``tol`` or more (euclidean) or after ``max_iter`` steps — the
+    reference's max-displacement test (ref
+    sources/2.1/source/task2_1.java:300-311). Clusters left empty drop
+    out, as in every ``sparse_lloyd`` loop.
+
+    Returns (assigned[x1, x2, cluster], centroids [[x1, x2], ...] in
+    cluster order); the assignment is made against the returned
+    centroids. The triples are cached for the init and the loop; the
+    returned frame is lazy."""
+    pts = read_points_csv(spark, points_csv).withColumn(
+        "doc_id", F.row_number().over(Window.orderBy("x1", "x2", "cls"))
+    )
+    coords = F.create_map(F.lit("x1"), F.col("x1"), F.lit("x2"), F.col("x2"))
+    m = pts.select("doc_id", F.explode(coords).alias("term", "w")).cache()
+
+    def held(cents: DataFrame) -> dict[int, list[float]]:
+        xy = {(c, t): w for c, t, w in cents.collect()}
+        return {c: [xy[c, "x1"], xy[c, "x2"]] for c in sorted({c for c, _ in xy})}
+
+    cents, _ = scalable_kmeans_init(m, k, weight_col="w")
+    prev = held(cents)
+    for _ in range(max_iter):
+        assigned, cents, _ = sparse_lloyd(
+            m, k, 1, weight_col="w", cache_matrix=False, init=cents
         )
-        cost = float(model.summary.trainingCost)
-        if best is None or cost < best[0]:
-            best = (cost, model, assigned)
-    _, model, assigned = best
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned.select("x1", "x2", "cluster"), centroids
+        cur = held(cents)
+        moved = max(math.dist(xy, prev[c]) for c, xy in cur.items())
+        prev = cur
+        if moved < tol:
+            break
+    m.unpersist()
+    out = assigned.join(pts, "doc_id").select("x1", "x2", "cluster")
+    return out, list(prev.values())
 
 
 def read_unit_tfidf(spark: SparkSession, tfidf_mtx: str) -> DataFrame:

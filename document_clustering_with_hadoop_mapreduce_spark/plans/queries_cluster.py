@@ -18,11 +18,8 @@ recompute, loss accounting) is hash-gated, not just rows-only.
 deterministic Bahmani oversampling (hash-based Bernoulli draws instead
 of the reference's unseeded ``Random``) whose candidate selection,
 weights, top-k and one-pass sizes all hash-match an unrolled DuckDB CTE.
-It runs ``doc_cluster.scalable_kmeans_init``, the init task 2.3 starts
-its sparse Lloyd loop from. Task 2.1's seeded MLlib fit
-(``mllib_kmeans``) is non-deterministic across engines, so it is
-pytest-gated instead (tests/test_kmeans.py): assignment = nearest
-centroid, k clusters, seeded reproducibility.
+It runs ``doc_cluster.scalable_kmeans_init``, the init tasks 2.1 and 2.3
+start their sparse Lloyd loops from.
 """
 
 from __future__ import annotations

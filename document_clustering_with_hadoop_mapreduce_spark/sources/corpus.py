@@ -83,11 +83,13 @@ def load_stopwords(spark: SparkSession, path: str) -> tuple[str, ...]:
     return tuple(r["value"].strip() for r in rows if r["value"].strip())
 
 
-POINTS_SCHEMA = "cls INT, x1 DOUBLE, x2 DOUBLE"
+# field names match the file header, so Spark's header check passes
+POINTS_SCHEMA = "`class` INT, x1 DOUBLE, x2 DOUBLE"
 
 
 def read_points_csv(spark: SparkSession, path: str) -> DataFrame:
-    """S6: `class,x1,x2` CSV; header row + malformed rows dropped.
+    """S6: `class,x1,x2` CSV -> (cls, x1, x2); header row + malformed rows
+    dropped.
 
     DROPMALFORMED also covers the reference's "skip rows whose first field
     starts with 'c'" hack (P7) — those rows fail the INT cast."""
@@ -97,4 +99,5 @@ def read_points_csv(spark: SparkSession, path: str) -> DataFrame:
         .schema(POINTS_SCHEMA)
         .csv(path)
         .dropna()
+        .withColumnRenamed("class", "cls")
     )

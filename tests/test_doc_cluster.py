@@ -57,22 +57,6 @@ def test_sparse_lloyd_wcss_non_increasing(spark, sf_dir):
     assert all(r["count"] <= vocab for r in per_cluster_nnz)
 
 
-@pytest.mark.slow
-def test_sparse_lloyd_centroid_truncation_caps_broadcast(spark, sf_dir):
-    """centroid_top_t (the spherical-k-means sparse-projection scale path)
-    caps every centroid's support at T terms — the k x V densification an
-    exact mean produces never reaches the next broadcast."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import sparse_lloyd
-
-    m = _matrix(spark, sf_dir)
-    assigned, cents, trace = sparse_lloyd(m, k=4, max_iter=3, centroid_top_t=5)
-    assert len(trace) == 3
-    per_cluster_nnz = cents.groupBy("cluster").count().collect()
-    assert all(r["count"] <= 5 for r in per_cluster_nnz)
-    n_docs = m.select("doc_id").distinct().count()
-    assert assigned.count() == n_docs
-
-
 def test_sparse_lloyd_leaves_cache_as_found(spark, sf_dir):
     """With ``cache_matrix=False`` the loop caches nothing of its own: no
     Dataset enters the CacheManager and no RDD stays persisted after the

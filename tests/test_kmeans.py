@@ -8,10 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
-    assign_nearest,
-    mllib_kmeans,
-)
+from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import assign_nearest
 from document_clustering_with_hadoop_mapreduce_spark.plans.queries_cluster import (
     _embedding_triples,
 )
@@ -63,31 +60,6 @@ def test_lloyd_assignments_match_final_centroids(spark, sf_dir):
         r["doc_id"]: (r["cluster"], r["dist_sq"]) for r in sparse_assign(m, cents).collect()
     }
     assert got == want
-
-
-def test_mllib_kmeans_seeded_reproducible(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, a1 = mllib_kmeans(emb, k=5, seed=42)
-    _, a2 = mllib_kmeans(emb, k=5, seed=42)
-    d1 = {r["vec_id"]: r["cluster"] for r in a1.select("vec_id", "cluster").collect()}
-    d2 = {r["vec_id"]: r["cluster"] for r in a2.select("vec_id", "cluster").collect()}
-    assert d1 == d2
-    assert len(set(d1.values())) == 5
-
-
-def test_mllib_assignment_is_nearest_final_centroid(spark, sf_dir):
-    """After Lloyd converges, every point sits in the cluster of its nearest
-    final center (SURVEY.md §5 item 4 — the invariant the reference's
-    unseeded runs could never assert). NOTE: the synthetic embeddings are
-    near-isotropic noise (labels don't correspond to geometric clusters),
-    so label-recovery is NOT a valid check here; geometry invariants are."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    model, assigned = mllib_kmeans(emb, k=5, seed=42, max_iter=50)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    for r in assigned.select("embedding", "cluster").collect()[:100]:
-        v = [float(x) for x in r["embedding"]]
-        dists = [sum((a - b) ** 2 for a, b in zip(v, c)) for c in centers]
-        assert r["cluster"] == dists.index(min(dists))
 
 
 @pytest.mark.slow
@@ -172,47 +144,3 @@ def test_n3_similarity_compat(spark):
                       F.array(*[F.lit(2 * x) for x in a])).alias("s")
     ).collect()[0]["s"]
     assert abs(sim1 - sim2) > 1e-6
-
-
-def test_assign_nearest_arrow_magnitude_guard(spark):
-    """Round-9 advisor fix: the Arrow assigner's HALF_UP emulation
-    floor(d2*1e6+0.5) is exact only while d2*1e6 < 2^52 (at odd integers
-    in [2^52, 2^53) the +0.5 rounds half-to-even up — verified
-    numerically); past the bound it RAISES (pointing at
-    round_decimals=None) instead of silently diverging from
-    assign_nearest's decimal F.round tie-breaks."""
-    import pytest
-
-    from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
-        assign_nearest_arrow,
-    )
-
-    big = 4.0e9  # d2 ~ 1.6e19 -> d2*1e6 far past even 2^53
-    df = spark.createDataFrame(
-        [(1, [big, 0.0]), (2, [0.0, 0.0])], "vec_id int, embedding array<double>"
-    )
-    cents = [[0.0, 0.0], [1.0, 1.0]]
-    with pytest.raises(Exception, match="round_decimals=None"):
-        assign_nearest_arrow(df, cents).collect()
-    # the divergence WINDOW itself: d2*1e6 ~ 5.0e15 sits in [2^52, 2^53),
-    # where the old 2^53 threshold would NOT have raised — pins the bound
-    mid = 70711.0  # d2 ~ 5.0e9
-    df_mid = spark.createDataFrame(
-        [(1, [mid, 0.0]), (2, [0.0, 0.0])], "vec_id int, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="round_decimals=None"):
-        assign_nearest_arrow(df_mid, cents).collect()
-    # a corrupt NaN embedding must raise too (NaN >= bound is False, so the
-    # guard has an explicit isnan arm), not silently argmin to cluster 0
-    df_nan = spark.createDataFrame(
-        [(1, [float("nan"), 0.0]), (2, [0.0, 0.0])],
-        "vec_id int, embedding array<double>",
-    )
-    with pytest.raises(Exception, match="non-finite"):
-        assign_nearest_arrow(df_nan, cents).collect()
-    # the documented escape hatch: exact unrounded distances still assign
-    got = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_nearest_arrow(df, cents, round_decimals=None).collect()
-    }
-    assert got == {1: 1, 2: 0}

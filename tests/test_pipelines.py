@@ -192,3 +192,64 @@ def test_task_2_1_recovers_true_classes(spark):
         agree = sum(1 for key, cls in truth if perm[got[key]] + 1 == cls)
         best = max(best, agree / len(truth))
     assert best > 0.9, f"best label agreement only {best:.3f}"
+
+
+def _write_points(path, rows):
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write("class,x1,x2\n")
+        fh.writelines(f"{r}\n" for r in rows)
+
+
+def test_task_2_1_on_blob_mixture(spark, tmp_path):
+    """Task 2.1 end to end on a 3-blob mixture with known labels, no
+    reference fixture needed: a malformed row and a row whose first field
+    starts with 'c' (P7) are dropped; the classes come back (up to label
+    permutation); every point sits in its nearest returned centroid and
+    the centroids are the means of their points (the converged fixed
+    point); and the same points in another row order, split over two
+    files, give the same result — ``doc_id`` reads row values only."""
+    import random
+    from itertools import permutations
+
+    rng = random.Random(21)
+    centers = {1: (0.0, 0.0), 2: (10.0, 0.0), 3: (5.0, 8.0)}
+    points = [
+        (cls, round(rng.gauss(cx, 1.0), 4), round(rng.gauss(cy, 1.0), 4))
+        for cls, (cx, cy) in centers.items()
+        for _ in range(100)
+    ]
+    good = [f"{c},{x},{y}" for c, x, y in points]
+    bad = ["2,not-a-number,1.0", "c9,1.0,1.0"]
+    _write_points(tmp_path / "points.csv", good[:150] + bad + good[150:])
+    shuffled = good[:]
+    rng.shuffle(shuffled)
+    (tmp_path / "split").mkdir()
+    _write_points(tmp_path / "split" / "a.csv", shuffled[:120])
+    _write_points(tmp_path / "split" / "b.csv", shuffled[120:])
+
+    def run(path):
+        assigned, cents = P.task_2_1_kmeans_2d(spark, str(path), k=3)
+        return {(r["x1"], r["x2"]): r["cluster"] for r in assigned.collect()}, cents
+
+    got, cents = run(tmp_path / "points.csv")
+    assert len(got) == len(points) and len(cents) == 3
+
+    truth = {(x, y): cls for cls, x, y in points}
+    agree = max(
+        sum(perm[c] + 1 == truth[p] for p, c in got.items()) / len(points)
+        for perm in permutations(range(3))
+    )
+    assert agree >= 0.99, f"class agreement only {agree:.3f}"
+
+    for (x, y), c in got.items():
+        d = [(x - cx) ** 2 + (y - cy) ** 2 for cx, cy in cents]
+        assert d[c] <= min(d) + 1e-6
+    for c, (cx, cy) in enumerate(cents):
+        members = [p for p, pc in got.items() if pc == c]
+        assert abs(sum(x for x, _ in members) / len(members) - cx) < 1e-9
+        assert abs(sum(y for _, y in members) / len(members) - cy) < 1e-9
+
+    got2, cents2 = run(tmp_path / "split")
+    assert got2 == got
+    for a, b in zip(cents2, cents):
+        assert abs(a[0] - b[0]) < 1e-9 and abs(a[1] - b[1]) < 1e-9

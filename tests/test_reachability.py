@@ -337,3 +337,21 @@ def test_entry_file_imports_resolve():
             rel = path.relative_to(REPO)
             dangling += [f"{rel}:{node.lineno}: {n}" for n in names if not _resolves(n, path.parent)]
     assert not dangling, "entry files import modules that do not exist:\n  " + "\n  ".join(dangling)
+
+
+def test_no_package_module_imports_pyspark_ml():
+    """Tasks 2.1-2.3 and the embedding slots share one Lloyd engine
+    (``operators/doc_cluster.py``); ``pyspark.ml`` must not come back as a
+    second one. Function-local imports count."""
+    hits = []
+    for name, mod in _Scan().modules.items():
+        for node in mod.imports:
+            if isinstance(node, ast.ImportFrom):
+                if node.level:
+                    continue
+                names = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+            else:
+                names = [a.name for a in node.names]
+            if any(n == "pyspark.ml" or n.startswith("pyspark.ml.") for n in names):
+                hits.append(f"{name}:{node.lineno}")
+    assert not hits, "package modules import pyspark.ml:\n  " + "\n  ".join(hits)

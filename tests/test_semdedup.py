@@ -199,31 +199,6 @@ def test_semdedup_sub_blocking_invariant(fixture):
         semdedup(sdf, cents, threshold=THRESH, sub_blocks=0)
 
 
-def test_arrow_assignment_matches_hof(spark, sf_dir):
-    """The k>16 Arrow batch assignment must agree with kmeans.assign_nearest
-    (same 6dp distance rounding, same smallest-cid tie-break) — value
-    equality on real fixture vectors with a k above the switch point."""
-    import random
-
-    from document_clustering_with_hadoop_mapreduce_spark.operators.kmeans import (
-        assign_nearest,
-        assign_nearest_arrow,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    rng = random.Random(8)
-    cents = [[round(rng.gauss(0.0, 1.0), 6) for _ in range(dim)] for _ in range(24)]
-    arrow = {
-        r["vec_id"]: (r["cluster"], r["dist_sq"])
-        for r in assign_nearest_arrow(
-            emb.select("vec_id", "embedding"), cents, features_col="embedding"
-        ).collect()
-    }
-    both = {r["vec_id"]: (r["cluster"], r["dist_sq"]) for r in assign_nearest(emb, cents).collect()}
-    assert arrow == both
-
-
 def test_semdedup_generic_string_ids(spark):
     """Round-9 advisor fix: the pair/docs schemas derive the id columns
     from the INPUT id type (previously hard-coded long) — string ids flow
