@@ -10,9 +10,11 @@ all derived from ONE contingency-table aggregate.
 Scale shape: the only corpus-sized work is a single (cluster, label)
 groupBy with map-side partial aggregation — one exchange over n rows.
 Everything after operates on the contingency table, which is k x L rows
-(clusters x distinct labels), bounded by model size, not data size; it is
-lazily materialized once so the expensive upstream assignment plan is not
-replayed per downstream scalar.
+(clusters x distinct labels), bounded by model size, not data size: one
+exchange moves it into a single partition, where window columns attach
+the grand total and the cluster and label margins, and ONE global
+aggregate sums every term — no scalar cross-joins, and the table has a
+single consumer, so the upstream assignment plan runs once.
 
 Float discipline (cross-engine determinism, the repo-wide rule): all
 pair-counting sums (ARI, purity) are exact integer arithmetic until one
@@ -23,7 +25,7 @@ on both engines, then everything rounds to 6 decimals.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -68,61 +70,54 @@ def clustering_metrics(
            partition is a single block (H = 0, the sklearn convention).
     purity = sum_i max_j n_ij / n.
     """
-    cont = contingency(assign, labels, id_col, cluster_col, label_col).localCheckpoint(
-        eager=False
+    # n's global window goes first: its single partition already satisfies
+    # the per-cluster and per-label windows and the final aggregate, so
+    # nothing after it exchanges
+    by_c = Window.partitionBy(cluster_col)
+    by_l = Window.partitionBy(label_col)
+    cont = (
+        contingency(assign, labels, id_col, cluster_col, label_col)
+        .withColumn("n", F.sum("n_ij").over(Window.partitionBy()))
+        .withColumn("a_i", F.sum("n_ij").over(by_c))
+        .withColumn("m_i", F.max("n_ij").over(by_c))
+        .withColumn("b_j", F.sum("n_ij").over(by_l))
+        # one flag per cluster / per label: its margin terms count once
+        .withColumn("c1", F.row_number().over(by_c.orderBy(label_col)) == 1)
+        .withColumn("l1", F.row_number().over(by_l.orderBy(cluster_col)) == 1)
     )
-    rowm = cont.groupBy(cluster_col).agg(F.sum("n_ij").alias("a_i"))
-    colm = cont.groupBy(label_col).agg(F.sum("n_ij").alias("b_j"))
-
-    # ---- exact integer pair-count scalars (one tiny agg each) ----------
-    s_ij = cont.agg(F.sum(_comb2(F.col("n_ij"))).alias("s_ij"))
-    s_a = rowm.agg(F.sum(_comb2(F.col("a_i"))).alias("s_a"))
-    s_b = colm.agg(F.sum(_comb2(F.col("b_j"))).alias("s_b"))
-    n_tot = cont.agg(F.sum("n_ij").alias("n"))
-    pur = (
-        cont.groupBy(cluster_col)
-        .agg(F.max("n_ij").alias("m"))
-        .agg(F.sum("m").alias("maj"))
-    )
-
-    # ---- NMI: order-independent decimal sums of 12dp-rounded ln terms --
-    with_margins = cont.join(F.broadcast(rowm), cluster_col).join(
-        F.broadcast(colm), label_col
-    ).crossJoin(F.broadcast(n_tot))
+    c1, l1 = F.col("c1"), F.col("l1")
     dec = "decimal(38,12)"
+
+    def ent(x: F.Column) -> F.Column:
+        """-(x/n)·ln(x/n), 12dp-rounded, as an order-independent decimal."""
+        return F.round(-(x / F.col("n")) * F.log(x / F.col("n")), 12).cast(dec)
+
     # a_i::double BEFORE the multiply (matching the oracle's
     # a_i::DOUBLE * b_j form): the margin product of a 100 TB contingency
     # table passes int64 (~9.2e18) at margins the module's own _comb2
     # bound already contemplates — a LONG multiply raises under ANSI mode
     # and silently wraps otherwise. Exact-equal to the LONG product while
     # it fits 2^53, so every gate value is unchanged.
-    mi = with_margins.agg(
-        F.sum(
-            F.round(
-                (F.col("n_ij") / F.col("n"))
-                * F.log(
-                    F.col("n_ij").cast("double")
-                    * F.col("n")
-                    / (F.col("a_i").cast("double") * F.col("b_j"))
-                ),
-                12,
-            ).cast(dec)
-        ).alias("mi")
-    )
-    h_u = rowm.crossJoin(F.broadcast(n_tot)).agg(
-        F.sum(
-            F.round(-(F.col("a_i") / F.col("n")) * F.log(F.col("a_i") / F.col("n")), 12).cast(dec)
-        ).alias("h_u")
-    )
-    h_v = colm.crossJoin(F.broadcast(n_tot)).agg(
-        F.sum(
-            F.round(-(F.col("b_j") / F.col("n")) * F.log(F.col("b_j") / F.col("n")), 12).cast(dec)
-        ).alias("h_v")
-    )
-
-    scalars = (
-        n_tot.crossJoin(s_ij).crossJoin(s_a).crossJoin(s_b).crossJoin(pur)
-        .crossJoin(mi).crossJoin(h_u).crossJoin(h_v)
+    mi_term = F.round(
+        (F.col("n_ij") / F.col("n"))
+        * F.log(
+            F.col("n_ij").cast("double")
+            * F.col("n")
+            / (F.col("a_i").cast("double") * F.col("b_j"))
+        ),
+        12,
+    ).cast(dec)
+    # exact integer pair counts, and NMI's decimal sums of 12dp-rounded
+    # ln terms: every sum is independent of summation order
+    scalars = cont.agg(
+        F.max("n").alias("n"),
+        F.sum(_comb2(F.col("n_ij"))).alias("s_ij"),
+        F.sum(F.when(c1, _comb2(F.col("a_i")))).alias("s_a"),
+        F.sum(F.when(l1, _comb2(F.col("b_j")))).alias("s_b"),
+        F.sum(F.when(c1, F.col("m_i"))).alias("maj"),
+        F.sum(mi_term).alias("mi"),
+        F.sum(F.when(c1, ent(F.col("a_i")))).alias("h_u"),
+        F.sum(F.when(l1, ent(F.col("b_j")))).alias("h_v"),
     )
     s_n = _comb2(F.col("n").cast("long"))
     # n = 1 has zero possible pairs (s_n = 0): every pair index is 0, so

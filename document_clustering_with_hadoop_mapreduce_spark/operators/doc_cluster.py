@@ -61,40 +61,44 @@ class _HeldCentroids(NamedTuple):
     ``clusters``: the non-empty cluster ids, ascending (k' of them);
     ``ws``: local relation (term, ws array<double>[k']) — ws[j] is cluster
     ``clusters[j]``'s weight for the term, null where it has none;
-    ``c_ss``: each cluster's ||c||², same order."""
+    ``c_ss``: each cluster's ||c||², same order;
+    ``rows``: the (cluster, term, w) rows, in (cluster, term) order."""
 
     clusters: list[int]
     ws: DataFrame
     c_ss: list[float]
+    rows: pa.Table
 
     def frame(self) -> DataFrame:
-        """The centroids as (cluster, term, w) rows — lazy, from ``ws``."""
-        ids = F.array(*[F.lit(c) for c in self.clusters])
-        return (
-            self.ws.select("term", F.posexplode("ws").alias("j", "w"))
-            .where(F.col("w").isNotNull())
-            .select(ids[F.col("j")].alias("cluster"), "term", "w")
-        )
+        """The centroids as (cluster, term, w) rows: a local relation, so
+        collecting it runs no Spark job."""
+        return self.ws.sparkSession.createDataFrame(self.rows)
 
 
 def _hold(spark: SparkSession, rows) -> _HeldCentroids:
-    """(cluster, term, w) rows -> ``_HeldCentroids``. The relation is built
-    from an Arrow table, so Spark plans it as a LocalRelation (a Python
-    list would be parallelized into an RDD of pickled rows). Rows are
-    taken in (cluster, term) order, so ||c||² is summed in one fixed
+    """(cluster, term, w) rows -> ``_HeldCentroids``. Both relations are
+    built from Arrow tables, so Spark plans them as LocalRelations (a
+    Python list would be parallelized into an RDD of pickled rows). Rows
+    are taken in (cluster, term) order, so ||c||² is summed in one fixed
     order."""
+    rows = sorted(tuple(r) for r in rows)
     clusters = sorted({r[0] for r in rows})
     slot = {c: j for j, c in enumerate(clusters)}
     ws: dict[str, list[float | None]] = {}
     c_ss = [0.0] * len(clusters)
-    for c, term, w in sorted(tuple(r) for r in rows):
+    for c, term, w in rows:
         ws.setdefault(term, [None] * len(clusters))[slot[c]] = w
         c_ss[slot[c]] += w * w
     table = pa.table({
         "term": pa.array(list(ws), pa.string()),
         "ws": pa.array(list(ws.values()), pa.list_(pa.float64())),
     })
-    return _HeldCentroids(clusters, spark.createDataFrame(table), c_ss)
+    held = pa.table({
+        "cluster": pa.array([r[0] for r in rows], pa.int32()),
+        "term": pa.array([r[1] for r in rows], pa.string()),
+        "w": pa.array([r[2] for r in rows], pa.float64()),
+    })
+    return _HeldCentroids(clusters, spark.createDataFrame(table), c_ss, held)
 
 
 def _collect_held(centroids: DataFrame) -> _HeldCentroids:
@@ -374,7 +378,9 @@ def sparse_lloyd(
     recompute is skipped) and the iteration WCSS — the hook the
     reference-layout artifact sinks attach to (sources/artifacts.py; ref
     per-iteration writes at sources/2.2/source/KMeansReducer.java:25-131).
-    Both frames are lazy; neither is cached.
+    The assignment frame is lazy and not cached; a centroid frame is a
+    local relation of the rows the driver holds, so reading it runs no
+    Spark job (the returned centroids too).
 
     The matrix feeds the seed collect and every iteration's query —
     separate jobs, so it is cached here for the loop's lifetime unless
@@ -428,13 +434,13 @@ def sparse_lloyd(
                 .collect()
             )
             wcss = rows[0]["wcss"]
-            cents = _hold(spark, [r[:3] for r in rows])
-            new_cents = cents.frame()
+            cents = new_cents = _hold(spark, [r[:3] for r in rows])
         else:
             wcss = per_doc.agg(total(F.sum(dist))).collect()[0][0]
         wcss_trace.append(float(wcss))
         if on_iteration is not None:
-            on_iteration(it, assigned, new_cents, wcss_trace[-1])
+            new_frame = None if new_cents is None else new_cents.frame()
+            on_iteration(it, assigned, new_frame, wcss_trace[-1])
     if final_centroids and max_iter > 0:
         # the loop's last assignment was made against the centroids BEFORE
         # the final recompute; the returned pair must agree, so re-assign
@@ -443,3 +449,14 @@ def sparse_lloyd(
     if we_cached:
         matrix.unpersist()
     return assigned, cents.frame(), wcss_trace
+
+
+def wcss_trace_frame(spark: SparkSession, trace: list[float]) -> DataFrame:
+    """(iteration INT, wcss DOUBLE) rows of a ``sparse_lloyd`` WCSS trace,
+    in iteration order. Built from an Arrow table, so Spark plans it as a
+    LocalRelation and collecting it runs no job (a Python list would be
+    shipped as a pickled RDD, which Python workers unpickle)."""
+    return spark.createDataFrame(pa.table({
+        "iteration": pa.array(range(len(trace)), pa.int32()),
+        "wcss": pa.array(trace, pa.float64()),
+    }))

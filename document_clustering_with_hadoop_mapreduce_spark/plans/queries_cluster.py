@@ -24,6 +24,7 @@ start their sparse Lloyd loops from.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +33,7 @@ from ..operators.doc_cluster import (
     seeded_sparse_centroids,
     sparse_assign,
     sparse_lloyd,
+    wcss_trace_frame,
 )
 from ..sources.tables import load_table
 from .registry import register
@@ -145,9 +147,7 @@ def q_kmeans_lloyd_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, trace = sparse_lloyd(
         tri, K, LLOYD_ITERS, weight_col="w", round_centroids=6, final_centroids=False
     )
-    return spark.createDataFrame(
-        list(enumerate(trace)), "iteration INT, wcss DOUBLE"
-    ).orderBy("iteration")
+    return wcss_trace_frame(spark, trace)
 
 
 _KMEANS_PARALLEL_L = 10.0
@@ -279,10 +279,11 @@ def q_kmeans_parallel_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    meta = spark.createDataFrame(
-        [(i, sid, w) for i, (sid, w) in enumerate(weights.items())],
-        "cluster INT, seed_vec_id LONG, weight LONG",
-    )
+    meta = spark.createDataFrame(pa.table({
+        "cluster": pa.array(range(len(weights)), pa.int32()),
+        "seed_vec_id": pa.array(list(weights), pa.int64()),
+        "weight": pa.array(list(weights.values()), pa.int64()),
+    }))
     return (
         meta.join(sizes, "cluster", "left")
         .select(

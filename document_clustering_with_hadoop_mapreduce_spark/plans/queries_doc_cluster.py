@@ -300,12 +300,9 @@ def _sparse_lloyd_oracle(k: int, iters: int) -> str:
     "per-iteration WCSS, hash-verified against an unrolled DuckDB CTE",
 )
 def q_doc_kmeans_sparse_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.doc_cluster import sparse_lloyd
+    from ..operators.doc_cluster import sparse_lloyd, wcss_trace_frame
 
     m = _tfidf_matrix(spark, sf_dir)
     _, _, trace = sparse_lloyd(m, k=K, max_iter=3, round_centroids=6,
                                final_centroids=False, cache_matrix=False)
-    return spark.createDataFrame(
-        [(i, w) for i, w in enumerate(trace)],
-        "iteration INT, wcss DOUBLE",
-    ).orderBy("iteration")
+    return wcss_trace_frame(spark, trace)

@@ -156,6 +156,16 @@ def test_contingency_one_exchange(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_metrics_are_one_aggregate_without_nested_loop_joins(spark):
+    """The metrics are one global aggregate over the contingency table:
+    one exchange moves the table into a single partition, where every
+    window and the aggregate run, and no scalar is cross-joined in."""
+    assign, labels = _frames(spark, MIXED)
+    plan = clustering_metrics(assign, labels)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+    assert plan.count("Exchange SinglePartition") == 1
+
+
 def test_single_row_input_does_not_divide_by_zero(spark):
     """n = 1 has zero possible pairs (comb2(1) = 0): ARI's expected-index
     division must be guarded (ANSI mode raises on /0), yielding the

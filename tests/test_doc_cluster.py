@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -17,6 +19,22 @@ from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_
 
 def _matrix(spark, sf_dir):
     return tfidf(term_doc_counts(load_table(spark, sf_dir, "documents")))
+
+
+def _collect_counting_jobs(df) -> tuple[int, list]:
+    """(Spark jobs ``df.collect()`` runs, its rows): the jobs are counted
+    under a job group of their own once the listener bus has delivered
+    every job event."""
+    sc = df.sparkSession.sparkContext
+    group = f"collect-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
 
 
 def test_seed_docs_assigned_to_own_cluster(spark, sf_dir):
@@ -169,3 +187,35 @@ def test_pandas_udf_matches_jvm_normalize(spark, sf_dir):
         assert len(r["jvm"]) == len(r["py"])
         for a, b in zip(r["jvm"], r["py"]):
             assert abs(a - b) < 1e-12
+
+
+@pytest.mark.parametrize("slot", ["doc_kmeans_sparse_trace", "kmeans_lloyd_trace"])
+def test_wcss_trace_collects_without_a_job(spark, sf_dir, slot):
+    """The trace slots return the driver's WCSS list as a local relation:
+    collecting it schedules no Spark job (a Python-list frame ran 3)."""
+    from document_clustering_with_hadoop_mapreduce_spark.plans.registry import all_queries
+
+    n_jobs, rows = _collect_counting_jobs(all_queries()[slot].spark(spark, sf_dir))
+    assert n_jobs == 0
+    assert [r["iteration"] for r in rows] == [0, 1, 2]
+
+
+def test_held_centroids_collect_without_a_job(spark):
+    """Centroids the driver holds come back without a job: those
+    ``sparse_lloyd`` returns and the k-means|| init's pick, which the next
+    ``sparse_lloyd`` call collects as its start."""
+    from document_clustering_with_hadoop_mapreduce_spark.operators.doc_cluster import (
+        scalable_kmeans_init,
+        sparse_lloyd,
+    )
+
+    docs = spark.createDataFrame(_TIE_DOCS, "doc_id BIGINT, text STRING")
+    m = tfidf(term_doc_counts(docs), n_docs=len(_TIE_DOCS)).cache()
+    init, _ = scalable_kmeans_init(m, 3)
+    _, cents, _ = sparse_lloyd(m, k=3, max_iter=1, init=init)
+    for frame in (init, cents):
+        n_jobs, rows = _collect_counting_jobs(frame)
+        assert n_jobs == 0
+        assert frame.schema.simpleString() == "struct<cluster:int,term:string,w:double>"
+        assert {r["cluster"] for r in rows} <= {0, 1, 2} and rows
+    m.unpersist()

@@ -301,10 +301,6 @@ def test_all_registered_plans_have_no_scale_hazards(spark, sf_dir):
     query that falls back to a nested-loop join fails this test until the
     bound is justified here."""
     bnlj_bounded = {
-        # broadcast side is clustering_metrics' 1-ROW corpus-size scalar
-        # and its other 1-row metric aggregates (cluster_eval.py
-        # crossJoins); the centroid side is an equi-join on term
-        "doc_cluster_top_terms",
         # broadcast side is the 25-row probe set of the brute-force baseline
         "knn_bruteforce",
         # broadcast side is unigram_cross_entropy's 1-ROW corpus token-mass
