@@ -67,20 +67,28 @@ class _HeldCentroids(NamedTuple):
     clusters: list[int]
     ws: DataFrame
     c_ss: list[float]
-    rows: pa.Table
+    rows: list[tuple]
 
     def frame(self) -> DataFrame:
-        """The centroids as (cluster, term, w) rows: a local relation, so
-        collecting it runs no Spark job."""
-        return self.ws.sparkSession.createDataFrame(self.rows)
+        return _centroid_frame(self.ws.sparkSession, self.rows)
+
+
+def _centroid_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """(cluster, term, w) rows -> a (cluster INT, term, w) local relation,
+    so collecting it runs no Spark job. Only renumbered cluster ids reach
+    it; candidates labelled by their BIGINT doc ids never do."""
+    return spark.createDataFrame(pa.table({
+        "cluster": pa.array([r[0] for r in rows], pa.int32()),
+        "term": pa.array([r[1] for r in rows], pa.string()),
+        "w": pa.array([r[2] for r in rows], pa.float64()),
+    }))
 
 
 def _hold(spark: SparkSession, rows) -> _HeldCentroids:
-    """(cluster, term, w) rows -> ``_HeldCentroids``. Both relations are
-    built from Arrow tables, so Spark plans them as LocalRelations (a
-    Python list would be parallelized into an RDD of pickled rows). Rows
-    are taken in (cluster, term) order, so ||c||² is summed in one fixed
-    order."""
+    """(cluster, term, w) rows -> ``_HeldCentroids``. ``ws`` is built from
+    an Arrow table, so Spark plans it as a LocalRelation (a Python list
+    would be parallelized into an RDD of pickled rows). Rows are taken in
+    (cluster, term) order, so ||c||² is summed in one fixed order."""
     rows = sorted(tuple(r) for r in rows)
     clusters = sorted({r[0] for r in rows})
     slot = {c: j for j, c in enumerate(clusters)}
@@ -93,12 +101,7 @@ def _hold(spark: SparkSession, rows) -> _HeldCentroids:
         "term": pa.array(list(ws), pa.string()),
         "ws": pa.array(list(ws.values()), pa.list_(pa.float64())),
     })
-    held = pa.table({
-        "cluster": pa.array([r[0] for r in rows], pa.int32()),
-        "term": pa.array([r[1] for r in rows], pa.string()),
-        "w": pa.array([r[2] for r in rows], pa.float64()),
-    })
-    return _HeldCentroids(clusters, spark.createDataFrame(table), c_ss, held)
+    return _HeldCentroids(clusters, spark.createDataFrame(table), c_ss, rows)
 
 
 def _collect_held(centroids: DataFrame) -> _HeldCentroids:
@@ -295,7 +298,7 @@ def scalable_kmeans_init(
     ids = sorted({c for c, _, _ in cands})
     chosen = sorted(sorted(ids, key=lambda i: (-weights.get(i, 0), i))[:k])
     rank = {c: i for i, c in enumerate(chosen)}
-    init = _hold(spark, [(rank[c], t, w) for c, t, w in cands if c in rank]).frame()
+    init = _centroid_frame(spark, sorted((rank[c], t, w) for c, t, w in cands if c in rank))
     return init, {c: weights.get(c, 0) for c in chosen}
 
 

@@ -164,6 +164,12 @@ def test_metrics_are_one_aggregate_without_nested_loop_joins(spark):
     plan = clustering_metrics(assign, labels)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     assert plan.count("Exchange SinglePartition") == 1
+    # nothing above that exchange shuffles again, and below it sits the
+    # bare contingency table's plan with its own exchanges only
+    above, _ = plan.split("Exchange SinglePartition")
+    assert "Exchange" not in above
+    bare = contingency(assign, labels)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == bare.count("Exchange") + 1
 
 
 def test_single_row_input_does_not_divide_by_zero(spark):

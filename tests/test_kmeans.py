@@ -144,3 +144,27 @@ def test_n3_similarity_compat(spark):
                       F.array(*[F.lit(2 * x) for x in a])).alias("s")
     ).collect()[0]["s"]
     assert abs(sim1 - sim2) > 1e-6
+
+
+def test_scalable_init_takes_ids_beyond_int32(spark, sf_dir, tmp_path):
+    """Candidates are labelled by their BIGINT ids while the init runs:
+    with every vec_id shifted past 2^31 the k-means|| slot still matches
+    its DuckDB oracle over the same shifted table."""
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from conftest import assert_matches_oracle
+    from document_clustering_with_hadoop_mapreduce_spark.plans.registry import all_queries
+
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    i = emb.schema.get_field_index("vec_id")
+    shifted = emb.set_column(i, "vec_id", pc.add(emb["vec_id"], 1 << 31))
+    pq.write_table(shifted, tmp_path / "embeddings.parquet")
+    q = all_queries()["kmeans_parallel_sizes"]
+    got = q.spark(spark, str(tmp_path))
+    assert all(r["seed_vec_id"] >= 1 << 31 for r in got.collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+    assert_matches_oracle(got, con, q.oracle)
+    con.close()
