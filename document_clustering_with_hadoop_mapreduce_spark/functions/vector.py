@@ -37,35 +37,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     the same CASE)."""
     prod = norm(a) * norm(b)
     return F.when(prod == 0.0, F.lit(0.0)).otherwise(dot(a, b) / prod)
-
-
-def l2_normalize(col: Column) -> Column:
-    """Unit-normalize an array column (JVM-side; zero vectors pass through)."""
-    n = F.sqrt(
-        F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    return F.when(n == 0.0, col).otherwise(F.transform(col, lambda v: v / n))
-
-
-def l2_normalize_pandas_udf():
-    """The SAME operation as an Arrow-batched pandas UDF — the documented
-    escape hatch for math that built-ins genuinely can't express (the
-    engine needs none today; tests pin this to the JVM path bit-for-bit
-    so the two never drift). Returned lazily so importing this module
-    never requires pandas/pyarrow."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _norm(s):
-        out = []
-        for v in s:
-            a = np.asarray(v, dtype="float64")
-            n = float(np.sqrt((a * a).sum()))
-            out.append((a / n).tolist() if n > 0 else a.tolist())
-        return pd.Series(out)
-
-    # this module stringifies annotations (future import); pandas_udf needs
-    # REAL type objects to infer the scalar eval type — attach them directly
-    _norm.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_norm, "array<double>")

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .topk import top_k_per_group
-
 
 def category_avg_tfidf(tfidf_matrix: DataFrame, doc_categories: DataFrame) -> DataFrame:
     """A7+A8: (category, term, avg_tfidf).
@@ -63,16 +61,4 @@ def category_avg_tfidf(tfidf_matrix: DataFrame, doc_categories: DataFrame) -> Da
             "term",
             (F.col("sum_tfidf") / F.col("n_docs_in_cat")).alias("avg_tfidf"),
         )
-    )
-
-
-def category_top_terms(tfidf_matrix: DataFrame, doc_categories: DataFrame, k: int = 5) -> DataFrame:
-    """A9 applied to A8: top-k terms per category by average tfidf,
-    term-ascending tie-break for determinism."""
-    avg = category_avg_tfidf(tfidf_matrix, doc_categories)
-    return top_k_per_group(
-        avg,
-        ["category"],
-        [F.col("avg_tfidf").desc(), F.col("term").asc()],
-        k,
     )

@@ -197,185 +197,12 @@ def lsh_candidate_pairs(
     return pairs.distinct()
 
 
-def span_hashes(
-    documents: DataFrame,
-    window: int = 50,
-    stride: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Map-side (doc_id, pos, h) stream of rolling ``window``-token span
-    hashes (60-bit md5, 1-based token position, every ``stride`` tokens).
-    The substrate for exact-substring duplicate detection — same narrow
-    explode shape as ``shingle_hashes``, zero shuffle."""
-    if window < 1 or stride < 1:
-        raise ValueError(f"window and stride must be >= 1, got {window}, {stride}")
-    toks = F.col("__toks")
-    idx = F.when(
-        F.size(toks) >= window,
-        F.sequence(F.lit(1), F.size(toks) - (window - 1), F.lit(stride)),
-    ).otherwise(F.array().cast("array<int>"))
-    spans = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"), md5_int60(F.concat_ws(" ", F.slice(toks, i, window))).alias("h")
-        ),
-    )
-    return _tokenized(documents, text_col, id_col).select(
-        "doc_id", F.explode(spans).alias("__s")
-    ).select("doc_id", F.col("__s.pos").alias("pos"), F.col("__s.h").alias("h"))
-
-
-def duplicate_spans(
-    documents: DataFrame,
-    window: int = 50,
-    stride: int = 1,
-    min_doc_freq: int = 2,
-    max_examples: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact-substring duplicate report (the ExactSubstr signal of Lee et
-    al. 2021, "Deduplicating Training Data Makes Language Models Better",
-    re-expressed relationally): every ``window``-token span whose EXACT
-    text recurs in at least ``min_doc_freq`` distinct documents, with
-    occurrence stats and a bounded sample of (doc, position) sites.
-
-    MinHash/SimHash find near-duplicate DOCUMENTS; this finds verbatim
-    repeated PASSAGES inside otherwise-distinct documents (licence
-    blocks, boilerplate headers, quoted chain-mail) — the signal a
-    span-cutting pass consumes. The suffix-array construction of the paper
-    is replaced by rolling span hashes: recall for spans >= ``window``
-    tokens aligned to ``stride`` (stride 1 = every span; stride ~window/2
-    halves the explode volume and still catches any duplicated run >=
-    window + stride - 1 tokens).
-
-    Output: (span_hash, n_docs, n_occurrences, example_docs) where
-    ``example_docs`` is a deterministic "doc:pos" sample joined with ','.
-
-    Scale shape: map-side explode -> ONE agg on (h, doc) (map-side partial
-    combine collapses within-doc repeats) -> window + agg on h. No
-    unbounded collect anywhere: the per-span example list is row_number-
-    capped at ``max_examples`` BEFORE the collect, so a span occurring in
-    a million docs aggregates counts wide but materializes only the cap
-    (the hot-key discipline every operator here follows).
-    """
-    spans = span_hashes(documents, window, stride, text_col, id_col)
-    per_doc = spans.groupBy("h", "doc_id").agg(
-        F.count(F.lit(1)).alias("__occ"), F.min("pos").alias("__first_pos")
-    )
-    w = Window.partitionBy("h")
-    ranked = per_doc.select(
-        "h", "doc_id", "__occ", "__first_pos",
-        F.count(F.lit(1)).over(w).alias("n_docs"),
-        F.sum("__occ").over(w).alias("n_occurrences"),
-        F.row_number().over(w.orderBy("doc_id")).alias("__rn"),
-    ).filter(F.col("n_docs") >= min_doc_freq)
-    return (
-        ranked.filter(F.col("__rn") <= max_examples)
-        .groupBy("h")
-        .agg(
-            F.first("n_docs").alias("n_docs"),
-            F.first("n_occurrences").alias("n_occurrences"),
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(F.concat_ws(":", "doc_id", "__first_pos"))
-                ),
-                ",",
-            ).alias("example_docs"),
-        )
-        .withColumnRenamed("h", "span_hash")
-    )
-
-
-def cut_duplicate_spans(
-    documents: DataFrame,
-    window: int = 50,
-    stride: int = 1,
-    min_doc_freq: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact-substring duplicate REMOVAL — the cutting pass of Lee et al.
-    2021 ("Deduplicating Training Data Makes Language Models Better") that
-    consumes the signal ``duplicate_spans`` reports: every ``window``-token
-    span whose exact text occurs in >= ``min_doc_freq`` distinct documents
-    keeps its FIRST occurrence (lexicographic min (doc_id, pos)) and is cut
-    from every other occurrence site.
-
-    Output, one row per input document (over the CLEANED token stream —
-    lowercased, punctuation-stripped, the same stream the span hashes see):
-    (doc_id, clean_text, n_tokens, n_removed) where ``clean_text`` is the
-    surviving tokens re-joined with single spaces, ``n_tokens`` the
-    pre-cut token count and ``n_removed`` how many tokens the cut dropped.
-    Within-document repeats of a cross-document span are also cut (every
-    non-keeper site goes); a span repeated only WITHIN one document is not
-    touched at the default ``min_doc_freq=2`` — that in-doc signal is
-    ``doc_repetition``'s job.
-
-    Scale shape: map-side rolling hashes (``span_hashes``) -> ONE agg
-    exchange on the hash (count-distinct docs + lexicographic-min keeper in
-    the same rollup) -> the hits-bounded site stream joins back on the hash
-    and aggregates per doc -> one hash join on doc_id attaches each doc's
-    sorted cut-starts array -> the rebuild is a single map-side
-    filter-with-index (O(tokens x cuts) per doc, both factors bounded by
-    the doc's own length — no token-level shuffle, the token stream never
-    leaves its row). Nothing corpus-sized is broadcast or collected.
-    """
-    if min_doc_freq < 2:
-        raise ValueError(f"min_doc_freq must be >= 2, got {min_doc_freq}")
-    spans = span_hashes(documents, window, stride, text_col, id_col)
-    dup = (
-        spans.groupBy("h")
-        .agg(
-            F.countDistinct("doc_id").alias("__nd"),
-            F.min(F.struct("doc_id", "pos")).alias("__keep"),
-        )
-        .filter(F.col("__nd") >= min_doc_freq)
-        .select("h", "__keep")
-    )
-    # (doc_id, pos) is unique in the span stream (one hash per site), so no
-    # distinct is needed before the per-doc aggregate
-    sites = (
-        spans.join(dup, "h")
-        .filter(
-            ~(
-                (F.col("doc_id") == F.col("__keep.doc_id"))
-                & (F.col("pos") == F.col("__keep.pos"))
-            )
-        )
-        .select("doc_id", "pos")
-    )
-    cuts = sites.groupBy("doc_id").agg(F.array_sort(F.collect_list("pos")).alias("__cuts"))
-    toked = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(tokens(F.col(text_col)), lambda t: t != "").alias("__toks"),
-    )
-    cut_arr = F.coalesce(F.col("__cuts"), F.array().cast("array<int>"))
-    kept = F.filter(
-        F.col("__toks"),
-        lambda t, i: ~F.exists(
-            cut_arr, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(window - 1))
-        ),
-    )
-    return (
-        toked.join(cuts, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.concat_ws(" ", kept).alias("clean_text"),
-            F.size("__toks").alias("n_tokens"),
-            (F.size("__toks") - F.size(kept)).cast("int").alias("n_removed"),
-        )
-    )
-
-
 def lsh_incremental_pairs(
     existing_signatures: DataFrame,
     new_signatures: DataFrame,
     num_hashes: int = 16,
     rows_per_band: int = 2,
     max_bucket_size: int | None = 256,
-    broadcast_new: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """Incremental LSH dedup: candidate pairs that involve at least one NEW
@@ -389,12 +216,11 @@ def lsh_incremental_pairs(
     and must be deduped against the whole corpus without re-running the
     quadratic-candidate step over history. Mechanics: both signature frames
     band as in ``lsh_candidate_pairs``; the EXISTING banded stream is then
-    semi-joined against the new batch's (band_idx, band_key) set — with
-    ``broadcast_new`` (the normal case: a batch is MBs-GBs against a TB
-    corpus) that semi-join is a broadcast, so history is filtered map-side
-    down to only the buckets the batch touches, and everything downstream
-    (bucket-size window, guard, pair join) runs on that batch-bounded
-    subset. At full scale keep the existing corpus's banded frame as a
+    semi-joined against the new batch's (band_idx, band_key) set — a
+    broadcast (a batch is MBs-GBs against a TB corpus), so history is
+    filtered map-side down to only the buckets the batch touches, and
+    everything downstream (bucket-size window, guard, pair join) runs on
+    that batch-bounded subset. At full scale keep the existing corpus's banded frame as a
     bucketed table on (band_idx, band_key) (``sources/bucketing.py``) and
     the probe is exchange-free on the history side.
 
@@ -423,9 +249,7 @@ def lsh_incremental_pairs(
     banded_new = band(new_signatures, True)
     if materialize:
         banded_new = banded_new.localCheckpoint(eager=False)
-    touched = banded_new.select("band_idx", "band_key").distinct()
-    if broadcast_new:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(banded_new.select("band_idx", "band_key").distinct())
     relevant_old = band(existing_signatures, False).join(touched, ["band_idx", "band_key"], "left_semi")
     banded = relevant_old.unionByName(banded_new)
     star = None
@@ -506,200 +330,6 @@ def jaccard_pairs(doc_shingles: DataFrame, min_jaccard: float = 0.2) -> DataFram
         .filter(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def containment_pairs(
-    doc_shingles: DataFrame, min_containment: float = 0.8
-) -> DataFrame:
-    """Asymmetric near-dup: shingle-set CONTAINMENT, both directions.
-
-    c(A in B) = |A ∩ B| / |A| — the measure that catches a document
-    EMBEDDED in another (a quoted article inside a digest, a README
-    pasted into a repo dump). Symmetric Jaccard misses these by
-    construction: a 50-shingle doc fully contained in a 5,000-shingle doc
-    has J ≈ 0.01, below any dedup threshold (and below what MinHash-LSH
-    banding would ever surface — band collision probability tracks J, so
-    containment needs its own pass, not a post-filter on LSH output).
-
-    Output (doc_a, doc_b, c_a_in_b, c_b_in_a, jaccard), doc_a < doc_b,
-    kept when EITHER direction reaches ``min_containment``. Same plan
-    shape as ``jaccard_pairs``: sizes ride the shingle frame via one
-    window (never a per-doc broadcast), the shared-shingle equi-join IS
-    the candidate generation (only pairs sharing a shingle materialize),
-    sizes and intersection fall out of one pair aggregate. Same caveat
-    too: a hot shingle shared by k docs contributes k² join rows — run on
-    boilerplate-cut corpora (``cut_duplicate_spans``) or pre-drop
-    ubiquitous shingles; this is the exact small-scale baseline of the
-    family.
-    """
-    w = Window.partitionBy("doc_id")
-    sized = doc_shingles.withColumn("sz", F.count(F.lit(1)).over(w)).localCheckpoint(
-        eager=False
-    )  # two consumers (the self-join's sides), same as jaccard_pairs
-    a = sized.alias("a")
-    b = sized.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.min("a.sz").alias("sz_a"),
-            F.min("b.sz").alias("sz_b"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("common") / F.col("sz_a"), 6).alias("c_a_in_b"),
-            F.round(F.col("common") / F.col("sz_b"), 6).alias("c_b_in_a"),
-            F.round(
-                F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")), 6
-            ).alias("jaccard"),
-        )
-        .filter(
-            (F.col("c_a_in_b") >= min_containment)
-            | (F.col("c_b_in_a") >= min_containment)
-        )
-    )
-
-
-def containment_oracle_sql(
-    n: int = 3, min_containment: float = 0.8, source: str = "documents"
-) -> str:
-    """DuckDB mirror of ``containment_pairs`` over ``shingles(source, n)``
-    — same tokenization, same 6dp rounding, same either-direction filter."""
-    return f"""
-WITH ct_t AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 \\t\\n\\r]', '', 'g'), '[ \\t\\n\\r]+'),
-                     t -> t <> '') AS toks
-  FROM {source}
-),
-ct_sh AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+{n - 1}], ' ') AS shingle
-  FROM ct_t, UNNEST(generate_series(1, len(toks) - {n - 1})) AS t(i)
-  WHERE len(toks) >= {n}
-),
-ct_sz AS (SELECT doc_id, count(*)::BIGINT AS sz FROM ct_sh GROUP BY doc_id),
-ct_pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS common
-  FROM ct_sh a JOIN ct_sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
-       round(common::DOUBLE / sa.sz, 6) AS c_a_in_b,
-       round(common::DOUBLE / sb.sz, 6) AS c_b_in_a,
-       round(common::DOUBLE / (sa.sz + sb.sz - common), 6) AS jaccard
-FROM ct_pairs
-JOIN ct_sz sa ON sa.doc_id = doc_a
-JOIN ct_sz sb ON sb.doc_id = doc_b
-WHERE round(common::DOUBLE / sa.sz, 6) >= {min_containment}
-   OR round(common::DOUBLE / sb.sz, 6) >= {min_containment}"""
-
-
-def containment_candidate_pairs(
-    doc_shingles: DataFrame, min_containment: float = 0.8
-) -> DataFrame:
-    """The SCALE path to containment: prefix-filtered candidate
-    generation (the PPJoin/prefix-filter principle — Bayardo et al.
-    WWW'07, Xiao et al. WWW'08).
-
-    Guarantee: if c(A in B) = |A∩B|/|A| >= t, then ANY subset of A with
-    more than (1-t)·|A| shingles intersects B (fewer than t·|A| of A's
-    shingles lie outside B). So joining only each doc's PREFIX — its
-    ⌊(1-t)·sz⌋+1 globally RAREST shingles — against the other docs' full
-    shingle streams loses no true pair, in either direction (every doc
-    plays the prefix role once). Rarity ordering is what shrinks the
-    candidate set: common shingles stay out of prefixes, so the join's
-    build side is dominated by low-frequency postings.
-
-    Output (doc_a, doc_b) distinct, a < b — a SUPERSET of
-    ``containment_pairs(...)``'s pair set at the same threshold; verify
-    with ``containment_verify_pairs``. Cost: one vocab-sized df
-    aggregate, one shingle-keyed join of stream x df, one per-doc window
-    (rank by rarity), and a prefix x full join whose volume is the
-    prefix mass — at t = 0.8 one-fifth of the full self-join's left
-    side, concentrated on rare keys.
-    """
-    _check_threshold(min_containment)
-    # three consumers (df aggregate, the ranked prefix stream, the full
-    # join side) and no Catalyst subtree reuse across the tokenize
-    # lambdas — materialize the shingle stream once (the repo-wide
-    # single-materialization pattern, see jaccard_pairs)
-    doc_shingles = doc_shingles.localCheckpoint(eager=False)
-    df_tbl = doc_shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("doc_id")
-    ranked = (
-        doc_shingles.join(df_tbl, "shingle")
-        .withColumn("sz", F.count(F.lit(1)).over(w))
-        .withColumn(
-            "__rn", F.row_number().over(w.orderBy(F.asc("__df"), F.asc("shingle")))
-        )
-    )
-    prefix = ranked.filter(
-        F.col("__rn") <= F.floor((1.0 - min_containment) * F.col("sz")) + 1
-    ).select(F.col("doc_id").alias("doc_p"), "shingle")
-    full = doc_shingles.select(F.col("doc_id").alias("doc_f"), "shingle")
-    return (
-        prefix.join(full, "shingle")
-        .filter(F.col("doc_p") != F.col("doc_f"))
-        .select(
-            F.least("doc_p", "doc_f").alias("doc_a"),
-            F.greatest("doc_p", "doc_f").alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
-def containment_verify_pairs(
-    pairs: DataFrame, doc_shingles: DataFrame, min_containment: float = 0.8
-) -> DataFrame:
-    """Exact containment restricted to a candidate pair set — the verify
-    half for ``containment_candidate_pairs``, same join shape as
-    ``jaccard_verify_pairs`` (work bounded by |candidates| x shingles per
-    doc, sizes window-carried, no per-doc broadcast). Output matches
-    ``containment_pairs`` exactly when fed a superset of its pairs."""
-    _check_threshold(min_containment)
-    w = Window.partitionBy("doc_id")
-    sized = doc_shingles.withColumn("sz", F.count(F.lit(1)).over(w)).localCheckpoint(
-        eager=False
-    )  # two consumers (each pair side)
-    sa = sized.select(F.col("doc_id").alias("doc_a"), "shingle", F.col("sz").alias("sz_a"))
-    sb = sized.select(F.col("doc_id").alias("doc_b"), "shingle", F.col("sz").alias("sz_b"))
-    return (
-        pairs.select("doc_a", "doc_b")
-        .join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.min("sz_a").alias("sz_a"),
-            F.min("sz_b").alias("sz_b"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("common") / F.col("sz_a"), 6).alias("c_a_in_b"),
-            F.round(F.col("common") / F.col("sz_b"), 6).alias("c_b_in_a"),
-            F.round(
-                F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")), 6
-            ).alias("jaccard"),
-        )
-        .filter(
-            (F.col("c_a_in_b") >= min_containment)
-            | (F.col("c_b_in_a") >= min_containment)
-        )
-    )
-
-
-def _check_threshold(min_containment: float) -> None:
-    if not 0.0 < min_containment <= 1.0:
-        raise ValueError(
-            f"min_containment must be in (0, 1], got {min_containment}"
-        )
 
 
 def jaccard_verify_pairs(

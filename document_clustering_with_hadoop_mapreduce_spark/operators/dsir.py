@@ -1,7 +1,6 @@
 """DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
 arXiv:2302.03169): score every raw document by how target-like it is under
-two bag-of-hashed-n-grams unigram models, then resample with deterministic
-Gumbel top-k.
+two bag-of-hashed-n-grams unigram models.
 
 log w(doc) = sum over the doc's hashed-n-gram buckets of
              cnt_bucket * (ln p_target(bucket) - ln q_raw(bucket))
@@ -19,13 +18,10 @@ Scale design (100 TB):
   set in ``operators/decontam.py``; contrast the per-document frames that
   must NEVER broadcast, ``operators/dedup.py::jaccard_pairs``);
 - per-doc scoring is the feature stream joined map-side against that
-  broadcast + one groupBy(doc) sum — two aggregate exchanges total;
-- resampling needs no RNG state: the Gumbel noise is a salted-md5 uniform
-  (same determinism discipline as ``textstats.hash_split``), so selection
-  is reproducible across runs, partitionings and engines.
+  broadcast + one groupBy(doc) sum — two aggregate exchanges total.
 
 All hashes are md5-derived (``functions.hashing.md5_int60``) so a DuckDB
-oracle reproduces buckets, weights and the selected set bit-for-bit
+oracle reproduces buckets and weights bit-for-bit
 (tests/test_dsir.py).
 
 Reference parity: the reference engine has no data-selection surface; this
@@ -36,7 +32,7 @@ curation family.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int60
@@ -156,46 +152,6 @@ def dsir_weights(
         .agg(
             (F.sum(F.col("cnt") * F.col("lr6")) / F.lit(1e6)).alias("log_weight")
         )
-    )
-
-
-def gumbel_key(id_col: Column, salt: str = "dsir") -> Column:
-    """Deterministic standard-Gumbel draw per id: g = -ln(-ln(u)) with
-    u = (md5_60(salt:id)+1)/(2^60+1) in (0,1) — RNG-free, stable under
-    corpus growth, bit-reproducible in the oracle."""
-    u = (md5_int60(F.concat_ws(":", F.lit(salt), id_col.cast("string"))) + 1) / (
-        float(1 << 60) + 1.0
-    )
-    return -F.log(-F.log(u))
-
-
-def dsir_resample(
-    weights: DataFrame,
-    n: int,
-    salt: str = "dsir",
-) -> DataFrame:
-    """Gumbel top-k sampling WITHOUT replacement from the softmax of the
-    importance weights: rank by log_weight + Gumbel(id) and keep the top
-    ``n`` (Gumbel-max trick — equivalent in distribution to weighted
-    sampling, here made deterministic by the salted draw).
-
-    (doc_id, log_weight, score, rank). The truncation is ORDER BY + LIMIT —
-    Spark plans TakeOrderedAndProject (per-partition partial top-k, O(n)
-    memory only for the kept set); the explicit rank is then a window over
-    the already-truncated n rows. For corpus-fraction selections where even
-    the kept set is huge, skip ranking and filter on a score threshold
-    instead (one map-side predicate) — the score column is all you need.
-    """
-    scored = weights.withColumn(
-        "score", F.round(F.col("log_weight") + gumbel_key(F.col("doc_id"), salt), 6)
-    )
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
-    w = Window.orderBy(*order)
-    return (
-        scored.orderBy(*order)
-        .limit(n)
-        .withColumn("rank", F.row_number().over(w))
-        .select("doc_id", "log_weight", "score", "rank")
     )
 
 

@@ -990,7 +990,6 @@ def semdedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     sub_blocks: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023, arXiv:2303.09540):
@@ -1055,12 +1054,11 @@ def semdedup(
         ).alias("centroid_cos"),
         _as_double(F.col(vec_col)).alias("_v"),
     )
-    if materialize:
-        # three consumers (pair-join left/right + the keep fan-back):
-        # Catalyst never unifies the assignment subtrees, so without this
-        # the scan + k-centroid distance math runs three times (the
-        # single-materialization pattern, see operators/dedup.py:160)
-        base = base.localCheckpoint(eager=False)
+    # three consumers (pair-join left/right + the keep fan-back):
+    # Catalyst never unifies the assignment subtrees, so without this
+    # the scan + k-centroid distance math runs three times (the
+    # single-materialization pattern, see dedup.lsh_candidate_pairs)
+    base = base.localCheckpoint(eager=False)
     if sub_blocks < 1:
         raise ValueError(f"sub_blocks must be >= 1, got {sub_blocks}")
     # sub-block the within-cluster pair space so a hot cluster's pairs
@@ -1181,12 +1179,11 @@ def semdedup(
         .groupBy("cluster", "__ti", "__tj")
         .applyInPandas(_score, pair_schema)
     )
-    if materialize:
-        # the pair frame has two consumers (the returned edges + the
-        # dropped-set projection feeding docs) and its producer is the
-        # expensive sub-blocked cosine pass — materialize the (small,
-        # threshold-filtered) edge set once
-        pairs = pairs.localCheckpoint(eager=False)
+    # the pair frame has two consumers (the returned edges + the
+    # dropped-set projection feeding docs) and its producer is the
+    # expensive sub-blocked cosine pass — materialize the (small,
+    # threshold-filtered) edge set once
+    pairs = pairs.localCheckpoint(eager=False)
     # of each pair drop the HIGHER-centroid-sim member; centroid_cos tie
     # (incl. exact duplicates) drops the larger vec_id, so exactly one
     # member of every edge is marked and the mark-set is deterministic.

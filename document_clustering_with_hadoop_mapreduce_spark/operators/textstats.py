@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import SPLIT_RE, STOPWORDS, clean_text, explode_tokens, token_count, tokens
+from ..functions.text import STOPWORDS, clean_text, explode_tokens, token_count, tokens
 
 # BPE-ish lexer: alpha runs | digit runs | single non-space symbol.
 # Explicit whitespace class (not \s): Java and RE2 disagree on \f/\x0B, and
@@ -491,7 +491,7 @@ def doc_fingerprints(documents: DataFrame, text_col: str = "text", id_col: str =
     )
 
 
-def unigram_cross_entropy(matrix: DataFrame, materialize: bool = True) -> DataFrame:
+def unigram_cross_entropy(matrix: DataFrame) -> DataFrame:
     """Perplexity-proxy quality score (CCNet-style, Wenzek et al. 2020):
     each document's cross-entropy against the CORPUS'S OWN unigram LM.
 
@@ -512,13 +512,11 @@ def unigram_cross_entropy(matrix: DataFrame, materialize: bool = True) -> DataFr
     that AQE broadcast-converts when the vocab is small; the scalar mass M
     rides a 1-row broadcast crossJoin exactly like tfidf's derived-N
     branch. Two aggregate exchanges total (term totals, per-doc score).
-    ``materialize``: the matrix has two consumers (totals + the join) and
-    Catalyst cannot unify tokenize-lambda subtrees (see ``tfidf``), so the
-    nnz-sized frame is lazily checkpointed once by default; pass False
-    when the caller already materialized it.
+    The matrix has two consumers (totals + the join) and Catalyst cannot
+    unify tokenize-lambda subtrees (see ``tfidf``), so the nnz-sized frame
+    is lazily checkpointed once.
     """
-    if materialize:
-        matrix = matrix.localCheckpoint(eager=False)
+    matrix = matrix.localCheckpoint(eager=False)
     totals = matrix.groupBy("term").agg(F.sum("cnt").alias("__tc"))
     mass = totals.agg(F.sum("__tc").cast("double").alias("__m"))
     return (
@@ -690,72 +688,6 @@ def bigram_cross_entropy(
                 6,
             ).alias("cross_entropy"),
             F.count(F.lit(1)).alias("n_bigrams"),
-        )
-    )
-
-
-def chunk_documents(
-    documents: DataFrame,
-    chunk_tokens: int = 512,
-    overlap: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Overlapping sliding-window chunker — the retrieval/RAG preprocessing
-    twin of ``sequence_pack`` (packing concatenates ACROSS docs for
-    training density; chunking splits WITHIN docs so each piece embeds and
-    retrieves on its own, with ``overlap`` tokens of context carried
-    across the cut).
-
-    Windows slide over the document's raw whitespace tokens with stride
-    ``chunk_tokens - overlap``: chunk i spans tokens
-    ``[1 + i*stride, ...]`` for ``min(chunk_tokens, remaining)`` tokens,
-    and the chunk count is ``max(1, ceil((n - overlap) / stride))`` — full
-    coverage, every adjacent pair sharing exactly ``overlap`` tokens, and
-    never a final chunk that is a pure suffix of its predecessor.
-    Documents with no tokens produce no rows. ``chunk_text`` re-joins the
-    token slice with single spaces (whitespace runs are normalized — the
-    tokens, not the original byte offsets, are the unit here).
-
-    Output: (doc_id, chunk_idx 0-based, chunk_id ``doc-pos`` unique,
-    start_token 1-based, n_tokens, chunk_text).
-
-    Scale shape: one map-side projection — tokenize, a small ``sequence``
-    of starts, slice + join inside ``transform``, explode. Zero shuffles;
-    fuses into the downstream embed/index stage like every projection
-    here.
-    """
-    if chunk_tokens < 1:
-        raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
-    if not 0 <= overlap < chunk_tokens:
-        raise ValueError(f"need 0 <= overlap < chunk_tokens, got overlap={overlap}")
-    stride = chunk_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), SPLIT_RE)
-    staged = (
-        documents.where(F.trim(F.col(text_col)) != "")
-        .where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
-    )
-    n = F.size("__toks")
-    n_chunks = F.greatest(F.lit(1), F.ceil((n - F.lit(overlap)) / F.lit(stride))).cast("int")
-    chunks = F.expr(
-        f"transform(sequence(0, __nc - 1), i -> struct("
-        f"  i AS chunk_idx,"
-        f"  1 + i * {stride} AS start_token,"
-        f"  slice(__toks, 1 + i * {stride}, {chunk_tokens}) AS toks))"
-    )
-    return (
-        staged.withColumn("__nc", n_chunks)
-        .select("doc_id", F.explode(chunks).alias("__c"))
-        .select(
-            "doc_id",
-            F.col("__c.chunk_idx").alias("chunk_idx"),
-            F.concat_ws("-", F.col("doc_id").cast("string"), F.col("__c.chunk_idx")).alias(
-                "chunk_id"
-            ),
-            F.col("__c.start_token").alias("start_token"),
-            F.size("__c.toks").alias("n_tokens"),
-            F.array_join("__c.toks", " ").alias("chunk_text"),
         )
     )
 

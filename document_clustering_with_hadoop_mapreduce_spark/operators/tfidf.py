@@ -28,7 +28,6 @@ def tfidf(
     matrix: DataFrame,
     n_docs: int | None = None,
     compat_n1: bool = False,
-    materialize: bool = True,
 ) -> DataFrame:
     """(doc_id, term, cnt, tf, idf, tfidf).
 
@@ -37,17 +36,11 @@ def tfidf(
     config, ref sources/1.4/source/task1_4.java:46-49,115) or derived with
     a distinct-count aggregate if omitted. PREFER passing it: a parquet
     footer count is nearly free, and with a known N the matrix has exactly
-    one consumer, so no checkpoint/re-scan trade exists at any scale.
-
-    ``materialize`` (relevant when ``n_docs`` is None, which adds a second
-    aggregate branch over the matrix): lazily checkpoint the matrix so the
-    extra branch does not re-run the matrix pipeline. Pass False when the
-    input is cheap to recompute (an
-    already-materialized triples file) or when the CALLER materializes the
-    tf-idf output itself — double-checkpointing pins two nnz-sized copies
-    in executor storage for no benefit. NB: each materialization lives
-    until its RDD is GC'd (ContextCleaner); long-lived sessions re-running
-    matrix queries should prefer a driver-known ``n_docs``.
+    one consumer. Without it the distinct-count branch is a second consumer
+    of the matrix, which Catalyst does not unify with the first (the
+    tokenize-lambda canonicalization failure; plan-audited: two FileScans),
+    so the matrix pipeline runs twice: cheap for an already-written
+    triples file (task 1.4), a second tokenize pass for a text corpus.
 
     Hot-key bound: the standard per-term df window buffers every row of a
     term in one task; AQE cannot split a window partition.
@@ -57,16 +50,6 @@ def tfidf(
         w = Window.partitionBy("doc_id")
     else:
         w = Window.partitionBy("term")
-    # The derived-count branch (n_docs None) gives the matrix lineage a
-    # SECOND consumer. Catalyst does NOT unify such branches (the
-    # tokenize-lambda canonicalization failure; plan-audited: two
-    # FileScans), so the matrix is lazily materialized once and both
-    # branches read the nnz-sized checkpoint instead of re-tokenizing the
-    # corpus. ``materialize=False`` opts out for inputs that are cheap to
-    # recompute.
-    two_consumers = n_docs is None
-    if materialize and two_consumers:
-        matrix = matrix.localCheckpoint(eager=False)
     if n_docs is not None:
         with_n = tf(matrix)
         n_col = F.lit(float(n_docs))

@@ -124,9 +124,7 @@ def task_1_4_tfidf(
     m = read_mtx(spark, in_mtx).select(
         "doc_id", F.col("term_id").alias("term"), F.col("value").alias("cnt")
     )
-    # materialize=False: m comes from an already-written triples file —
-    # the second scan the checkpoint would avoid is a cheap file re-read
-    out = tfidf(m, compat_n1=compat_n1, materialize=False).select(
+    out = tfidf(m, compat_n1=compat_n1).select(
         "doc_id",
         F.col("term").alias("term_id"),
         F.col("tfidf").alias("value"),

@@ -23,7 +23,6 @@ def write_bucketed(
     path: str,
     bucket_cols: list[str],
     n_buckets: int = 8,
-    sort: bool = True,
 ) -> None:
     """Write ``df`` as an external bucketed parquet table.
 
@@ -31,15 +30,14 @@ def write_bucketed(
     well (each bucket file is pre-sorted). Bucket count is a layout
     decision: aim for bucket_size x n_buckets ~ table size with buckets
     in the 100 MB - 1 GB range at target scale."""
-    w = (
+    (
         df.write.mode("overwrite")
         .format("parquet")
         .option("path", path)
         .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .saveAsTable(table)
     )
-    if sort:
-        w = w.sortBy(*bucket_cols)
-    w.saveAsTable(table)
 
 
 def table_df(spark: SparkSession, table: str) -> DataFrame:

@@ -166,29 +166,6 @@ def test_sparse_lloyd_empty_cluster_drops_out_like_oracle(spark, case):
     assert [f"{w:.6f}" for w in trace] == [f"{w:.6f}" for _, w in want]
 
 
-def test_pandas_udf_matches_jvm_normalize(spark, sf_dir):
-    """The Arrow pandas-UDF escape hatch computes exactly what the JVM
-    higher-order-function path computes (so the slow path can never
-    silently drift from the fast one)."""
-    from document_clustering_with_hadoop_mapreduce_spark.functions.vector import (
-        l2_normalize,
-        l2_normalize_pandas_udf,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(100).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    udf = l2_normalize_pandas_udf()
-    both = emb.select(
-        "vec_id", l2_normalize(F.col("v")).alias("jvm"), udf("v").alias("py")
-    ).collect()
-    for r in both:
-        assert len(r["jvm"]) == len(r["py"])
-        for a, b in zip(r["jvm"], r["py"]):
-            assert abs(a - b) < 1e-12
-
-
 @pytest.mark.parametrize("slot", ["doc_kmeans_sparse_trace", "kmeans_lloyd_trace"])
 def test_wcss_trace_collects_without_a_job(spark, sf_dir, slot):
     """The trace slots return the driver's WCSS list as a local relation:

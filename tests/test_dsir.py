@@ -1,20 +1,15 @@
-"""DSIR value gates: hashed n-gram features, smoothed log-ratio importance
-weights and the deterministic Gumbel top-k resample are each compared
-against a DuckDB oracle built from the SAME md5 hashing, token regexes and
-smoothing constants; a planted-domain test pins that target-like documents
-actually outrank off-domain ones."""
+"""DSIR value gates: hashed n-gram features and smoothed log-ratio
+importance weights are each compared against a DuckDB oracle built from the
+SAME md5 hashing, token regexes and smoothing constants; a planted-domain
+test pins that target-like documents actually outrank off-domain ones."""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.dsir import (
     dsir_oracle_cte,
-    dsir_resample,
     dsir_weights,
-    gumbel_key,
     hashed_ngram_counts,
 )
 from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
@@ -50,26 +45,6 @@ def test_dsir_weights_match_duckdb(spark, sf_dir, duck):
     )
 
 
-def test_dsir_resample_matches_duckdb(spark, sf_dir, duck):
-    """Gumbel top-25 — scores AND the selected id set reproduce exactly
-    (salted-md5 uniform -> -ln(-ln(u)) is the same closed form in SQL)."""
-    w = dsir_weights(_docs(spark, sf_dir), F.expr(TARGET), n_buckets=B, alpha=ALPHA)
-    got = dsir_resample(w, n=25, salt="dsir")
-    u = (
-        "((CAST(('0x' || substr(md5(concat('dsir', ':', doc_id::VARCHAR)), 1, 15)) AS BIGINT) + 1)"
-        f" / ({float(1 << 60)} + 1.0))"
-    )
-    sql = f"""WITH {_WEIGHTS_CTE},
-    scored AS (
-      SELECT doc_id, log_weight,
-             round(log_weight + (-ln(-ln({u}))), 6) AS score
-      FROM ds_w
-    ),
-    rk AS (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id ASC)::INT AS rank FROM scored)
-    SELECT doc_id, log_weight, score, rank FROM rk WHERE rank <= 25"""
-    assert_matches_oracle(got, duck, sql)
-
-
 def test_dsir_target_docs_outrank_background(spark):
     """Planted-domain sanity: with a target slice speaking a distinct
     vocabulary, every target doc must outweigh every background doc."""
@@ -84,17 +59,6 @@ def test_dsir_target_docs_outrank_background(spark):
     worst_target = min(scores[i] for i in range(30))
     best_background = max(scores[i] for i in range(30, 90))
     assert worst_target > best_background
-
-
-def test_gumbel_key_is_standard_gumbel_shaped(spark):
-    """The deterministic draw must actually look Gumbel: finite, and with
-    the right median (-ln(ln 2) ~ 0.3665) over a few thousand ids."""
-    df = spark.range(4000).select(gumbel_key(F.col("id")).alias("g"))
-    rows = df.agg(
-        F.expr("percentile(g, 0.5)").alias("med"), F.max(F.abs("g")).alias("mx")
-    ).collect()[0]
-    assert math.isfinite(rows["mx"])
-    assert abs(rows["med"] - 0.3665) < 0.1
 
 
 def test_dsir_plan_broadcasts_only_bounded_frames(spark, sf_dir):

@@ -285,45 +285,6 @@ def test_sequence_pack_matches_python_packer(spark, docs, max_tokens):
 @pytest.mark.slow
 @SETTINGS
 @given(
-    docs=st.lists(
-        st.lists(word, min_size=0, max_size=10).map(" ".join),
-        min_size=1, max_size=8,
-    ),
-    window=st.integers(min_value=1, max_value=4),
-)
-def test_duplicate_spans_match_python_counter(spark, docs, window):
-    """duplicate_spans == a pure-Python rolling-window counter (the dedup
-    token pipeline: lowercase/clean keeps [a-e ] texts verbatim)."""
-    from collections import defaultdict
-
-    from document_clustering_with_hadoop_mapreduce_spark.operators.dedup import (
-        duplicate_spans,
-    )
-
-    sites = defaultdict(list)  # span text -> [(doc, pos)]
-    for i, text in enumerate(docs):
-        toks = text.split()
-        for p in range(len(toks) - window + 1):
-            sites[" ".join(toks[p:p + window])].append((i, p + 1))
-    want = {}
-    for span, occ in sites.items():
-        by_doc = defaultdict(list)
-        for d, p in occ:
-            by_doc[d].append(p)
-        if len(by_doc) >= 2:
-            ex = sorted(f"{d}:{min(ps)}" for d, ps in sorted(by_doc.items())[:8])
-            want[span] = (len(by_doc), len(occ), ",".join(ex))
-    frame = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
-    got = {
-        (r["n_docs"], r["n_occurrences"], r["example_docs"])
-        for r in duplicate_spans(frame, window=window).collect()
-    }
-    assert got == set(want.values()), (got, want)
-
-
-@pytest.mark.slow
-@SETTINGS
-@given(
     vecs=st.lists(
         st.lists(
             st.floats(min_value=-10, max_value=10, allow_nan=False, width=32),
@@ -384,42 +345,6 @@ def test_winnow_spark_matches_python_on_random_text(spark, text, k, w):
         for r in winnow_fingerprints(df, k=k, w=w).collect()
     }
     assert got == _winnow_py(text, k=k, w=w)
-
-
-@pytest.mark.slow
-@given(
-    text=st.text(alphabet="ab c", min_size=0, max_size=120),
-    chunk_tokens=st.integers(min_value=2, max_value=12),
-    overlap=st.integers(min_value=0, max_value=10),
-)
-@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_chunking_matches_python_on_random_text(spark, text, chunk_tokens, overlap):
-    """Random-text fuzz of the sliding-window chunker against a direct
-    python mirror of its formula (count, starts, slice bounds)."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-        chunk_documents,
-    )
-
-    if overlap >= chunk_tokens:
-        return
-    stride = chunk_tokens - overlap
-    df = spark.createDataFrame([(1, text)], "doc_id int, text string")
-    got = sorted(
-        (r.chunk_idx, r.start_token, r.n_tokens, r.chunk_text)
-        for r in chunk_documents(df, chunk_tokens=chunk_tokens, overlap=overlap).collect()
-    )
-    toks = text.split()
-    if not toks:
-        assert got == []
-        return
-    n = len(toks)
-    nc = max(1, -(-(n - overlap) // stride))  # ceil
-    want = []
-    for i in range(nc):
-        start = 1 + i * stride
-        sl = toks[start - 1 : start - 1 + chunk_tokens]
-        want.append((i, start, len(sl), " ".join(sl)))
-    assert got == sorted(want)
 
 
 @pytest.mark.slow

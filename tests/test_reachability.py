@@ -53,50 +53,44 @@ KEEP = {
     f"{PKG}.operators.textstats.bpe_ish_token_counts":
         "reference the fused doc_features projection is checked against "
         "(test_properties::test_doc_features_matches_standalone_operators)",
+    f"{PKG}.operators.similarity.top_similar_pairs":
+        "brute-force reference the live block_topk_pairs is checked against "
+        "(test_similarity::test_block_topk_pairs_equals_bruteforce)",
+    f"{PKG}.operators.similarity.quantized_topk":
+        "full-scan reference the live quantized_ivf_topk is checked against "
+        "(test_quantization::test_quantized_ivf_composition)",
+    f"{PKG}.operators.bpe.bpe_train":
+        "driver-side reference the fused doc_quality slot's merges are checked against "
+        "(test_fused_slots::test_merge_rows_match_direct_training)",
+    f"{PKG}.operators.bpe._initial_symbols": "helper of the bpe_train reference",
+    f"{PKG}.operators.bpe._adjacent_pairs": "helper of the bpe_train reference",
+    f"{PKG}.operators.bpe._merge_pair": "helper of the bpe_train reference",
+    f"{PKG}.operators.bpe.word_counts":
+        "corpus word counts the bpe_train reference trains on "
+        "(test_fused_slots::test_merge_rows_match_direct_training)",
 }
 
-# Unreachable definitions that are open items of ROADMAP direction 3: the
+# Unreachable definitions that are open items of ROADMAP direction 5: the
 # second engine of a pair, a driver-side form of a live plan, or an operator
 # only tests call. Each entry goes when its code is deleted (together with
 # its tests) or wired to a slot; no entry may be added.
 OPEN = {
     f"{PKG}.operators.dedup.tfidf_cosine_pairs": "engine pair of tfidf_cosine_pairs_blocked",
-    f"{PKG}.operators.similarity.top_similar_pairs": "engine pair of block_topk_pairs",
-    f"{PKG}.operators.similarity.quantized_topk": "engine pair of quantized_ivf_topk",
     f"{PKG}.operators.dedup.star_components": "engine pair of duplicate_components",
-    f"{PKG}.operators.bpe.bpe_train": "driver-side loop beside the live bpe_train_plan",
-    f"{PKG}.operators.bpe._initial_symbols": "helper of bpe_train",
-    f"{PKG}.operators.bpe._adjacent_pairs": "helper of bpe_train",
-    f"{PKG}.operators.bpe._merge_pair": "helper of bpe_train",
-    f"{PKG}.operators.bpe.word_counts": "corpus-wide form of the live doc_word_counts",
-    f"{PKG}.operators.category.category_top_terms": "operator form of the category_top_terms slot",
     f"{PKG}.operators.decontam.decontaminate": "filter form of the live contamination_stats",
     f"{PKG}.operators.graph.hits": "test-only operator",
     f"{PKG}.operators.snapshot.embedding_drift": "test-only operator",
     f"{PKG}.caches.clear_caches": "escape hatch for interactive sessions",
     # operators only tests call; each goes with its tests in a later slice
-    f"{PKG}.functions.vector.l2_normalize": "test-only operator (test_doc_cluster)",
-    f"{PKG}.functions.vector.l2_normalize_pandas_udf": "test-only operator (test_doc_cluster)",
     f"{PKG}.operators.bpe.bpe_encode_words": "test-only operator (test_bpe)",
     f"{PKG}.operators.bpe.bpe_token_counts": "test-only operator (test_bpe)",
     f"{PKG}.operators.bpe.bpe_token_counts_from_counts": "helper of bpe_token_counts",
-    f"{PKG}.operators.dedup.span_hashes": "helper of duplicate_spans",
-    f"{PKG}.operators.dedup.duplicate_spans": "test-only operator (test_duplicate_spans)",
-    f"{PKG}.operators.dedup.cut_duplicate_spans": "test-only operator (test_cut_spans)",
-    f"{PKG}.operators.dedup.containment_pairs": "test-only operator (test_containment)",
-    f"{PKG}.operators.dedup.containment_candidate_pairs": "test-only operator (test_containment)",
-    f"{PKG}.operators.dedup.containment_verify_pairs": "test-only operator (test_containment)",
-    f"{PKG}.operators.dedup.containment_oracle_sql": "test-only operator (test_containment)",
-    f"{PKG}.operators.dedup._check_threshold": "helper of the containment operators",
-    f"{PKG}.operators.dsir.gumbel_key": "test-only operator (test_dsir)",
-    f"{PKG}.operators.dsir.dsir_resample": "test-only operator (test_dsir)",
     f"{PKG}.operators.graph.textrank_keywords": "test-only operator (test_pagerank)",
     f"{PKG}.operators.multimodal.decode_image_meta": "test-only operator (test_multimodal)",
     f"{PKG}.operators.multimodal.media_histogram_pairs": "test-only operator (test_multimodal)",
     f"{PKG}.operators.similarity.mmr_select": "test-only operator (test_sampling_mmr)",
     f"{PKG}.operators.similarity.embedding_outliers": "test-only operator (test_similarity)",
     f"{PKG}.operators.snapshot.corpus_diff": "test-only operator (test_snapshot)",
-    f"{PKG}.operators.textstats.chunk_documents": "test-only operator (test_chunking, test_streaming)",
     f"{PKG}.sources.bucketing.table_df": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.write_date_partitioned": "test-only operator (test_bucketing)",
     f"{PKG}.sources.bucketing.compact_to_target_bytes": "test-only operator (test_bucketing)",

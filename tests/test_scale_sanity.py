@@ -129,77 +129,3 @@ def test_incremental_dedup_recovers_planted_batch_dups_at_50k_history(spark):
     )
     # unique-text histories can only pair through the planted copies
     assert pairs == want, f"{len(pairs - want)} spurious pairs"
-
-
-def test_duplicate_spans_planted_license_block_at_50k_docs(spark):
-    """A 10-token licence block planted verbatim in 2,000 of 50k otherwise
-    unique docs: duplicate_spans must report exactly that span with full
-    counts and the bounded example sample (the hot-span path — no
-    quadratic or unbounded materialization)."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.dedup import (
-        duplicate_spans,
-    )
-
-    licence = "permission is hereby granted free of charge to any person"  # 10 tokens
-    docs = spark.range(N_DOCS).select(
-        F.col("id").alias("doc_id"),
-        F.when(
-            F.col("id") < 2_000,
-            F.format_string(
-                licence + " t%s u%s v%s w%s", *([F.col("id")] * 4)
-            ),
-        )
-        .otherwise(
-            F.format_string(
-                "unique words only a%s b%s c%s d%s e%s f%s g%s h%s i%s j%s",
-                *([F.col("id")] * 10),
-            )
-        )
-        .alias("text"),
-    )
-    out = duplicate_spans(docs, window=10, max_examples=8).collect()
-    assert len(out) == 1, [r.asDict() for r in out[:3]]
-    r = out[0]
-    assert r["n_docs"] == 2_000 and r["n_occurrences"] == 2_000
-    assert len(r["example_docs"].split(",")) == 8
-
-
-def test_cut_duplicate_spans_planted_license_block_at_50k_docs(spark):
-    """The cutting pass on the same planted corpus: the licence block
-    survives ONLY in its keeper doc (doc 0); every other planted doc
-    loses exactly the 10 licence tokens and keeps its unique tail; the
-    47k unique docs are untouched. Output stays one row per doc."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.dedup import (
-        cut_duplicate_spans,
-    )
-
-    licence = "permission is hereby granted free of charge to any person"  # 10 tokens
-    docs = spark.range(N_DOCS).select(
-        F.col("id").alias("doc_id"),
-        F.when(
-            F.col("id") < 2_000,
-            F.format_string(
-                licence + " t%s u%s v%s w%s", *([F.col("id")] * 4)
-            ),
-        )
-        .otherwise(
-            F.format_string(
-                "unique words only a%s b%s c%s d%s e%s f%s g%s h%s i%s j%s",
-                *([F.col("id")] * 10),
-            )
-        )
-        .alias("text"),
-    )
-    out = cut_duplicate_spans(docs, window=10)
-    assert out.count() == N_DOCS
-    agg = out.agg(
-        F.sum((F.col("n_removed") > 0).cast("long")).alias("n_cut_docs"),
-        F.sum("n_removed").alias("tok_cut"),
-    ).collect()[0]
-    # 1,999 non-keeper planted docs lose exactly the 10-token block
-    assert agg["n_cut_docs"] == 1_999
-    assert agg["tok_cut"] == 1_999 * 10
-    keeper = out.filter(F.col("doc_id") == 0).collect()[0]
-    assert keeper["n_removed"] == 0 and keeper["clean_text"].startswith(licence)
-    sample = out.filter(F.col("doc_id") == 7).collect()[0]
-    assert sample["clean_text"] == "t7 u7 v7 w7"

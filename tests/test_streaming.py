@@ -211,30 +211,3 @@ def test_stream_incremental_dedup_resumes_without_replay(spark, tmp_path):
     got = {(r["doc_a"], r["doc_b"]) for r in rows}
     assert got == want and len(rows) == len(got)
     assert got2.count() >= n1
-
-
-def test_stream_chunking_equals_batch(spark, sf_dir):
-    """chunk_documents is a pure map-side projection, so it applies to a
-    document STREAM unchanged (the structured-streaming contract for
-    stateless ops) and a one-pass run emits exactly the batch chunks."""
-    from document_clustering_with_hadoop_mapreduce_spark.operators.textstats import (
-        chunk_documents,
-    )
-    from document_clustering_with_hadoop_mapreduce_spark.streaming.events_stream import (
-        read_documents_stream,
-        run_stream_to_memory,
-    )
-
-    stream = chunk_documents(
-        read_documents_stream(spark, f"{sf_dir}/documents.parquet"),
-        chunk_tokens=16,
-        overlap=4,
-    )
-    got_df = run_stream_to_memory(stream, "chunks_t1", mode="append")
-    got = {(r.chunk_id, r.chunk_text) for r in got_df.collect()}
-    docs = load_table(spark, sf_dir, "documents")
-    want = {
-        (r.chunk_id, r.chunk_text)
-        for r in chunk_documents(docs, chunk_tokens=16, overlap=4).collect()
-    }
-    assert got == want
