@@ -390,6 +390,23 @@ def jaccard_verify_pairs(
     )
 
 
+def _both_directions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """(doc_a, doc_b) pairs -> the undirected edge list (src, dst), each
+    pair once per direction. One generator over one scan of ``pairs``, so
+    the plan that produces the pairs runs once; a union of two
+    projections would run it once per branch, or need a cache — and a
+    cache of a shuffle output keeps all ``spark.sql.shuffle.partitions``
+    partitions (see ``doc_cluster.doc_partitioned``), so each later pass
+    over it ran that many near-empty tasks. The callers checkpoint the
+    result, which keeps AQE's coalesced layout."""
+    return pairs.select(
+        F.inline(F.array(
+            F.struct(F.col("doc_a").alias(src), F.col("doc_b").alias(dst)),
+            F.struct(F.col("doc_b").alias(src), F.col("doc_a").alias(dst)),
+        ))
+    )
+
+
 def duplicate_components(
     pairs: DataFrame,
     documents: DataFrame | None = None,
@@ -417,10 +434,7 @@ def duplicate_components(
     fixpoint (labels only decrease, so equal sums mean no label moved),
     decimal-cast so the test never overflows at any corpus size.
     """
-    p = pairs.select("doc_a", "doc_b").persist()
-    fwd = p.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    rev = p.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    edges = fwd.union(rev).persist()
+    edges = _both_directions(pairs, "src", "dst").localCheckpoint(eager=False)
     # seed each node with min(self, direct neighbors): folds the first
     # propagation round into the init (one groupBy replaces the old
     # distinct + identity + first flood round) — on the clique-ish blobs
@@ -476,8 +490,6 @@ def duplicate_components(
             break
         labels = new_labels.localCheckpoint(eager=False)
         prev_total = total
-    edges.unpersist()
-    p.unpersist()
     if not converged:
         # labels only decrease, so a non-fixpoint exit means the result is
         # WRONG (some docs still carry a non-canonical representative) —
@@ -530,12 +542,11 @@ def star_components(
     Returns (doc_id, component) with component = min reachable id;
     singletons map to themselves when ``documents`` is given.
     """
-    p = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).persist()
     # undirected neighbor list, both directions; distinct so duplicate or
     # bidirectional input pairs collapse before round 1's shuffle AND so
     # the round-1 termination compare is set-vs-set like every later one
     edges = (
-        p.unionByName(p.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        _both_directions(pairs, "u", "v")
         .distinct()
         # lazy: the count() below materializes it — one job, not two
         .localCheckpoint(eager=False)
@@ -546,9 +557,6 @@ def star_components(
 
     prev_edges = edges
     prev_n = edges.count()
-    # only now: unpersisting before the count would drop the cache
-    # unpopulated and recompute the upstream pairs pipeline per union branch
-    p.unpersist()
     converged = prev_n == 0  # genuinely-empty graph: nothing to contract
     for _ in range(max_rounds):
         if converged:

@@ -38,6 +38,7 @@ from typing import NamedTuple
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 
 def seeded_sparse_centroids(matrix: DataFrame, k: int, weight_col: str = "tfidf") -> DataFrame:
@@ -55,6 +56,23 @@ def seeded_sparse_centroids(matrix: DataFrame, k: int, weight_col: str = "tfidf"
     )
 
 
+def doc_partitioned(matrix: DataFrame) -> DataFrame:
+    """``matrix`` hash-partitioned on doc_id into ``defaultParallelism``
+    partitions: the layout of a matrix the kernel reads many times (every
+    k-means|| round and Lloyd iteration). The per-doc aggregate then
+    needs no shuffle, and an explicit count is exempt from AQE's
+    coalescing. Materialised as a shuffle leaves it, the matrix keeps a
+    bad count either way: a ``localCheckpoint`` pins AQE's coalesced
+    layout, often ONE partition, so every pass runs on one core; a
+    ``cache()`` keeps all ``spark.sql.shuffle.partitions``, so every pass
+    runs that many near-empty tasks: Spark 4.1 ships
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` false,
+    and AQE then plans a cached plan without coalescing its output. The
+    extra nnz-row exchange is paid once."""
+    par = matrix.sparkSession.sparkContext.defaultParallelism
+    return matrix.repartition(par, F.col("doc_id"))
+
+
 class _HeldCentroids(NamedTuple):
     """Sparse centroids held on the driver, in the shape the kernel ships.
 
@@ -70,7 +88,32 @@ class _HeldCentroids(NamedTuple):
     rows: list[tuple]
 
     def frame(self) -> DataFrame:
-        return _centroid_frame(self.ws.sparkSession, self.rows)
+        return _Deferred(lambda: _centroid_frame(self.ws.sparkSession, self.rows))
+
+
+class _Deferred(ClassicDataFrame):
+    """A DataFrame built on first use. Until one of its attributes is
+    read it holds only ``build``; the first read calls it and takes over
+    the built frame's state, and from then on it is that frame. For the
+    held centroid frames: a ``createDataFrame`` costs 30-57 ms on the
+    driver, and most callers of ``sparse_lloyd`` and its ``on_iteration``
+    hook drop the frame unread."""
+
+    def __new__(cls, build):
+        self = object.__new__(cls)
+        self.__dict__["_build"] = build
+        return self
+
+    def __init__(self, build):  # the state arrives with the first read
+        pass
+
+    def __getattr__(self, name):
+        build = self.__dict__.get("_build")
+        if build is None:
+            return super().__getattr__(name)
+        self.__dict__.update(build().__dict__)
+        del self.__dict__["_build"]
+        return getattr(self, name)
 
 
 def _centroid_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -241,7 +284,11 @@ def scalable_kmeans_init(
     prunes the terms away), once for the filtered collect that brings the
     picked docs' terms along. The pass is not cached: a cached aggregate
     keeps all its shuffle partitions (AQE cannot coalesce them), which
-    cost more than the second pass at sf0.001 on 4 cores.
+    cost more than the second pass at sf0.001 on 4 cores. For the same
+    reason the matrix, which is cached here unless the caller cached it,
+    keeps the partitioning it comes with: a matrix that is a shuffle's
+    output should come ``doc_partitioned``, or every pass runs
+    ``spark.sql.shuffle.partitions`` tasks.
     Distances are the kernel's 6dp-rounded ||d||² + ||c||² - 2·d·c, and
     its argmin's lowest-label tie-break gives each doc to the lowest-id
     candidate when the final pass counts the weights.
@@ -382,15 +429,19 @@ def sparse_lloyd(
     reference-layout artifact sinks attach to (sources/artifacts.py; ref
     per-iteration writes at sources/2.2/source/KMeansReducer.java:25-131).
     The assignment frame is lazy and not cached; a centroid frame is a
-    local relation of the rows the driver holds, so reading it runs no
-    Spark job (the returned centroids too).
+    local relation of the rows the driver holds, built only when read, so
+    reading it runs no Spark job (the returned centroids too).
 
     The matrix feeds the seed collect and every iteration's query —
     separate jobs, so it is cached here for the loop's lifetime unless
     the caller already cached it; ``cache_matrix=False`` is for callers
     whose frame is already materialized (e.g. a localCheckpoint-ed
     tf-idf matrix — is_cached cannot see RDD-level persistence, so
-    without the flag we'd pin a second copy).
+    without the flag we'd pin a second copy). A cache keeps the
+    matrix's partitioning, and every iteration runs one task per
+    partition: a matrix that is a shuffle's output should come
+    ``doc_partitioned`` (a cached shuffle output keeps all
+    ``spark.sql.shuffle.partitions``).
     """
     we_cached = cache_matrix and not matrix.is_cached
     if we_cached:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .compat import clean_text_ref
-from .operators.doc_cluster import scalable_kmeans_init, sparse_lloyd
+from .operators.doc_cluster import doc_partitioned, scalable_kmeans_init, sparse_lloyd
 from .operators.term_matrix import filter_min_corpus_freq, term_totals
 from .operators.tfidf import tfidf
 from .operators.topk import top_k_global, top_k_per_group
@@ -218,8 +218,15 @@ def read_unit_tfidf(spark: SparkSession, tfidf_mtx: str) -> DataFrame:
     tfidf), each document's row L2-normalised in-plan (one window over
     doc_id). ``term`` is the term id as a string, the kernel's term key.
     A row whose norm is 0 keeps weight 0: the division only runs where the
-    norm is positive (ANSI mode raises on a zero divisor)."""
-    m = read_mtx(spark, tfidf_mtx, col_order=("doc_id", "term_id"), header=False)
+    norm is positive (ANSI mode raises on a zero divisor).
+
+    The rows come ``doc_partitioned``: that repartition is the window's
+    one shuffle, and tasks 2.2/2.3 and the artifact writer, which cache
+    the rows for their passes, keep its ``defaultParallelism`` partitions
+    (left to the window, a cache keeps ``spark.sql.shuffle.partitions``)."""
+    m = doc_partitioned(
+        read_mtx(spark, tfidf_mtx, col_order=("doc_id", "term_id"), header=False)
+    )
     norm = F.sqrt(F.sum(F.col("value") * F.col("value")).over(Window.partitionBy("doc_id")))
     return m.select(
         "doc_id",

@@ -21,6 +21,7 @@ from ..operators.cluster_eval import (
 from ..operators.doc_cluster import (
     assign_from_dists,
     cluster_top_terms,
+    doc_partitioned,
     seeded_sparse_centroids,
     sparse_assign,
     sparse_dists,
@@ -82,19 +83,12 @@ def _tfidf_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, mirrors the reference's totalDocs side-channel) the count
     # matrix inside tfidf is single-consumer and needs no checkpoint of
     # its own; only the tf-idf output is pinned here.
-    # Explicit partition count BEFORE the checkpoint: AQE coalesces the
-    # small tf-idf shuffle output to ONE partition, and the checkpoint
-    # then pins that layout — every downstream map-side pass (each Lloyd
-    # iteration's broadcast join and partial per-doc aggregate) would run
-    # on one core. An explicit partition count is exempt from AQE
-    # coalescing; the extra nnz-row exchange is paid once.
+    # doc_partitioned BEFORE the checkpoint: left to AQE, the small tf-idf
+    # shuffle output coalesces to ONE partition and the checkpoint pins it.
     docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    return (
+    return doc_partitioned(
         tfidf(term_doc_counts(docs), n_docs=_n_docs(spark, sf_dir))
-        .repartition(par, F.col("doc_id"))
-        .localCheckpoint(eager=False)
-    )
+    ).localCheckpoint(eager=False)
 
 
 @register(

@@ -53,7 +53,7 @@ SCHEMAS: dict[str, T.StructType] = {
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]),
     "lineitem": T.StructType([
@@ -67,7 +67,7 @@ SCHEMAS: dict[str, T.StructType] = {
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]),
     "events": T.StructType([
         T.StructField("event_id", T.LongType()),
@@ -154,7 +154,13 @@ def load_table(
     ns -> us) or TIMESTAMP(MICROS) without timezone (Spark reads
     TIMESTAMP_NTZ — cast to the session-tz type; session tz is pinned UTC
     so the cast is value-preserving). Dispatch on the dtype actually read
-    so either layout lands on the declared TimestampType schema."""
+    so either layout lands on the declared TimestampType schema.
+
+    Every other table is read with its declared ``SCHEMAS`` entry, so the
+    scan plans without the Spark job that infers a schema from the
+    parquet footers. ``o_orderdate`` and ``l_shipdate`` are declared as
+    TIMESTAMP_NTZ, the type the fixtures' TIMESTAMP(MICROS) columns
+    without a time zone infer to."""
     # force_fan_out: per-call opt-in for tables outside _FAN_OUT_TABLES —
     # used by CPU-amplifying one-pass vector queries (distance math per
     # row) whose work would otherwise serialize into one single-row-group
@@ -172,7 +178,7 @@ def load_table(
         if isinstance(ts_type, T.LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
     return _fan_out(spark, df, f"{sf_dir}/{name}.parquet") if fan_out else df
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 from collections import Counter
 
 import duckdb
@@ -94,6 +95,30 @@ def rows_to_multiset(rows, colnames):
     for r in rows:
         out.append(tuple(_norm_cell(r[i]) for i in order))
     return sorted(out)
+
+
+def run_counted(spark, run):
+    """(``run()``'s result, the ids of the Spark jobs it ran, the task
+    count of each stage it ran): the jobs are read under a job group of
+    their own once the listener bus has delivered every event. A stage
+    skipped because its shuffle output already exists ran no tasks and is
+    left out."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    infos = [
+        tracker.getStageInfo(s)
+        for s in sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds})
+    ]
+    return out, jobs, [i.numTasks for i in infos if i is not None and i.numCompletedTasks > 0]
 
 
 def assert_matches_oracle(spark_df, duck_con, sql, check_values=True):

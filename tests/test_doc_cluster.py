@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -16,25 +14,17 @@ from document_clustering_with_hadoop_mapreduce_spark.operators.term_matrix impor
 from document_clustering_with_hadoop_mapreduce_spark.operators.tfidf import tfidf
 from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
 
+from conftest import run_counted
+
 
 def _matrix(spark, sf_dir):
     return tfidf(term_doc_counts(load_table(spark, sf_dir, "documents")))
 
 
 def _collect_counting_jobs(df) -> tuple[int, list]:
-    """(Spark jobs ``df.collect()`` runs, its rows): the jobs are counted
-    under a job group of their own once the listener bus has delivered
-    every job event."""
-    sc = df.sparkSession.sparkContext
-    group = f"collect-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        rows = df.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+    """(Spark jobs ``df.collect()`` runs, its rows)."""
+    rows, jobs, _ = run_counted(df.sparkSession, df.collect)
+    return len(jobs), rows
 
 
 def test_seed_docs_assigned_to_own_cluster(spark, sf_dir):

@@ -10,6 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_clustering_with_hadoop_mapreduce_spark.operators.funnel import funnel_report
+from document_clustering_with_hadoop_mapreduce_spark.plans.registry import all_queries
+
+from conftest import assert_matches_oracle, run_counted
 
 
 def test_funnel_closed_form(spark):
@@ -124,3 +127,17 @@ def test_empty_input_reports_zeros_not_nulls(spark):
     assert rows["input"]["n_in"] == 0
     for st in ("a", "b"):
         assert (rows[st]["n_in"], rows[st]["n_kept"], rows[st]["n_dropped"]) == (0, 0, 0)
+
+
+def test_curation_stages_fit_the_cores(spark, sf_dir, duck):
+    """No stage of a ``corpus_curation`` run, plan construction included,
+    has more tasks than the session has cores, and the result still
+    matches its oracle. A frame cached as a shuffle leaves it keeps all
+    ``spark.sql.shuffle.partitions`` (AQE may not coalesce a cached
+    plan's output), and every pass over it runs that many near-empty
+    tasks; the duplicate flood reads its edge list every round."""
+    q = all_queries()["corpus_curation"]
+    _, _, tasks = run_counted(
+        spark, lambda: assert_matches_oracle(q.spark(spark, sf_dir), duck, q.oracle)
+    )
+    assert tasks and max(tasks) <= spark.sparkContext.defaultParallelism, sorted(tasks)[-8:]

@@ -24,6 +24,8 @@ from document_clustering_with_hadoop_mapreduce_spark.operators.tfidf import tfid
 from document_clustering_with_hadoop_mapreduce_spark.sources.mtx import write_mtx_single
 from document_clustering_with_hadoop_mapreduce_spark.sources.tables import load_table
 
+from conftest import run_counted
+
 REF = "/root/reference/sources"
 
 
@@ -143,13 +145,20 @@ def test_doc_kmeans_on_unit_rows(spark, sf_tfidf_mtx, task):
 
 def test_task_2_3_starts_from_kmeans_parallel_seeds(spark, sf_tfidf_mtx):
     """Task 2.3 is the sparse Lloyd loop started from the k-means|| pick
-    on the same unit rows — not from the k lowest doc_ids task 2.2 uses."""
+    on the same unit rows — not from the k lowest doc_ids task 2.2 uses —
+    and no stage of it has more tasks than the session has cores."""
     m = P.read_unit_tfidf(spark, sf_tfidf_mtx)
     init, weights = scalable_kmeans_init(m, 5)
     lowest = [r["doc_id"] for r in m.select("doc_id").distinct().orderBy("doc_id").limit(5).collect()]
     assert list(weights) != lowest
     want = _result(sparse_lloyd(m, 5, 3, init=init))
-    assert _result(P.task_2_3_doc_kmeans_scalable(spark, sf_tfidf_mtx, k=5, max_iter=3)) == want
+    got, _, tasks = run_counted(
+        spark, lambda: _result(P.task_2_3_doc_kmeans_scalable(spark, sf_tfidf_mtx, k=5, max_iter=3))
+    )
+    assert got == want
+    # the init and the loop cache the unit rows: in the window's layout
+    # every pass would run spark.sql.shuffle.partitions tasks
+    assert tasks and max(tasks) <= spark.sparkContext.defaultParallelism, sorted(tasks)[-8:]
 
 
 def test_doc_kmeans_zero_norm_document(spark, tmp_path):
